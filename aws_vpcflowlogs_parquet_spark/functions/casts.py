@@ -92,3 +92,9 @@ def zero_default_cast(col: Column | str, dtype: str = "int") -> Column:
     """Numeric cast with the reference's silent-zero default (flowlog.go:59-90)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.coalesce(c.try_cast(dtype), F.lit(0).cast(dtype))
+
+
+def zero_default_cast_sql(expr: str, dtype: str = "int") -> str:
+    """SQL-text twin of :func:`zero_default_cast` (identical expression),
+    for projections built as one ``selectExpr`` list."""
+    return f"coalesce(try_cast({expr} AS {dtype}), CAST(0 AS {dtype}))"

@@ -2,8 +2,9 @@
 
 Reference flow: env config + event → ``createArgs`` (main.go:137-150) →
 ``handler`` (main.go:152-196): per-target convert, union the partition-key
-set, then one catalog DDL per distinct key. This module binds the same
-surface onto the Spark pieces:
+set, then register it in the catalog (the reference: one DDL per key;
+here: one statement per call). This module binds the same surface onto
+the Spark pieces:
 
     targets_from_event (sources/events.py)      ← recordToTarget
     convert_flowlogs   (operators/convert.py)   ← convert()
@@ -69,7 +70,9 @@ def run_event(
 
     Returns the distinct partition keys written — ``(dt, account)``, plus a
     trailing ``src`` element with ``config.src_partition``. Events with no
-    interpretable records are a no-op, not an error (main.go:119-123).
+    interpretable records are a no-op, not an error (main.go:119-123), and
+    so are objects with no data rows (header only): nothing is written
+    and nothing is registered.
 
     Strict mode is single-pass (convert_flowlogs docstring): a parse error
     surfaces AFTER the write, so the failing batch's valid rows are already
@@ -100,7 +103,7 @@ def run_event(
                 src_partitioned=config.src_partition,
             )
         raise
-    if config.table:
+    if config.table and keys:
         register_flowlog_table(
             spark,
             config.table,

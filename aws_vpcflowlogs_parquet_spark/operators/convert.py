@@ -8,7 +8,7 @@ upload → register each distinct partition in the catalog via
 
 Spark-first re-expression, one declarative plan:
 
-    read.text → parse (codegen'd expressions) → withColumn dt/account
+    read.text → parse (codegen'd expressions) → project dt/account
     → repartition('dt','account') → write.partitionBy('dt','account').parquet
 
 Design decisions (SURVEY §4):
@@ -18,11 +18,15 @@ Design decisions (SURVEY §4):
   explicit per-partition DDL (main.go:177) *because* its layout is not
   discoverable; Hive layout makes partition registration a metadata listing
   (``MSCK``-able) and enables Spark partition pruning directly.
-- **repartition before write**: the reference writes one file per
-  (source file × partition key) (convert.go:86) — a small-file generator at
-  100 TB. Shuffling on the partition key first bounds output files to one
-  per (partition, shuffle-task) and keeps each writer's 128 MB row-group
-  buffer count low (the reference's real memory hazard, parquet.go:34).
+- **repartition before write**, for layouts whose key does not include
+  ``src``: the reference writes one file per (source file × partition key)
+  (convert.go:86) — a small-file generator at 100 TB. Shuffling on the
+  partition key first bounds output files to one per (partition,
+  shuffle-task) and keeps each writer's 128 MB row-group buffer count low
+  (the reference's real memory hazard, parquet.go:34). With ``src`` in the
+  key the shuffle buys nothing: ``src`` hashes the input file and a gzip
+  object is not splittable, so each key's rows already sit in one read
+  task and the writer's local sort writes exactly one file per key.
 - **Idempotence**: dynamic partition overwrite replaces exactly the
   partitions present in this batch — the scalable analogue of the
   reference's deterministic output key per source file (convert.go:86).
@@ -39,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import PARTITION_COLUMNS
+from ..schema import FLOW_COLUMNS, PARTITION_COLUMNS
 from ..sources.flowlog import (
     FlowLogParseError,
     parse_flowlog_lines_observed,
@@ -51,12 +55,72 @@ from ..sources.flowlog import (
 # source-derived output object key (convert.go:86)
 SRC_COLUMN = "src"
 
+# partition keys as SQL text: the UTC day of the event time and the
+# account (convert.go:13-27), plus the source-file hash
+_PARTITION_SQL = {
+    "dt": "date_format(start_time, 'yyyy-MM-dd')",
+    "account": "accountid",
+    SRC_COLUMN: "substring(sha2(input_file_name(), 256), 1, 12)",
+}
 
-def with_partition_columns(df: DataFrame) -> DataFrame:
-    """Derive (dt, account) from event time + accountid (convert.go:13-27)."""
-    return df.withColumn(
-        "dt", F.date_format(F.col("start_time"), "yyyy-MM-dd")
-    ).withColumn("account", F.col("accountid"))
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+_AQE_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+_AQE_PROPAGATE_EMPTY = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+
+
+def partition_columns(src_partition: bool = False) -> list[str]:
+    """The table's partition key: (dt, account), plus src with ``src_partition``."""
+    return PARTITION_COLUMNS + [SRC_COLUMN] if src_partition else list(PARTITION_COLUMNS)
+
+
+def with_partition_columns(df: DataFrame, src_partition: bool = False) -> DataFrame:
+    """Parsed flow logs → table rows: the 14 data columns, then (dt,
+    account[, src]) derived from event time + accountid (convert.go:13-27)
+    in place of ``start_time`` — one projection."""
+    return df.selectExpr(
+        *FLOW_COLUMNS,
+        *(f"{_PARTITION_SQL[c]} AS {c}" for c in partition_columns(src_partition)),
+    )
+
+
+def observe_partition_keys(
+    df: DataFrame, part_cols: list[str]
+) -> tuple[DataFrame, Observation]:
+    """Attach the distinct partition-key set (reference pkeySet,
+    main.go:153,169-172) as an observation: bounded metadata (days ×
+    accounts[× src files]) that rides the write job, no second scan."""
+    obs = Observation()
+    return df.observe(obs, F.expr(f"collect_set(struct({', '.join(part_cols)})) AS pkeys")), obs
+
+
+def observed_partition_keys(obs: Observation, part_cols: list[str]) -> list[tuple[str, ...]]:
+    """The observed key set as sorted tuples, in ``part_cols`` order."""
+    return sorted(tuple(r[c] for c in part_cols) for r in obs.get["pkeys"])
+
+
+def write_partitioned(df: DataFrame, dst_path: str, part_cols: list[str], mode: str) -> None:
+    """Partitioned snappy Parquet write; session confs restored afterwards.
+
+    Dynamic partition overwrite replaces exactly the partitions present.
+    AQE's empty-relation propagation is off: when the write's shuffle stage
+    comes out empty (a header-only object, or every line malformed), that
+    rule swaps the stage for an empty relation and drops the CollectMetrics
+    nodes inside it, so the observations (malformed-line count, partition
+    keys) would never report.
+    """
+    conf = df.sparkSession.conf
+    prev_mode = conf.get(_OVERWRITE_MODE, "static")
+    prev_rules = conf.get(_AQE_EXCLUDED_RULES, "")
+    conf.set(_OVERWRITE_MODE, "dynamic")
+    conf.set(_AQE_EXCLUDED_RULES, ",".join(filter(None, (prev_rules, _AQE_PROPAGATE_EMPTY))))
+    try:
+        df.write.mode(mode).partitionBy(*part_cols).parquet(dst_path, compression="snappy")
+    finally:
+        conf.set(_OVERWRITE_MODE, prev_mode)
+        if prev_rules:
+            conf.set(_AQE_EXCLUDED_RULES, prev_rules)
+        else:
+            conf.unset(_AQE_EXCLUDED_RULES)
 
 
 def convert_flowlogs(
@@ -127,38 +191,20 @@ def convert_flowlogs(
             ],
         )
     else:
-        lines = spark.read.text(src_paths)
-        parsed, parse_obs = parse_flowlog_lines_observed(lines)
-    partitioned = with_partition_columns(parsed).drop("start_time")
-
-    part_cols = list(PARTITION_COLUMNS)
-    if src_partition:
-        partitioned = partitioned.withColumn(
-            SRC_COLUMN, F.substring(F.sha2(F.input_file_name(), 256), 1, 12)
-        )
-        part_cols.append(SRC_COLUMN)
-
-    # distinct partition-key set (reference pkeySet, main.go:153,169-172)
-    # collected as an observation: bounded metadata (days × accounts[× src
-    # files]), no second scan of the source. The observed struct carries
-    # the FULL key — with src_partition the table is 3-level partitioned
-    # and ALTER TABLE rejects partial (dt, account) specs, so registration
-    # needs (dt, account, src) tuples.
-    key_obs = Observation()
-    partitioned = partitioned.observe(
-        key_obs, F.collect_set(F.struct(*part_cols)).alias("pkeys")
+        parsed, parse_obs = parse_flowlog_lines_observed(spark.read.text(src_paths))
+    part_cols = partition_columns(src_partition)
+    # the observed key carries the FULL partition spec — with src_partition
+    # the table is 3-level partitioned and ALTER TABLE rejects partial
+    # (dt, account) specs, so registration needs (dt, account, src) tuples
+    partitioned, key_obs = observe_partition_keys(
+        with_partition_columns(parsed, src_partition), part_cols
     )
+    if not src_partition:
+        partitioned = partitioned.repartition(*part_cols)
 
     mode = "overwrite" if overwrite_partitions else "append"
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        (
-            partitioned.repartition(*part_cols)
-            .write.mode(mode)
-            .partitionBy(*part_cols)
-            .parquet(dst_path, compression="snappy")
-        )
+        write_partitioned(partitioned, dst_path, part_cols, mode)
     except Exception as exc:  # noqa: BLE001 — surface the source's abort
         # datasource-strict parse failures abort the task and the commit
         # protocol discards the write (the reference's write-nothing
@@ -173,10 +219,8 @@ def convert_flowlogs(
         if ERROR_CODE in msg or "malformed flow log line" in msg:
             raise FlowLogParseError(msg) from exc
         raise
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
-    keys = sorted(tuple(r[c] for c in part_cols) for r in key_obs.get["pkeys"])
+    keys = observed_partition_keys(key_obs, part_cols)
     if strict and parse_obs is not None:
         try:
             raise_if_malformed(parse_obs)
@@ -231,9 +275,11 @@ def register_flowlog_table(
 
     Creates the external partitioned table if needed, then registers
     partitions. With Hive layout the bulk path is ``MSCK REPAIR`` /
-    ``recoverPartitions``; the explicit per-key ``ALTER TABLE … ADD IF NOT
-    EXISTS PARTITION`` path is kept for parity with the reference's DDL
-    (main.go:177) and for selective registration.
+    ``recoverPartitions``; the explicit ``ALTER TABLE … ADD IF NOT EXISTS
+    PARTITION (…) [LOCATION …] PARTITION (…) …`` path — one statement per
+    call, one clause per key — is kept for parity with the reference's DDL
+    (main.go:177) and for selective registration. Keys already registered
+    are skipped, so a repeated call is a no-op.
 
     ``partitions`` entries are ``(dt, account)`` for Hive-layout
     directories under ``location``, or ``(dt, account, path)`` to register
@@ -274,13 +320,16 @@ def register_flowlog_table(
         # already written, so recover everything via metadata listing
         spark.sql(f"MSCK REPAIR TABLE {table}")
         return
+    # one statement per call: each entry is the reference's per-key
+    # statement shape (main.go:177) as one PARTITION clause; the first
+    # entry of a repeated key wins, as IF NOT EXISTS would per statement
+    clauses: dict[tuple[str, ...], str] = {}
     for entry in partitions:
-        # one DDL per distinct key, exactly the reference's statement shape
+        key = tuple(entry[:key_len])
         spec = ", ".join(
-            f"{col}='{val}'"
-            for col, val in zip(("dt", "account", SRC_COLUMN), entry[:key_len])
+            f"{col}='{val}'" for col, val in zip(("dt", "account", SRC_COLUMN), key)
         )
         loc = f" LOCATION '{entry[key_len]}'" if len(entry) > key_len else ""
-        spark.sql(
-            f"ALTER TABLE {table} ADD IF NOT EXISTS PARTITION ({spec}){loc}"
-        )
+        clauses.setdefault(key, f"PARTITION ({spec}){loc}")
+    if clauses:
+        spark.sql(f"ALTER TABLE {table} ADD IF NOT EXISTS {' '.join(clauses.values())}")

@@ -24,8 +24,47 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.casts import zero_default_cast
+from ..functions.casts import zero_default_cast_sql
 from ..schema import FLOW_COLUMNS, NUM_RAW_TOKENS, SUPPORTED_VERSION
+
+# The parse is built as SQL-text projection lists, fixed at import: a
+# ``selectExpr`` costs about one py4j round trip per list entry, where
+# the same projection assembled from ``F.*`` calls costs one per call —
+# over 1,200 for the 14 typed columns and the flags, against about 50 for
+# the lists below.
+
+# header: first token is the literal 'version' (flowlog.go:42-44). The
+# reference's arity check runs BEFORE its header skip (flowlog.go:36-44),
+# so a header row with arity != 14 is malformed, not a skippable header —
+# the arity conjunct keeps this path in lockstep with the flowlog
+# DataSource (ADVICE r8).
+_IS_HEADER_SQL = f"size(_toks) = {NUM_RAW_TOKENS} AND _toks[0] = 'version'"
+_FLAG_EXPRS = (
+    "size(_toks) AS _n_toks",
+    f"{_IS_HEADER_SQL} AS _is_header",
+    f"size(_toks) = {NUM_RAW_TOKENS} AND NOT ({_IS_HEADER_SQL}) "
+    f"AND _toks[0] = '{SUPPORTED_VERSION}' AS _is_valid",
+)
+# malformed = neither a valid record nor a skippable header
+_IS_BAD_SQL = "NOT _is_valid AND NOT _is_header"
+
+
+def _typed_expr(idx: int, dtype) -> str:
+    tok = f"_toks[{idx}]"
+    if dtype.typeName() == "string":
+        return tok
+    return zero_default_cast_sql(tok, dtype.simpleString())
+
+
+# 14 tokens → typed columns, then the UTC event time (flowlog.go:86,92-97)
+# computed from the same start_ts expression
+_TYPED_EXPRS = tuple(
+    f"{_typed_expr(idx, dtype)} AS {name}"
+    for name, (idx, dtype) in FLOW_COLUMNS.items()
+) + (
+    "to_timestamp(from_unixtime("
+    f"{_typed_expr(*FLOW_COLUMNS['start_ts'])})) AS start_time",
+)
 
 
 class FlowLogParseError(ValueError):
@@ -33,48 +72,20 @@ class FlowLogParseError(ValueError):
 
 
 def tokenize(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """Split on a single space (flowlog.go:36) and attach validity flags."""
-    toks = F.split(F.col(value_col), " ")
-    return (
-        df.withColumn("_toks", toks)
-        .withColumn("_n_toks", F.size("_toks"))
-        # header: first token is the literal 'version' (flowlog.go:42-44).
-        # The reference's arity check runs BEFORE its header skip
-        # (flowlog.go:36-44), so a header row with arity != 14 is
-        # malformed, not a skippable header — the arity conjunct keeps
-        # this path in lockstep with the flowlog DataSource (ADVICE r8).
-        .withColumn(
-            "_is_header",
-            (F.col("_n_toks") == NUM_RAW_TOKENS)
-            & (F.col("_toks")[0] == F.lit("version")),
-        )
-        .withColumn(
-            "_is_valid",
-            (F.col("_n_toks") == NUM_RAW_TOKENS)
-            & ~F.col("_is_header")
-            & (F.col("_toks")[0] == F.lit(str(SUPPORTED_VERSION))),
-        )
-    )
+    """Split on a single space (flowlog.go:36) and attach validity flags
+    ``_n_toks``, ``_is_header`` and ``_is_valid``."""
+    toks = df.selectExpr("*", f"split(`{value_col}`, ' ') AS _toks")
+    return toks.selectExpr("*", *_FLAG_EXPRS)
 
 
 def typed_projection(df: DataFrame) -> DataFrame:
-    """14 tokens → typed columns (flowlog.go:50-90 semantics).
+    """14 tokens → typed columns (flowlog.go:50-90 semantics) + ``start_time``.
 
     Numerics use the zero-default cast (``-`` → 0, SURVEY §1.2); strings
     pass through. Adds the derived event-time column (flowlog.go:86,92-97):
     ``start_time = to_timestamp(start_ts)`` in UTC.
     """
-    cols = []
-    for name, (idx, dtype) in FLOW_COLUMNS.items():
-        tok = F.col("_toks")[idx]
-        if dtype.typeName() == "string":
-            cols.append(tok.alias(name))
-        else:
-            cols.append(zero_default_cast(tok, dtype.simpleString()).alias(name))
-    out = df.select(*cols, "_is_valid")
-    return out.withColumn(
-        "start_time", F.to_timestamp(F.from_unixtime(F.col("start_ts")))
-    )
+    return df.selectExpr(*_TYPED_EXPRS)
 
 
 def parse_flowlog_lines(
@@ -89,12 +100,10 @@ def parse_flowlog_lines(
     """
     tok = tokenize(lines, value_col)
     if strict:
-        bad = tok.filter(~F.col("_is_valid") & ~F.col("_is_header")).limit(1)
-        row = bad.select(value_col).collect()
+        row = tok.filter(_IS_BAD_SQL).limit(1).select(value_col).collect()
         if row:
             raise FlowLogParseError(f"malformed flow log line: {row[0][0]!r}")
-    parsed = typed_projection(tok.filter(F.col("_is_valid")))
-    return parsed.drop("_is_valid")
+    return typed_projection(tok.filter("_is_valid"))
 
 
 def parse_flowlog_lines_observed(
@@ -113,14 +122,12 @@ def parse_flowlog_lines_observed(
     convert.go:48-50).
     """
     obs = Observation()
-    bad = ~F.col("_is_valid") & ~F.col("_is_header")
     tok = tokenize(lines, value_col).observe(
         obs,
-        F.sum(bad.cast("long")).alias("n_bad"),
-        F.max(F.when(bad, F.col(value_col))).alias("sample_bad"),
+        F.expr(f"sum(CAST({_IS_BAD_SQL} AS BIGINT)) AS n_bad"),
+        F.expr(f"max(CASE WHEN {_IS_BAD_SQL} THEN `{value_col}` END) AS sample_bad"),
     )
-    parsed = typed_projection(tok.filter(F.col("_is_valid"))).drop("_is_valid")
-    return parsed, obs
+    return typed_projection(tok.filter("_is_valid")), obs
 
 
 def raise_if_malformed(obs: Observation) -> None:

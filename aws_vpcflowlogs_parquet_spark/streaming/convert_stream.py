@@ -16,11 +16,16 @@ is built around.
 
 from __future__ import annotations
 
-from pyspark.sql import Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.convert import with_partition_columns
+from ..operators.convert import (
+    observe_partition_keys,
+    observed_partition_keys,
+    register_flowlog_table,
+    with_partition_columns,
+    write_partitioned,
+)
 from ..schema import PARTITION_COLUMNS
 from ..sources.flowlog import parse_flowlog_lines
 
@@ -38,41 +43,29 @@ def start_flowlog_stream(
     ``max_files_per_trigger=5`` mirrors the reference's reserved
     concurrency of 5 Lambdas (template.yml:61-62). Partition registration
     (the reference's per-key ALTER TABLE, main.go:175-196) happens inside
-    ``foreachBatch`` against the session catalog when ``table`` is given.
+    ``foreachBatch`` through the batch converter's
+    :func:`register_flowlog_table` — one statement per micro-batch, the
+    table created at ``dst_path`` if missing — when ``table`` is given.
     """
     lines = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(src_dir)
     )
-    parsed = with_partition_columns(parse_flowlog_lines(lines)).drop("start_time")
+    parsed = with_partition_columns(parse_flowlog_lines(lines))
 
     def write_batch(batch_df, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
         # partition keys ride the write as a CollectMetrics observation —
         # the second micro-batch scan the round-1 distinct().collect() paid
         # is gone (same single-pass contract as the batch converter)
-        obs = Observation()
-        batch_df = batch_df.observe(
-            obs, F.collect_set(F.struct(*PARTITION_COLUMNS)).alias("pkeys")
+        batch_df, obs = observe_partition_keys(batch_df, PARTITION_COLUMNS)
+        write_partitioned(
+            batch_df.repartition(*PARTITION_COLUMNS), dst_path, PARTITION_COLUMNS, "append"
         )
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.repartition(*PARTITION_COLUMNS)
-                .write.mode("append")
-                .partitionBy(*PARTITION_COLUMNS)
-                .parquet(dst_path, compression="snappy")
-            )
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         if table is not None:
-            for row in sorted((r["dt"], r["account"]) for r in obs.get["pkeys"]):
-                sess.sql(
-                    f"ALTER TABLE {table} ADD IF NOT EXISTS "
-                    f"PARTITION (dt='{row[0]}', account='{row[1]}')"
-                )
+            keys = observed_partition_keys(obs, PARTITION_COLUMNS)
+            if keys:
+                register_flowlog_table(batch_df.sparkSession, table, dst_path, partitions=keys)
 
     return (
         parsed.writeStream.foreachBatch(write_batch)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import gzip
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_vpcflowlogs_parquet_spark.operators.convert import (
@@ -14,6 +15,7 @@ from aws_vpcflowlogs_parquet_spark.operators.convert import (
     register_flowlog_table,
 )
 from aws_vpcflowlogs_parquet_spark.sources.events import targets_from_event
+from aws_vpcflowlogs_parquet_spark.sources.flowlog import FlowLogParseError
 
 HEADER = (
     "version account-id interface-id srcaddr dstaddr srcport dstport "
@@ -471,3 +473,180 @@ def test_run_event_end_to_end(spark, tmp_path):
         assert run_event(spark, {"Records": [{"nope": 1}]}, cfg) == []
     finally:
         spark.sql("DROP TABLE IF EXISTS flowlogs_h_test")
+
+
+def _parquet_files(root):
+    return sorted(p.relative_to(root) for p in root.rglob("*.parquet")) if root.exists() else []
+
+
+@pytest.mark.parametrize("src_partition", [False, True])
+def test_header_only_object_writes_nothing(spark, tmp_path, src_partition):
+    # an object with no data rows used to crash reading the key-set
+    # observation (AQE dropped the empty shuffle stage and the
+    # CollectMetrics node with it); it must be a clean no-op that leaves
+    # earlier output intact
+    out = tmp_path / "out"
+    full = tmp_path / "full.log"
+    full.write_text("\n".join([HEADER, _mk_line("111111111111", DAY1)]))
+    convert_flowlogs(spark, str(full), str(out), src_partition=src_partition)
+    before = _parquet_files(out)
+    empty = tmp_path / "empty.log.gz"
+    with gzip.open(empty, "wt") as f:
+        f.write(HEADER + "\n")
+    assert convert_flowlogs(spark, str(empty), str(out), src_partition=src_partition) == []
+    assert _parquet_files(out) == before
+    assert spark.read.parquet(str(out)).count() == 1
+
+
+@pytest.mark.parametrize("src_partition", [False, True])
+def test_all_malformed_strict_raises_parse_error(spark, tmp_path, src_partition):
+    src = tmp_path / "bad.log"
+    src.write_text("\n".join([HEADER, "2 too few tokens", "3 also bad"]))
+    out = tmp_path / "out"
+    with pytest.raises(FlowLogParseError, match="2 malformed") as err:
+        convert_flowlogs(spark, str(src), str(out), strict=True, src_partition=src_partition)
+    assert err.value.partition_keys == []
+    assert _parquet_files(out) == []
+
+
+def test_run_event_header_only_registers_nothing(spark, tmp_path):
+    from aws_vpcflowlogs_parquet_spark.handler import HandlerConfig, run_event
+
+    bucket = tmp_path / "bucket"
+    (bucket / "logs").mkdir(parents=True)
+    (bucket / "logs" / "x.log").write_text(HEADER + "\n")
+    event = {
+        "Records": [
+            {"s3": {"bucket": {"name": str(bucket)}, "object": {"key": "logs/x.log"}}}
+        ]
+    }
+    cfg = HandlerConfig(
+        dst_path=str(tmp_path / "warehouse"), table="flowlogs_empty_test", src_partition=True
+    )
+    try:
+        assert run_event(spark, event, cfg) == []
+        assert _parquet_files(tmp_path / "warehouse") == []
+        assert not spark.catalog.tableExists("flowlogs_empty_test")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS flowlogs_empty_test")
+
+
+class _StatementLog:
+    """Session stand-in that records each SQL statement it forwards."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.statements = []
+
+    def sql(self, query):
+        self.statements.append(query)
+        return self.spark.sql(query)
+
+
+def test_register_batches_new_existing_and_located_keys(spark, tmp_path):
+    # one call registers already-registered, new Hive-layout and explicit-
+    # LOCATION keys in a single ALTER TABLE; an identical call is a no-op
+    src = tmp_path / "in.log"
+    src.write_text(
+        "\n".join([HEADER, _mk_line("111111111111", DAY1), _mk_line("222222222222", DAY2)])
+    )
+    out = tmp_path / "tbl"
+    keys = convert_flowlogs(spark, str(src), str(out))
+    staged = tmp_path / "staged"
+    other = tmp_path / "other.log"
+    other.write_text("\n".join([HEADER, _mk_line("333333333333", DAY1, 7777)]))
+    convert_flowlogs(spark, str(other), str(staged))
+    leaf = str(staged / "dt=2018-11-04" / "account=333333333333")
+    table = "flowlogs_batch_test"
+    try:
+        register_flowlog_table(spark, table, str(out), partitions=keys[:1])
+        entries = keys + [("2018-11-04", "333333333333", leaf)]
+        log = _StatementLog(spark)
+        register_flowlog_table(log, table, str(out), partitions=entries)
+        alters = [q for q in log.statements if q.startswith("ALTER TABLE")]
+        assert len(alters) == 1 and alters[0].count("PARTITION (") == 3
+        parts = sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect())
+        assert parts == [
+            "dt=2018-11-04/account=111111111111",
+            "dt=2018-11-04/account=333333333333",
+            "dt=2018-11-05/account=222222222222",
+        ]
+        got = spark.sql(f"SELECT account, srcport FROM {table} WHERE dt='2018-11-04'").collect()
+        assert sorted((r["account"], r["srcport"]) for r in got) == [
+            ("111111111111", 1234),
+            ("333333333333", 7777),
+        ]
+
+        def _location(spec):
+            rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table} PARTITION ({spec})").collect()
+            return next(r["data_type"] for r in rows if r["col_name"] == "Location")
+
+        located = "dt='2018-11-04', account='333333333333'"
+        assert _location(located).endswith(leaf)
+        register_flowlog_table(spark, table, str(out), partitions=entries)
+        assert sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect()) == parts
+        assert _location(located).endswith(leaf)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_src_partition_writes_one_file_per_key(spark, tmp_path):
+    # without the pre-write shuffle, each gzip object is one read task and
+    # src hashes the object, so each dt=/account=/src= directory holds
+    # exactly one file
+    srcs = []
+    for i, sport in enumerate([1000, 2000, 3000]):
+        p = tmp_path / f"obj{i}.log.gz"
+        with gzip.open(p, "wt") as f:
+            f.write(
+                "\n".join(
+                    [HEADER]
+                    + [
+                        _mk_line(acct, day, sport + j)
+                        for j in range(20)
+                        for acct in ("111111111111", "222222222222")
+                        for day in (DAY1, DAY2)
+                    ]
+                )
+            )
+        srcs.append(str(p))
+    out = tmp_path / "out"
+    keys = convert_flowlogs(spark, srcs, str(out), src_partition=True)
+    assert len(keys) == 3 * 2 * 2
+    leaves = [out / f"dt={dt}" / f"account={acct}" / f"src={src}" for dt, acct, src in keys]
+    assert {p.parent for p in out.rglob("*.parquet")} == set(leaves)
+    for leaf in leaves:
+        assert len(list(leaf.glob("*.parquet"))) == 1, leaf
+    assert spark.read.parquet(str(out)).count() == 3 * 20 * 2 * 2
+
+
+def test_ingest_plan_build_py4j_bound(spark, tmp_path):
+    # building the parse + partition-key plan is a handful of projection
+    # lists, not one JVM round trip per F.* call (about 1,400 before);
+    # counted the way the benchmark's layer counter does, at the
+    # gateway client's send_command
+    from aws_vpcflowlogs_parquet_spark.operators.convert import (
+        observe_partition_keys,
+        partition_columns,
+        with_partition_columns,
+    )
+    from aws_vpcflowlogs_parquet_spark.sources.flowlog import parse_flowlog_lines_observed
+
+    src = tmp_path / "in.log"
+    src.write_text("\n".join([HEADER, _mk_line("111111111111", DAY1)]))
+    lines = spark.read.text(str(src))
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    calls = []
+
+    def send_command(*args, **kwargs):
+        calls.append(1)
+        return orig(*args, **kwargs)
+
+    client.send_command = send_command
+    try:
+        parsed, _ = parse_flowlog_lines_observed(lines)
+        observe_partition_keys(with_partition_columns(parsed, True), partition_columns(True))
+    finally:
+        del client.send_command
+    assert 0 < len(calls) <= 300

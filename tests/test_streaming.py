@@ -81,6 +81,44 @@ def test_stream_restart_is_exactly_once(spark, tmp_path):
         q2.stop()
 
 
+def test_stream_registers_partitions_in_table(spark, tmp_path):
+    # table= registers each micro-batch's keys through the batch
+    # converter's register_flowlog_table (creating the table at dst on
+    # first use); a header-only file is a batch with nothing to register
+    src = tmp_path / "drop"
+    src.mkdir()
+    dst = tmp_path / "out"
+    ckpt = tmp_path / "ckpt"
+    (src / "a.log").write_text(
+        "\n".join([HEADER, _mk_line("111111111111", 1541375637, 1)])
+    )
+    (src / "b.log").write_text(HEADER + "\n")
+    table = "flowlogs_stream_test"
+    q = start_flowlog_stream(
+        spark, str(src), str(dst), str(ckpt), table=table, max_files_per_trigger=1
+    )
+    try:
+        q.processAllAvailable()
+        (src / "c.log").write_text(
+            "\n".join(
+                [HEADER, _mk_line("222222222222", 1541462037, 2), _mk_line("111111111111", 1541375637, 3)]
+            )
+        )
+        q.processAllAvailable()
+        parts = sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect())
+        assert parts == [
+            "dt=2018-11-04/account=111111111111",
+            "dt=2018-11-05/account=222222222222",
+        ]
+        got = spark.sql(
+            f"SELECT dt, count(*) AS n FROM {table} GROUP BY dt ORDER BY dt"
+        ).collect()
+        assert [(r["dt"], r["n"]) for r in got] == [("2018-11-04", 2), ("2018-11-05", 1)]
+    finally:
+        q.stop()
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 def _stream_events(spark, tmp_path):
     # stage the events table as a parquet streaming source
     src = tmp_path / "events_src"
