@@ -1,25 +1,13 @@
 """Continuous clamped-ledger operator — the streaming form of
-q_clamped_balance (plans/catalog.py), whose docstring names "per-key
-transformWithState in streaming" as the 100 TB continuous path.
+q_clamped_balance (plans/catalog.py).
 
-Two interchangeable implementations of the same per-key recurrence
-b_k = max(0, b_{k-1} + d_k) with clamp accounting:
-
-- ``transformwithstate``: Spark 4's StatefulProcessor API (typed state
-  variables over the RocksDB store) — the modern API this operator is
-  written for. Its Python control plane requires ``google.protobuf``,
-  which this sandbox does not ship, so the path is capability-gated
-  (:func:`transform_with_state_available`) and exercised only where the
-  dependency exists.
-- ``applyinpandas``: the long-stable applyInPandasWithState form with a
-  GroupState tuple — identical semantics, runs everywhere, and is what
-  the e2e restart test drives in this environment.
-
-Both carry ONE fixed-size (balance, n_clamps, n_seen) tuple per account
-— state bounded by key cardinality, never event volume — and both fold a
-batch with the same VECTORIZED kernel: the clamped recurrence is a
-reflected random walk, so with prefix sums S_k (seeded by the carried
-balance) the closed form is
+The per-key recurrence b_k = max(0, b_{k-1} + d_k) with clamp accounting
+runs as an applyInPandasWithState operator with a GroupState tuple. It
+carries ONE fixed-size (balance, n_clamps, n_seen) tuple per account —
+state bounded by key cardinality, never event volume — and folds a
+batch with a VECTORIZED kernel: the clamped recurrence is a reflected
+random walk, so with prefix sums S_k (seeded by the carried balance) the
+closed form is
 
     b_k      = S_k - min(0, min_{1<=j<=k} S_j)
     clamp_k  = S_k < min(0, min_{1<=j<k} S_j)
@@ -31,32 +19,17 @@ are pinned in tests/test_transform_with_state.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 BALANCE_SCHEMA = "account BIGINT, balance BIGINT, n_clamps BIGINT, n_seen BIGINT"
 _STATE_SCHEMA = "balance BIGINT, n_clamps BIGINT, n_seen BIGINT"
-
-_ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def transform_with_state_available() -> bool:
-    """transformWithStateInPandas needs protobuf for its Python<->JVM
-    state protocol; absent that, callers route to applyInPandasWithState."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def clamped_fold_vectorized(b0: int, deltas) -> tuple[int, int]:
     """(final_balance, n_clamps) of b_k = max(0, b_{k-1} + d_k) starting
     at b0 >= 0, via the reflected-walk closed form — O(n) numpy, no
-    Python loop. Also the reference kernel both streaming processors
-    inline (by-value closures, see windows.py on cloudpickle)."""
+    Python loop. Also the reference kernel the streaming operator
+    inlines (by-value closures, see windows.py on cloudpickle)."""
     import numpy as np
 
     d = np.asarray(deltas, dtype=np.int64)
@@ -72,64 +45,15 @@ def clamped_fold_vectorized(b0: int, deltas) -> tuple[int, int]:
     return final, n_clamps
 
 
-def _start_tws(spark, stream, out_dir, checkpoint):
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
+def start_clamped_balance_stream(stream: DataFrame, out_dir: str, checkpoint: str):
+    """Start the continuous clamped-ledger stream over rows
+    (account bigint, ts timestamp, event_id bigint, d bigint); emits one
+    (account, balance, n_clamps, n_seen) row per key per micro-batch.
 
-    class ClampedBalanceProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "ledger", "balance BIGINT, n_clamps BIGINT, n_seen BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            import numpy as _np
-            import pandas as _pd
-
-            pdf = _pd.concat(list(rows)).sort_values(["ts", "event_id"])
-            b, clamps, seen = (
-                self._state.get() if self._state.exists() else (0, 0, 0)
-            )
-            d = pdf["d"].to_numpy(dtype=_np.int64)
-            s = _np.int64(b) + _np.cumsum(d)
-            m = _np.minimum(
-                _np.minimum.accumulate(
-                    _np.concatenate(([_np.int64(0)], s[:-1]))
-                ),
-                0,
-            )
-            clamps += int((s < m).sum())
-            b = int(s[-1] - min(0, int(s.min())))
-            seen += int(d.size)
-            self._state.update((b, clamps, seen))
-            yield _pd.DataFrame(
-                {
-                    "account": [int(key[0])],
-                    "balance": [b],
-                    "n_clamps": [clamps],
-                    "n_seen": [seen],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    # transformWithState requires the RocksDB store; scope the conf to
-    # query start (it is pinned into the checkpoint from there on)
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB)
-    try:
-        transformed = stream.groupBy("account").transformWithStateInPandas(
-            statefulProcessor=ClampedBalanceProcessor(),
-            outputStructType=BALANCE_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-        return _sink(transformed, out_dir, checkpoint)
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-
-
-def _start_apws(spark, stream, out_dir, checkpoint):
+    A restarted query resumes the ledger exactly from the checkpointed
+    state (asserted in tests); within a batch deltas apply in
+    (ts, event_id) order, and the reflected fold is prefix-decomposable
+    so ANY batch split yields the same ledger."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdf_iter, state: GroupState):
@@ -164,10 +88,6 @@ def _start_apws(spark, stream, out_dir, checkpoint):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _sink(transformed, out_dir, checkpoint)
-
-
-def _sink(transformed: DataFrame, out_dir: str, checkpoint: str):
     return (
         transformed.writeStream.foreachBatch(
             lambda batch, bid: batch.coalesce(1)
@@ -179,34 +99,3 @@ def _sink(transformed: DataFrame, out_dir: str, checkpoint: str):
         .trigger(availableNow=True)
         .start()
     )
-
-
-def start_clamped_balance_stream(
-    spark: SparkSession,
-    stream: DataFrame,
-    out_dir: str,
-    checkpoint: str,
-    implementation: str = "auto",
-):
-    """Start the continuous clamped-ledger stream over rows
-    (account bigint, ts timestamp, event_id bigint, d bigint); emits one
-    (account, balance, n_clamps, n_seen) row per key per micro-batch.
-
-    ``implementation``: 'transformwithstate', 'applyinpandas', or 'auto'
-    (native transformWithState when its protobuf dependency exists, else
-    the applyInPandasWithState twin). A restarted query resumes the
-    ledger exactly from the checkpointed state (asserted in tests);
-    within a batch deltas apply in (ts, event_id) order, and the
-    reflected fold is prefix-decomposable so ANY batch split yields the
-    same ledger."""
-    if implementation == "auto":
-        implementation = (
-            "transformwithstate"
-            if transform_with_state_available()
-            else "applyinpandas"
-        )
-    if implementation == "transformwithstate":
-        return _start_tws(spark, stream, out_dir, checkpoint)
-    if implementation == "applyinpandas":
-        return _start_apws(spark, stream, out_dir, checkpoint)
-    raise ValueError(f"unknown implementation: {implementation!r}")

@@ -1,8 +1,8 @@
 """Profile the streaming harness queries: run a stream to completion the
-same way _run_stream_to_parquet does, but keep the StreamingQuery handle
-and dump every micro-batch's progress JSON (durationMs breakdown +
-stateOperators metrics) — the guide §1 'measure first' data for the
-stateful streaming family (VERDICT r12 item 1).
+same way streaming/harness.py's run_stream_to_parquet does, but keep the
+StreamingQuery handle and dump every micro-batch's progress JSON
+(durationMs breakdown + stateOperators metrics) — the guide §1 'measure
+first' data for the stateful streaming family (VERDICT r12 item 1).
 
 Usage:
   python scripts/profile_stream.py [--sf DIR] [--partitions N] [--provider rocksdb] [--reps N] ssj
@@ -23,11 +23,11 @@ from aws_vpcflowlogs_parquet_spark.session import get_spark
 
 
 def build_ssj(spark, sf_dir):
-    from aws_vpcflowlogs_parquet_spark.plans.catalog import _staged_events_dir
     from aws_vpcflowlogs_parquet_spark.sources.tables import stream_events
+    from aws_vpcflowlogs_parquet_spark.streaming.harness import staged_events_dir
     from aws_vpcflowlogs_parquet_spark.streaming.windows import stream_stream_join
 
-    src_dir = _staged_events_dir(sf_dir)
+    src_dir = staged_events_dir(sf_dir)
     clicks = stream_events(spark, src_dir).filter(F.col("event_type") == "click")
     purchases = stream_events(spark, src_dir).filter(
         F.col("event_type") == "purchase"
@@ -54,7 +54,7 @@ def main() -> None:
         i = args.index("--reps"); reps = int(args[i + 1]); del args[i:i + 2]
 
     spark = get_spark("profile-stream")
-    from aws_vpcflowlogs_parquet_spark.plans.catalog import _stream_tmpdir
+    from aws_vpcflowlogs_parquet_spark.streaming.harness import stream_tmpdir
 
     spark.conf.set("spark.sql.shuffle.partitions", partitions)
     spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
@@ -67,8 +67,8 @@ def main() -> None:
     name = args[0] if args else "ssj"
     for rep in range(reps):
         df = BUILDERS[name](spark, sf_dir)
-        out_dir = _stream_tmpdir(f"prof_{name}_out_")
-        ckpt = _stream_tmpdir(f"prof_{name}_ckpt_")
+        out_dir = stream_tmpdir(f"prof_{name}_out_")
+        ckpt = stream_tmpdir(f"prof_{name}_ckpt_")
         t0 = time.perf_counter()
         q = (
             df.coalesce(4)

@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import math
-import os
 
 import duckdb
 import pytest
@@ -10,32 +9,6 @@ from aws_vpcflowlogs_parquet_spark.session import get_spark
 from aws_vpcflowlogs_parquet_spark.sources.tables import TABLE_NAMES
 
 SF_DIR = "/root/testdata/sf0.001"
-
-#: Exhaustive tier (r13 test-gate tiering, VERDICT r12 item 2): these
-#: files gate the plans/staging.py candidates — queries that are NOT in
-#: queries() and that no driver surface executes until a future build
-#: round promotes them. They are ~25% of the suite's wall time (537 s
-#: of 2170 measured), and the driver's verify window cannot fit the full
-#: suite (r12: tests_ok false, truncated at 78% with zero failures).
-#: Default run = every REGISTERED query path covered once; set
-#: SPARK_GRAFT_FULL_TESTS=1 to run the staged-candidate gates too (done
-#: before promoting candidates, and once per round as a committed
-#: artifact — see OPTIMIZATION_r13.md).
-_EXHAUSTIVE_FILES = {
-    "test_staging_oracle.py",
-    "test_round12_staging_witness.py",
-}
-
-
-def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
-        return
-    skip = pytest.mark.skip(
-        reason="staged-candidate exhaustive tier; set SPARK_GRAFT_FULL_TESTS=1"
-    )
-    for item in items:
-        if os.path.basename(str(item.fspath)) in _EXHAUSTIVE_FILES:
-            item.add_marker(skip)
 
 
 @pytest.fixture(scope="session")

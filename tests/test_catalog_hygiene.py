@@ -38,17 +38,6 @@ def test_survey_inventory_matches_catalog_exactly():
     assert rows == set(QUERIES), sorted(rows ^ set(QUERIES))
 
 
-def test_survey_staged_inventory_matches_staging_exactly():
-    import re
-
-    from aws_vpcflowlogs_parquet_spark.plans.staging import STAGED_QUERIES
-
-    s = open("/root/repo/SURVEY.md", encoding="utf-8").read()
-    sec25 = s.split("### 2.5", 1)[1].split("\n---", 1)[0]
-    rows = set(re.findall(r"^\| `(q_\w+)`", sec25, re.M))
-    assert rows == set(STAGED_QUERIES), sorted(rows ^ set(STAGED_QUERIES))
-
-
 def test_readme_query_count_matches_catalog():
     # README is the repo's front door; its stated catalog size drifted
     # twice (round-7 verdict: "298" vs 300 registered). Pin every

@@ -24,6 +24,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from aws_vpcflowlogs_parquet_spark.plans import catalog as C
+from aws_vpcflowlogs_parquet_spark.streaming import harness as H
 
 
 def _events_table(rows):
@@ -136,7 +137,7 @@ def test_late_filter_lags_eviction_by_one_batch(spark, tmp_path):
 
 
 def test_late_staging_layout_and_w1(tmp_path, monkeypatch):
-    """_late_staged_events_dir: three files, mtime-ordered evens ->
+    """late_staged_events_dir: three files, mtime-ordered evens ->
     pusher -> odds; W1 = max(even ts) - 30 min in integer us."""
     src = tmp_path / "sf"
     src.mkdir()
@@ -144,8 +145,8 @@ def test_late_staging_layout_and_w1(tmp_path, monkeypatch):
         [(i, i * 7, i % 3, "click") for i in range(10)]  # ids 0..9
     )
     pq.write_table(t, src / "events.parquet")
-    monkeypatch.setattr(C, "_STAGED_DIR_CACHE", {})
-    d, w1 = C._late_staged_events_dir(str(src))
+    monkeypatch.setattr(H, "_STAGED_DIR_CACHE", {})
+    d, w1 = H.late_staged_events_dir(str(src))
     names = sorted(os.listdir(d), key=lambda n: os.stat(f"{d}/{n}").st_mtime)
     assert names == [
         "events.parquet",
@@ -177,7 +178,7 @@ def test_stream_late_data_drops_exactly_the_oracle_set(spark, tmp_path):
     pq.write_table(_events_table(rows), src / "events.parquet")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # fresh staging for this tmp dir
-    C._STAGED_DIR_CACHE.pop(("late3", os.path.abspath(str(src))), None)
+    H._STAGED_DIR_CACHE.pop(("late3", os.path.abspath(str(src))), None)
     out = C.QUERIES["q_stream_late_data"](spark, str(src))
     got = {(r.window_start, r.n) for r in out.collect()}
 
@@ -219,12 +220,12 @@ def test_stream_late_dedup_collapses_time_skewed_dups(spark, tmp_path):
     src.mkdir()
     rows = [(i, i * 3, i % 2, "click") for i in range(8)]
     pq.write_table(_events_table(rows), src / "events.parquet")
-    C._STAGED_DIR_CACHE.pop(("dup5m", os.path.abspath(str(src))), None)
+    H._STAGED_DIR_CACHE.pop(("dup5m", os.path.abspath(str(src))), None)
     out = C.QUERIES["q_stream_late_dedup"](spark, str(src))
     got = sorted((r.event_id, r.user_id, r.event_type) for r in out.collect())
     assert got == [(i, i % 2, "click") for i in range(8)]
     # the staged dir really holds skewed duplicates, not copies
-    d = C._STAGED_DIR_CACHE[("dup5m", os.path.abspath(str(src)))]
+    d = H._STAGED_DIR_CACHE[("dup5m", os.path.abspath(str(src)))]
     dups = pq.read_table(f"{d}/dups_plus5m.parquet")
     orig = pq.read_table(f"{d}/events.parquet")
     assert (
@@ -246,7 +247,7 @@ def test_stream_topk_ranks_within_windows(spark, tmp_path):
         + [(30, 70, 5, "click")]
     )
     pq.write_table(_events_table(rows), src / "events.parquet")
-    C._STAGED_DIR_CACHE.pop(("plain", os.path.abspath(str(src))), None)
+    H._STAGED_DIR_CACHE.pop(("plain", os.path.abspath(str(src))), None)
     out = C.QUERIES["q_stream_topk"](spark, str(src))
     got = sorted(
         (r.window_start, r.user_id, r.n, r.rk) for r in out.collect()

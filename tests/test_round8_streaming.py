@@ -11,7 +11,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from aws_vpcflowlogs_parquet_spark.plans import catalog as C
+from aws_vpcflowlogs_parquet_spark.streaming import harness as H
 from aws_vpcflowlogs_parquet_spark.sources.tables import convert_nanos_ts
 from aws_vpcflowlogs_parquet_spark.streaming.windows import (
     stream_stream_join_full_outer,
@@ -104,7 +104,7 @@ def test_parquet_max_ts_reads_footer_stats_only(tmp_path):
         [(1, 0, 1, "click"), (2, 123, 2, "purchase"), (3, 77, 3, "click")]
     )
     pq.write_table(t, p, row_group_size=2)  # force multiple row groups
-    got = C._parquet_max_ts(p)
+    got = H.parquet_max_ts(p)
     want = datetime.datetime(1970, 1, 1) + datetime.timedelta(
         microseconds=1_700_000_000_000_000 + 123 * 60_000_000
     )
@@ -113,11 +113,11 @@ def test_parquet_max_ts_reads_footer_stats_only(tmp_path):
 
 def test_staged_dirs_cached_and_registered_for_cleanup(spark):
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    a = C._staged_events_dir(sf)
-    b = C._staged_events_dir(sf)
+    a = H.staged_events_dir(sf)
+    b = H.staged_events_dir(sf)
     assert a == b, "plain staged dir must be cached per sf_dir"
-    s1 = C._sentinel_staged_events_dir(sf)
-    s2 = C._sentinel_staged_events_dir(sf)
+    s1 = H.sentinel_staged_events_dir(sf)
+    s2 = H.sentinel_staged_events_dir(sf)
     assert s1 == s2 and s1 != a, "sentinel dir cached and SEPARATE"
     # exactly one sentinel file beside the symlink, rows filtered by key
     files = sorted(os.listdir(s1))
@@ -126,4 +126,4 @@ def test_staged_dirs_cached_and_registered_for_cleanup(spark):
     assert set(sent["user_id"].to_pylist()) == {-1}
     assert set(sent["event_type"].to_pylist()) == {"purchase", "click"}
     # both dirs are registered for process-exit removal
-    assert a in C._STREAM_TMPDIRS and s1 in C._STREAM_TMPDIRS
+    assert a in H._STREAM_TMPDIRS and s1 in H._STREAM_TMPDIRS

@@ -1,9 +1,8 @@
-"""transformWithState clamped-ledger stream (streaming/stateful.py): the
-continuous form of q_clamped_balance. Pins (a) the vectorized
-reflected-walk kernel against the naive fold, (b) end-to-end streaming
-equality with the batch recurrence, (c) exact state carry across a
-query RESTART (RocksDB + checkpoint), (d) prefix-decomposability: any
-batch split yields the same ledger."""
+"""Clamped-ledger stream (streaming/stateful.py): the continuous form of
+q_clamped_balance. Pins (a) the vectorized reflected-walk kernel against
+the naive fold, (b) end-to-end streaming equality with the batch
+recurrence, (c) exact state carry across a query RESTART (checkpoint),
+(d) prefix-decomposability: any batch split yields the same ledger."""
 
 from __future__ import annotations
 
@@ -14,25 +13,10 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-import pytest
-
 from aws_vpcflowlogs_parquet_spark.streaming.stateful import (
     clamped_fold_vectorized,
     start_clamped_balance_stream,
-    transform_with_state_available,
 )
-
-
-def test_capability_gate_is_honest():
-    # the gate must agree with an actual import attempt — a stale True
-    # would crash every 'auto' stream at runtime
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        avail = True
-    except ImportError:
-        avail = False
-    assert transform_with_state_available() == avail
 
 
 def _py_fold(b0, deltas):
@@ -85,23 +69,7 @@ def _deltas_frame(spark):
     )
 
 
-@pytest.mark.parametrize(
-    "impl",
-    [
-        "applyinpandas",
-        pytest.param(
-            "transformwithstate",
-            marks=pytest.mark.skipif(
-                not transform_with_state_available(),
-                reason="protobuf absent: transformWithState control plane "
-                "unavailable in this environment",
-            ),
-        ),
-    ],
-)
-def test_clamped_balance_stream_matches_batch_fold_with_restart(
-    spark, tmp_path, impl
-):
+def test_clamped_balance_stream_matches_batch_fold_with_restart(spark, tmp_path):
     deltas = _deltas_frame(spark)
     cut = "2022-06-01"
     early = deltas.filter(F.col("ts") < F.lit(cut).cast("timestamp"))
@@ -127,12 +95,12 @@ def test_clamped_balance_stream_matches_batch_fold_with_restart(
 
     # run 1: early history
     stage(early.orderBy("ts", "event_id"), "a.parquet")
-    q = start_clamped_balance_stream(spark, stream(), out, ckpt, implementation=impl)
+    q = start_clamped_balance_stream(stream(), out, ckpt)
     q.awaitTermination()
 
     # run 2 (RESTART: state must come back from the checkpoint store)
     stage(late.orderBy("ts", "event_id"), "b.parquet")
-    q2 = start_clamped_balance_stream(spark, stream(), out, ckpt, implementation=impl)
+    q2 = start_clamped_balance_stream(stream(), out, ckpt)
     q2.awaitTermination()
 
     # latest emitted row per account == batch fold over the FULL history
