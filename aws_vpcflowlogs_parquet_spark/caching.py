@@ -49,6 +49,10 @@ _TRACKED_CACHES: list[DataFrame] = []
 _TRACKED_LOCK = threading.Lock()
 _log = logging.getLogger(__name__)
 
+#: Bound on the wait for an ``observe()`` probe in :func:`ckpt_count`.
+#: The metrics normally arrive within milliseconds of the action.
+OBSERVE_WAIT_S = 30.0
+
 
 def track_persist(df: DataFrame) -> DataFrame:
     """``persist()`` + enrol for the next release_cached_intermediates()."""
@@ -127,6 +131,13 @@ def ckpt_count(df: DataFrame, probe=None):
     un-observed checkpoint (CollectMetrics is a row-preserving
     pass-through consumed by the materialization).
 
+    The observed metrics reach ``Observation`` through Spark's
+    asynchronous listener bus, and ``Observation.get`` waits for them with
+    no bound. Here the wait is bounded by :data:`OBSERVE_WAIT_S`; past it,
+    the probe is computed again over the materialized leaf (one more job,
+    same value: for the default probe this is ``leaf.count()``), so a
+    lost observation costs a job instead of hanging the query.
+
     Lives in this module (not plans/catalog.py) so operator modules can
     use it without an import cycle; catalog re-exports it as
     ``_ckpt_count``.
@@ -137,4 +148,29 @@ def ckpt_count(df: DataFrame, probe=None):
     obs = Observation()
     expr = probe if probe is not None else F.count(F.lit(1))
     out = df.observe(obs, expr.alias("n")).localCheckpoint(eager=True)
-    return out, obs.get["n"]
+    if _await_observation(obs, OBSERVE_WAIT_S):
+        return out, obs.get["n"]
+    _log.warning(
+        "observed probe did not arrive within %g s; recomputing it "
+        "over the checkpointed leaf", OBSERVE_WAIT_S,
+    )
+    return out, out.agg(expr.alias("n")).first()["n"]
+
+
+def _await_observation(obs, timeout_s: float) -> bool:
+    """Wait at most ``timeout_s`` for ``obs``'s metrics; True once they
+    are in, so ``obs.get`` returns without blocking."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = obs._jvm
+    bound = jvm.scala.concurrent.duration.Duration.create(
+        int(timeout_s * 1000), "ms"
+    )
+    try:
+        jvm.scala.concurrent.Await.ready(obs._jo.future(), bound)
+    except Py4JJavaError as exc:
+        name = exc.java_exception.getClass().getName()
+        if name != "java.util.concurrent.TimeoutException":
+            raise
+        return False
+    return True

@@ -10,6 +10,11 @@ read what we thought? did anything spill? how much crossed the wire?).
 No listener machinery: PySpark cannot host a JVM QueryExecutionListener
 callback reliably, and polling the executed plan after the action yields
 the identical metrics, so this stays dependency-free.
+
+Code generation is not a plan metric: Janino compiles each generated
+class once per JVM and caches it (``session.CODEGEN_CACHE_ENTRIES``), so
+the digest also reports the classes compiled during the action and the
+time spent compiling them, read from Spark's process-wide counters.
 """
 
 from __future__ import annotations
@@ -60,6 +65,16 @@ def _metrics(node) -> dict[str, int]:
     return out
 
 
+def codegen_counters(spark) -> tuple[int, int]:
+    """(classes compiled, compile ns) so far in this JVM: the count of
+    Spark's ``CodegenMetrics`` compile-time histogram (one sample per
+    cache miss) and ``CodeGenerator.compileTime``'s running total."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return metrics.METRIC_COMPILATION_TIME().getCount(), gen.compileTime()
+
+
 def profile(df: DataFrame) -> dict[str, Any]:
     """Execute ``df`` and return its metric digest.
 
@@ -68,15 +83,19 @@ def profile(df: DataFrame) -> dict[str, Any]:
     n_exchanges, n_operators, wall_sec, exchange_records (per-exchange
     shuffleRecordsWritten, plan-walk order — lets a caller distinguish a
     row-preserving scan-parallelization exchange from an aggregation
-    exchange whose record count proves map-side state is fixed-size).
+    exchange whose record count proves map-side state is fixed-size),
+    codegen_compiles and codegen_compile_ms (generated classes compiled
+    during the action; 0 when every class was already cached).
     """
     import time
 
     # the action MUST run this DataFrame's own QueryExecution — a
     # .count() would plan a different query and leave these metrics empty
+    compiles0, compile_ns0 = codegen_counters(df.sparkSession)
     t0 = time.time()
     rows = df.collect()
     wall = time.time() - t0
+    compiles1, compile_ns1 = codegen_counters(df.sparkSession)
 
     agg: dict[str, Any] = {
         "rows_out": len(rows),
@@ -89,6 +108,8 @@ def profile(df: DataFrame) -> dict[str, Any]:
         "n_exchanges": 0,
         "n_operators": 0,
         "exchange_records": [],
+        "codegen_compiles": compiles1 - compiles0,
+        "codegen_compile_ms": round((compile_ns1 - compile_ns0) / 1e6, 1),
     }
     for node in _nodes(df._jdf.queryExecution().executedPlan()):
         name = node.nodeName()

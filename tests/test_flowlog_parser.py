@@ -95,3 +95,38 @@ def test_gzip_transparent(spark, tmp_path):
     with gzip.open(p, "wt") as f:
         f.write("\n".join([HEADER, ROW1, ROW2, NODATA]))
     assert read_flowlog_text(spark, str(p), strict=True).count() == 3
+
+
+# the tokens on both sides of the '-' short-circuit: signs, blanks,
+# fractions, overflow at each width, junk
+_CAST_TOKENS = (
+    None, "", "-", "--", "-0", "-5", "+5", " 5", "1.5",
+    "2147483648", "9223372036854775808", "abc",
+)
+
+
+@pytest.mark.parametrize("dtype", ["int", "bigint"])
+def test_zero_default_cast_matches_plain_coalesce_try_cast(spark, dtype):
+    """The '-' short-circuit changes cost, not results: old expression,
+    SQL twin and Column twin agree on every token."""
+    from pyspark.sql import functions as F
+
+    from aws_vpcflowlogs_parquet_spark.functions.casts import (
+        zero_default_cast,
+        zero_default_cast_sql,
+    )
+
+    df = spark.createDataFrame(
+        list(enumerate(_CAST_TOKENS)), "i int, tok string"
+    )
+    out = df.select(
+        "i",
+        F.expr(f"coalesce(try_cast(tok AS {dtype}), CAST(0 AS {dtype}))")
+        .alias("old"),
+        F.expr(zero_default_cast_sql("tok", dtype)).alias("sql"),
+        zero_default_cast("tok", dtype).alias("col"),
+    ).orderBy("i").collect()
+    assert len(out) == len(_CAST_TOKENS)
+    for r in out:
+        assert r["old"] == r["sql"] == r["col"], (_CAST_TOKENS[r["i"]], r)
+    assert out[_CAST_TOKENS.index("-")]["sql"] == 0

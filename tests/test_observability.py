@@ -96,3 +96,18 @@ def test_tracked_caches_released_at_query_boundary(spark):
     # a query with no tracked persists empties the registry entirely
     QUERIES["q_topk"](spark, SF_DIR).collect()
     assert tracked_cache_count() == 0
+
+
+def test_profile_reports_codegen_compiles_once(spark):
+    # a frame's generated classes compile on its first action (the odd
+    # literal is inlined into the generated source, so no earlier test
+    # compiled the same class); the second profile finds them all cached
+    df = spark.range(2000).selectExpr(
+        "id % 13 AS k", "id * 7919 + 104729 AS v"
+    ).groupBy("k").agg({"v": "sum"})
+    first, second = profile(df), profile(df)
+    assert first["rows_out"] == second["rows_out"] == 13
+    assert first["codegen_compiles"] > 0, first
+    assert first["codegen_compile_ms"] > 0, first
+    assert second["codegen_compiles"] == 0, second
+    assert second["codegen_compile_ms"] == 0, second

@@ -52,6 +52,32 @@ def test_ckpt_count_filtered_probe(spark):
     assert leaf.count() == 50  # the LEAF keeps every row; only the probe filters
 
 
+@pytest.mark.parametrize("filtered, want", [(False, 60), (True, 20)])
+def test_ckpt_count_falls_back_when_observation_never_arrives(
+    spark, monkeypatch, filtered, want
+):
+    """Attach the observation to a frame that never runs, so its metrics
+    never arrive: ckpt_count must return after its bound, with the probe
+    recomputed over the checkpointed leaf."""
+    from pyspark.sql import DataFrame
+
+    from aws_vpcflowlogs_parquet_spark import caching
+
+    real_observe = DataFrame.observe
+
+    def lost_observe(self, obs, *exprs):
+        real_observe(self.sparkSession.range(1), obs, *exprs)
+        return self
+
+    monkeypatch.setattr(DataFrame, "observe", lost_observe)
+    monkeypatch.setattr(caching, "OBSERVE_WAIT_S", 0.2)
+    df = spark.range(60).select(F.col("id").alias("v"))
+    probe = F.count(F.when(F.col("v") >= 40, 1)) if filtered else None
+    leaf, n = _ckpt_count(df, probe=probe)
+    assert n == want
+    assert leaf.count() == 60
+
+
 def test_ckpt_count_is_one_job(spark):
     """The whole point: checkpoint + probe run FEWER jobs than the prior
     shape (checkpoint, then count()). The exact counts of either shape

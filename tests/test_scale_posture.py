@@ -17,6 +17,7 @@ from aws_vpcflowlogs_parquet_spark.operators.multimodal import (
     resize_images,
     sample_frames,
 )
+from aws_vpcflowlogs_parquet_spark.session import CODEGEN_CACHE_ENTRIES
 from aws_vpcflowlogs_parquet_spark.sources.tables import load_table
 
 from .conftest import SF_DIR
@@ -38,6 +39,12 @@ def _write_batch(path, n, acct="111111111111", start=1541375637):
     path.write_text(
         "\n".join([HEADER] + [_mk_line(acct, start, i + 1) for i in range(n)])
     )
+
+
+def test_codegen_cache_sized_to_working_set(spark):
+    # static conf: only the session factory can set it
+    conf = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    assert int(conf) == CODEGEN_CACHE_ENTRIES
 
 
 def test_compact_partitions_one_file_per_key(spark, tmp_path):
