@@ -28,7 +28,8 @@ def main(argv: list[str] | None = None) -> int:
     p = sub.add_parser("convert", help="batch-convert flow-log gzip/text files")
     p.add_argument("--src", nargs="+", required=True)
     p.add_argument("--dst", required=True)
-    p.add_argument("--strict", action="store_true")
+    p.add_argument("--strict", action=argparse.BooleanOptionalAction, default=True,
+                   help="fail on a malformed line (default); --no-strict drops it")
     p.add_argument("--src-partition", action="store_true")
 
     p = sub.add_parser("register", help="register/repair the partitioned table")

@@ -24,7 +24,6 @@ regions; ``spark.sql`` DDL is synchronous — SURVEY §2.1 R18).
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -113,28 +112,3 @@ def run_event(
         )
     return keys
 
-
-def main(argv: list[str] | None = None) -> int:
-    """CLI twin of the Lambda entry: ``python -m …handler event.json``."""
-    import argparse
-
-    from .session import get_spark
-
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("event", help="path to an S3/SNS event JSON file, or '-' for stdin")
-    args = ap.parse_args(argv)
-    if args.event == "-":
-        import sys
-
-        event = json.load(sys.stdin)
-    else:
-        with open(args.event) as f:
-            event = json.load(f)
-    keys = run_event(get_spark("flowlog-handler"), event, config_from_env())
-    for dt, account in keys:
-        print(f"dt={dt}/account={account}")
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

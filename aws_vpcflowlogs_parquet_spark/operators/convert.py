@@ -130,7 +130,6 @@ def convert_flowlogs(
     strict: bool = True,
     overwrite_partitions: bool = True,
     src_partition: bool = False,
-    source: str = "text",
 ) -> list[tuple[str, ...]]:
     """Convert raw flow-log text files into the partitioned Parquet table.
 
@@ -157,41 +156,10 @@ def convert_flowlogs(
     corrected input overwrites them idempotently). This diverges from the
     reference's write-nothing abort (convert.go:48-50) in exchange for
     not scanning 100 TB of source twice.
-
-    ``source="datasource"`` runs the same conversion through the
-    pluggable Python DataSource (sources/flowlog_datasource.py — the
-    rlogs.Read contract as one registered format). There strict parsing
-    aborts the TASK, so the write commit protocol discards all output —
-    the reference's write-nothing abort exactly, at Python-worker speed
-    (the pluggability surface; "text" remains the codegen hot path).
-    ``src_partition`` requires the text source: ``input_file_name()``
-    is empty inside a Python DataSource scan.
     """
     if isinstance(src_paths, str):
         src_paths = [src_paths]
-    parse_obs = None
-    if source == "datasource":
-        if src_partition:
-            raise ValueError(
-                "src_partition requires source='text' "
-                "(input_file_name() is empty in a Python DataSource scan)"
-            )
-        from functools import reduce
-
-        from ..sources.flowlog_datasource import register_flowlog_source
-
-        register_flowlog_source(spark)
-        parsed = reduce(
-            DataFrame.unionAll,
-            [
-                spark.read.format("flowlog")
-                .option("strict", str(bool(strict)).lower())
-                .load(p)
-                for p in src_paths
-            ],
-        )
-    else:
-        parsed, parse_obs = parse_flowlog_lines_observed(spark.read.text(src_paths))
+    parsed, parse_obs = parse_flowlog_lines_observed(spark.read.text(src_paths))
     part_cols = partition_columns(src_partition)
     # the observed key carries the FULL partition spec — with src_partition
     # the table is 3-level partitioned and ALTER TABLE rejects partial
@@ -203,25 +171,9 @@ def convert_flowlogs(
         partitioned = partitioned.repartition(*part_cols)
 
     mode = "overwrite" if overwrite_partitions else "append"
-    try:
-        write_partitioned(partitioned, dst_path, part_cols, mode)
-    except Exception as exc:  # noqa: BLE001 — surface the source's abort
-        # datasource-strict parse failures abort the task and the commit
-        # protocol discards the write (the reference's write-nothing
-        # abort); re-raise under the parser's typed error. Match the
-        # stable error-code token first — Py4J/connect chains can
-        # truncate or re-wrap the worker's prose, but the short marker
-        # survives (ADVICE r8); the message substring stays as a
-        # fallback for older wrappers that keep only the tail.
-        from ..sources.flowlog_datasource import ERROR_CODE
-
-        msg = str(exc)
-        if ERROR_CODE in msg or "malformed flow log line" in msg:
-            raise FlowLogParseError(msg) from exc
-        raise
-
+    write_partitioned(partitioned, dst_path, part_cols, mode)
     keys = observed_partition_keys(key_obs, part_cols)
-    if strict and parse_obs is not None:
+    if strict:
         try:
             raise_if_malformed(parse_obs)
         except FlowLogParseError as err:

@@ -13,15 +13,17 @@ WholeStageCodegen; nothing here is a UDF, so the same plan handles 100 TB of
 log text limited only by executor count.
 
 Strictness: the reference aborts the whole conversion on the first parse
-error (convert.go:48-50). Batch mode exposes that as ``strict=True`` (count
-violations, raise); streaming uses the lenient path (malformed lines
-dropped, counted via an ``_is_valid`` flag) since aborting a long-lived
-query per bad line is not a streaming posture.
+error (convert.go:48-50). Batch mode exposes that through
+:func:`parse_flowlog_lines_observed` + :func:`raise_if_malformed` (the
+malformed-line count rides the main job; raise after the action);
+streaming uses the lenient :func:`parse_flowlog_lines` (malformed lines
+dropped via the ``_is_valid`` flag) since aborting a long-lived query per
+bad line is not a streaming posture.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.casts import zero_default_cast_sql
@@ -35,9 +37,7 @@ from ..schema import FLOW_COLUMNS, NUM_RAW_TOKENS, SUPPORTED_VERSION
 
 # header: first token is the literal 'version' (flowlog.go:42-44). The
 # reference's arity check runs BEFORE its header skip (flowlog.go:36-44),
-# so a header row with arity != 14 is malformed, not a skippable header —
-# the arity conjunct keeps this path in lockstep with the flowlog
-# DataSource (ADVICE r8).
+# so a header row with arity != 14 is malformed, not a skippable header.
 _IS_HEADER_SQL = f"size(_toks) = {NUM_RAW_TOKENS} AND _toks[0] = 'version'"
 _FLAG_EXPRS = (
     "size(_toks) AS _n_toks",
@@ -88,22 +88,10 @@ def typed_projection(df: DataFrame) -> DataFrame:
     return df.selectExpr(*_TYPED_EXPRS)
 
 
-def parse_flowlog_lines(
-    lines: DataFrame, value_col: str = "value", strict: bool = False
-) -> DataFrame:
-    """Lines DataFrame → typed FlowLog DataFrame.
-
-    With ``strict`` the count of malformed (non-header) lines is checked
-    eagerly and any violation raises :class:`FlowLogParseError` — the whole
-    input fails, matching flowlog.go:36-48 + convert.go:48-50. Lenient mode
-    simply filters them out.
-    """
-    tok = tokenize(lines, value_col)
-    if strict:
-        row = tok.filter(_IS_BAD_SQL).limit(1).select(value_col).collect()
-        if row:
-            raise FlowLogParseError(f"malformed flow log line: {row[0][0]!r}")
-    return typed_projection(tok.filter("_is_valid"))
+def parse_flowlog_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
+    """Lines DataFrame → typed FlowLog DataFrame; malformed lines are
+    dropped. Strict callers use :func:`parse_flowlog_lines_observed`."""
+    return typed_projection(tokenize(lines, value_col).filter("_is_valid"))
 
 
 def parse_flowlog_lines_observed(
@@ -112,12 +100,10 @@ def parse_flowlog_lines_observed(
     """Lines → typed DataFrame plus an :class:`Observation` for single-pass
     strict validation.
 
-    The eager strict probe in :func:`parse_flowlog_lines` costs a second
-    scan of the input — at 100 TB that doubles ingest I/O. Here the
-    malformed-line count (and one sample line for the error message) rides
-    the main job as a CollectMetrics node placed *before* the validity
-    filter, so one scan produces both the output and the verdict. The
-    caller runs its action, then checks ``obs.get["n_bad"]`` and raises —
+    The malformed-line count (and one sample line for the error message)
+    rides the main job as a CollectMetrics node placed *before* the
+    validity filter, so one scan produces both the output and the verdict.
+    The caller runs its action, then calls :func:`raise_if_malformed` —
     see operators/convert.py convert_flowlogs (reference abort-on-error:
     convert.go:48-50).
     """
@@ -139,11 +125,3 @@ def raise_if_malformed(obs: Observation) -> None:
             f"sample: {metrics['sample_bad']!r}"
         )
 
-
-def read_flowlog_text(
-    spark: SparkSession, paths: list[str] | str, strict: bool = False
-) -> DataFrame:
-    """Batch entry: file paths (plain or .gz) → typed FlowLog DataFrame."""
-    if isinstance(paths, str):
-        paths = [paths]
-    return parse_flowlog_lines(spark.read.text(paths), strict=strict)

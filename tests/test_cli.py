@@ -6,7 +6,10 @@ from __future__ import annotations
 import gzip
 import json
 
+import pytest
+
 from aws_vpcflowlogs_parquet_spark.__main__ import main
+from aws_vpcflowlogs_parquet_spark.sources.flowlog import FlowLogParseError
 
 from .conftest import SF_DIR
 
@@ -37,6 +40,19 @@ def test_cli_convert_and_register(spark, tmp_path, capsys):
         )
     finally:
         spark.sql("DROP TABLE IF EXISTS flowlogs_cli_test")
+
+
+def test_cli_convert_is_strict_by_default(spark, tmp_path, capsys):
+    # the CLI shares convert_flowlogs' strict default: a malformed line
+    # fails the run unless --no-strict asks for the lenient drop
+    src = tmp_path / "bad.log"
+    src.write_text("\n".join([HEADER, LINE, "2 too short"]))
+    with pytest.raises(FlowLogParseError, match="malformed flow log line"):
+        main(["convert", "--src", str(src), "--dst", str(tmp_path / "strict")])
+    dst = str(tmp_path / "lenient")
+    assert main(["convert", "--src", str(src), "--dst", dst, "--no-strict"]) == 0
+    assert "2018-11-04/111111111111" in capsys.readouterr().out
+    assert spark.read.parquet(dst).count() == 1
 
 
 def test_cli_query_and_profile(capsys):

@@ -13,7 +13,8 @@ import pytest
 from aws_vpcflowlogs_parquet_spark.sources.flowlog import (
     FlowLogParseError,
     parse_flowlog_lines,
-    read_flowlog_text,
+    parse_flowlog_lines_observed,
+    raise_if_malformed,
 )
 
 HEADER = (
@@ -28,6 +29,15 @@ NODATA = "2 999456789000 eni-00000001 - - - - - - - 1541462037 1541462097 - NODA
 
 def _lines_df(spark, lines):
     return spark.createDataFrame([(x,) for x in lines], "value string")
+
+
+def _strict_rows(lines_df):
+    """The strict contract as convert_flowlogs runs it: one action over
+    the observed parse, then the malformed-line verdict."""
+    parsed, obs = parse_flowlog_lines_observed(lines_df)
+    rows = parsed.collect()
+    raise_if_malformed(obs)
+    return rows
 
 
 def test_golden_values(spark):
@@ -58,8 +68,7 @@ def test_golden_values(spark):
 
 
 def test_header_skipped_silently(spark):
-    df = parse_flowlog_lines(_lines_df(spark, [HEADER, ROW1]), strict=True)
-    assert df.count() == 1
+    assert len(_strict_rows(_lines_df(spark, [HEADER, ROW1]))) == 1
 
 
 def test_nodata_dash_becomes_zero_not_null(spark):
@@ -72,19 +81,17 @@ def test_nodata_dash_becomes_zero_not_null(spark):
 
 def test_strict_rejects_wrong_arity(spark):
     with pytest.raises(FlowLogParseError):
-        parse_flowlog_lines(_lines_df(spark, [ROW1, "2 too short"]), strict=True)
+        _strict_rows(_lines_df(spark, [ROW1, "2 too short"]))
 
 
 def test_strict_rejects_wrong_version(spark):
     bad = ROW1.replace("2 123", "3 123", 1)
     with pytest.raises(FlowLogParseError):
-        parse_flowlog_lines(_lines_df(spark, [bad]), strict=True)
+        _strict_rows(_lines_df(spark, [bad]))
 
 
 def test_lenient_drops_invalid(spark):
-    df = parse_flowlog_lines(
-        _lines_df(spark, [HEADER, ROW1, "garbage", ROW2]), strict=False
-    )
+    df = parse_flowlog_lines(_lines_df(spark, [HEADER, ROW1, "garbage", ROW2]))
     assert df.count() == 2
 
 
@@ -94,7 +101,32 @@ def test_gzip_transparent(spark, tmp_path):
     p = tmp_path / "x.log.gz"
     with gzip.open(p, "wt") as f:
         f.write("\n".join([HEADER, ROW1, ROW2, NODATA]))
-    assert read_flowlog_text(spark, str(p), strict=True).count() == 3
+    assert len(_strict_rows(spark.read.text(str(p)))) == 3
+
+
+def test_crlf_input_matches_codegen_path(spark, tmp_path):
+    # Hadoop's line reader strips the "\r" of CRLF endings: a CRLF file
+    # parses exactly like its LF twin, NODATA rows included
+    crlf = tmp_path / "crlf.log"
+    crlf.write_bytes(("\r\n".join([HEADER, ROW1, NODATA]) + "\r\n").encode())
+    lf = tmp_path / "lf.log"
+    lf.write_text("\n".join([HEADER, ROW1, NODATA]) + "\n")
+    rows = _strict_rows(spark.read.text(str(crlf)))
+    assert {r.logstatus for r in rows} == {"OK", "NODATA"}
+    assert sorted(map(tuple, rows)) == sorted(
+        map(tuple, _strict_rows(spark.read.text(str(lf))))
+    )
+
+
+def test_short_header_is_malformed_both_paths(spark, tmp_path):
+    # the reference's arity gate runs BEFORE its header skip
+    # (flowlog.go:36-44): a truncated header is an error, not a header —
+    # strict raises, lenient drops it and keeps the good line
+    src = tmp_path / "shorthdr.log"
+    src.write_text("\n".join(["version account-id interface-id", ROW1]))
+    with pytest.raises(FlowLogParseError, match="malformed flow log line"):
+        _strict_rows(spark.read.text(str(src)))
+    assert parse_flowlog_lines(spark.read.text(str(src))).count() == 1
 
 
 # the tokens on both sides of the '-' short-circuit: signs, blanks,

@@ -16,6 +16,8 @@ from aws_vpcflowlogs_parquet_spark.operators.convert import with_partition_colum
 from aws_vpcflowlogs_parquet_spark.sources.flowlog import (
     FlowLogParseError,
     parse_flowlog_lines,
+    parse_flowlog_lines_observed,
+    raise_if_malformed,
 )
 
 # int32-safe numeric-ish tokens, including the '-' NODATA marker and garbage
@@ -126,8 +128,10 @@ def test_strict_mode_matches_reference_abort(spark, lines):
         )
 
     should_fail = any(_is_bad(l) for l in lines)
+    parsed, obs = parse_flowlog_lines_observed(df)
+    parsed.collect()
     try:
-        parse_flowlog_lines(df, strict=True).collect()
+        raise_if_malformed(obs)
         failed = False
     except FlowLogParseError:
         failed = True

@@ -60,25 +60,45 @@ def test_stream_convert_end_to_end(spark, tmp_path):
 
 
 def test_stream_restart_is_exactly_once(spark, tmp_path):
-    # kill the query, restart with same checkpoint, re-drop nothing: rows
-    # must not duplicate (upgrade over the reference's at-most-once,
-    # main.go:77-83)
+    # stop and restart on the same checkpoint after every micro-batch,
+    # one new file per run: each row lands exactly once (upgrade over the
+    # reference's at-most-once, main.go:77-83)
     src = tmp_path / "drop"
     src.mkdir()
     dst = tmp_path / "out"
     ckpt = tmp_path / "ckpt"
-    (src / "a.log").write_text(
-        "\n".join([HEADER, _mk_line("111111111111", 1541375637, 1)])
-    )
+    files = [
+        [_mk_line("111111111111", 1541375637, 1), _mk_line("111111111111", 1541375637, 1)],
+        [_mk_line("222222222222", 1541462037, 2)],
+        [_mk_line("111111111111", 1541375637, 3), _mk_line("333333333333", 1541548437, 4)],
+    ]
+    for i, lines in enumerate(files):
+        (src / f"f{i}.log").write_text("\n".join([HEADER, *lines]))
+        q = start_flowlog_stream(spark, str(src), str(dst), str(ckpt))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    # a last restart with nothing new must not replay a committed batch
     q = start_flowlog_stream(spark, str(src), str(dst), str(ckpt))
-    q.processAllAvailable()
-    q.stop()
-    q2 = start_flowlog_stream(spark, str(src), str(dst), str(ckpt))
     try:
-        q2.processAllAvailable()
-        assert spark.read.parquet(str(dst)).count() == 1
+        q.processAllAvailable()
     finally:
-        q2.stop()
+        q.stop()
+    back = spark.read.parquet(str(dst))
+    got = sorted(tuple(r) for r in back.select("accountid", "start_ts", "srcport").collect())
+    assert got == [
+        ("111111111111", 1541375637, 1),
+        ("111111111111", 1541375637, 1),
+        ("111111111111", 1541375637, 3),
+        ("222222222222", 1541462037, 2),
+        ("333333333333", 1541548437, 4),
+    ]
+    assert sorted(tuple(r) for r in back.select("dt", "account").distinct().collect()) == [
+        ("2018-11-04", "111111111111"),
+        ("2018-11-05", "222222222222"),
+        ("2018-11-06", "333333333333"),
+    ]
 
 
 def test_stream_registers_partitions_in_table(spark, tmp_path):
