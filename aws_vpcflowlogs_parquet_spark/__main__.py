@@ -5,13 +5,19 @@
     python -m aws_vpcflowlogs_parquet_spark stream --src drop/ --dst out/ --checkpoint ckpt/
     python -m aws_vpcflowlogs_parquet_spark event event.json
     python -m aws_vpcflowlogs_parquet_spark query q_topk --sf /root/testdata/sf0.001
-    python -m aws_vpcflowlogs_parquet_spark profile q_topk
+    python -m aws_vpcflowlogs_parquet_spark profile q_topk q_kcore q_topk
+    python -m aws_vpcflowlogs_parquet_spark profile --sf /root/testdata/sf0.01
     python -m aws_vpcflowlogs_parquet_spark layout --path tbl/ --cluster-by x,y
 
 Each subcommand is a thin veneer over the library (operators/, plans/,
 streaming/, observability) — the operational equivalent of the
 reference's Lambda binary (main.go:67-85), runnable under spark-submit
 or plain python on any cluster.
+
+`profile` is the engine's one profiling entry point: it builds and runs
+each named query (every registered query, streams included, when none
+is named; a repeated name is a repeat run) and prints one JSON digest
+per run (observability.profile_build). It exits 1 if any run spilled.
 """
 
 from __future__ import annotations
@@ -51,8 +57,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--sf", default="/root/testdata/sf0.001")
     p.add_argument("--limit", type=int, default=20)
 
-    p = sub.add_parser("profile", help="run a catalog query, print its metrics")
-    p.add_argument("name")
+    p = sub.add_parser("profile", help="run catalog queries, print their metrics")
+    p.add_argument("names", nargs="*", help="default: every registered query")
     p.add_argument("--sf", default="/root/testdata/sf0.001")
 
     p = sub.add_parser("layout", help="rewrite a table clustered for skipping")
@@ -102,10 +108,18 @@ def main(argv: list[str] | None = None) -> int:
         for row in df.limit(args.limit).collect():
             print(json.dumps(row.asDict(), default=str))
     elif args.cmd == "profile":
-        from .observability import profile
+        from . import observability
         from .plans.catalog import QUERIES
 
-        print(json.dumps(profile(QUERIES[args.name](spark, args.sf))))
+        runs = [(name, QUERIES[name]) for name in args.names or sorted(QUERIES)]
+        spilled = 0
+        for i, (name, build) in enumerate(runs):
+            digest = observability.profile_build(
+                spark, f"profile-{i}-{name}", lambda: build(spark, args.sf)
+            )
+            print(json.dumps({"query": name, **digest}), flush=True)
+            spilled += digest["spill_bytes"] > 0
+        return 1 if spilled else 0
     elif args.cmd == "layout":
         from .operators.layout import optimize_layout
 

@@ -7,9 +7,16 @@ plain data — the per-query digest a pipeline records next to its outputs
 (and the first thing to look at when a 100 TB run is slow: did the scan
 read what we thought? did anything spill? how much crossed the wire?).
 
-No listener machinery: PySpark cannot host a JVM QueryExecutionListener
-callback reliably, and polling the executed plan after the action yields
-the identical metrics, so this stays dependency-free.
+`profile_build(spark, group, build)` wraps a catalog builder: it times
+the build, counts the jobs run under the query's job group (and under
+each stream's run id, the group Spark gives a stream's jobs), and adds
+the per-micro-batch progress of every stream the build ran. Batch
+metrics need no listener: polling the executed plan after the action
+yields the same SQLMetrics. Streams do: a catalog stream runs to its end
+inside the build (availableNow), so no handle is left to poll and the
+returned frame only reads its output. A ``StreamingQueryListener``,
+added around the build and removed after it, records their progress as
+data; it is the only listener here.
 
 Code generation is not a plan metric: Janino compiles each generated
 class once per JVM and caches it (``session.CODEGEN_CACHE_ENTRIES``), so
@@ -19,9 +26,11 @@ time spent compiling them, read from Spark's process-wide counters.
 
 from __future__ import annotations
 
-from typing import Any
+import time
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQueryListener
 
 
 def _nodes(root):
@@ -85,10 +94,10 @@ def profile(df: DataFrame) -> dict[str, Any]:
     row-preserving scan-parallelization exchange from an aggregation
     exchange whose record count proves map-side state is fixed-size),
     codegen_compiles and codegen_compile_ms (generated classes compiled
-    during the action; 0 when every class was already cached).
+    during the action; 0 when every class was already cached),
+    operators (each node's name and its non-zero metrics, plan-walk
+    order).
     """
-    import time
-
     # the action MUST run this DataFrame's own QueryExecution — a
     # .count() would plan a different query and leave these metrics empty
     compiles0, compile_ns0 = codegen_counters(df.sparkSession)
@@ -108,6 +117,7 @@ def profile(df: DataFrame) -> dict[str, Any]:
         "n_exchanges": 0,
         "n_operators": 0,
         "exchange_records": [],
+        "operators": [],
         "codegen_compiles": compiles1 - compiles0,
         "codegen_compile_ms": round((compile_ns1 - compile_ns0) / 1e6, 1),
     }
@@ -115,6 +125,9 @@ def profile(df: DataFrame) -> dict[str, Any]:
         name = node.nodeName()
         agg["n_operators"] += 1
         vals = _metrics(node)
+        agg["operators"].append(
+            {"name": name, "metrics": {k: v for k, v in vals.items() if v}}
+        )
         if "Scan" in name:
             agg["scan_rows"] += vals.get("numOutputRows", 0)
         if "Exchange" in name:
@@ -129,3 +142,68 @@ def profile(df: DataFrame) -> dict[str, Any]:
             agg["peak_mem_bytes"], vals.get("peakMemory", 0)
         )
     return agg
+
+
+class _StreamProgress(StreamingQueryListener):
+    """Records every micro-batch's progress and each stream's run id."""
+
+    def __init__(self) -> None:
+        self.batches: list[dict[str, Any]] = []
+        self.run_ids: set[str] = set()
+
+    def onQueryStarted(self, event) -> None:
+        self.run_ids.add(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:
+        p = event.progress
+        self.batches.append(
+            {
+                "batchId": p.batchId,
+                "numInputRows": p.numInputRows,
+                "durationMs": dict(p.durationMs),
+                "stateOperators": [dict(op) for op in p.stateOperators],
+            }
+        )
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
+
+def profile_build(
+    spark: SparkSession, group: str, build: Callable[[], DataFrame]
+) -> dict[str, Any]:
+    """Build a frame with ``build()``, execute it, and return its digest.
+
+    Adds to :func:`profile`'s keys: build_s (the builder call, including
+    any jobs or streams it runs), jobs (jobs run under job group
+    ``group`` over build and action, plus those of the streams the build
+    started) and streams (each micro-batch's batchId, numInputRows,
+    durationMs and stateOperators, in delivery order).
+    """
+    sc = spark.sparkContext
+    listener = _StreamProgress()
+    spark.streams.addListener(listener)
+    sc.setJobGroup(group, group)
+    try:
+        t0 = time.perf_counter()
+        try:
+            df = build()
+            build_s = time.perf_counter() - t0
+        finally:
+            # progress events reach the listener asynchronously: drain
+            # the bus (bounded wait) so none lands after the removal
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            spark.streams.removeListener(listener)
+        digest = profile(df)
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    jobs = sum(
+        len(tracker.getJobIdsForGroup(g)) for g in {group, *listener.run_ids}
+    )
+    return {
+        "build_s": round(build_s, 3),
+        "jobs": jobs,
+        **digest,
+        "streams": listener.batches,
+    }

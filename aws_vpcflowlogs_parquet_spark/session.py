@@ -101,13 +101,10 @@ def ensure_session_posture(spark: SparkSession) -> SparkSession:
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
     )
-    try:
-        # events.parquet stores TIMESTAMP(NANOS); read as long, converted
-        # to a timestamp in sources/tables.py.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set(
-            "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-        )
-    except Exception:
-        pass  # conf not recognized on this Spark version
+    # events.parquet stores TIMESTAMP(NANOS); read as long, converted
+    # to a timestamp in sources/tables.py.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(
+        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
+    )
     return spark

@@ -291,9 +291,7 @@ def run_stream_to_parquet(
     q_stream_stateful / q_stream_time_bucket, the state-file traffic
     outweighing the extra parallelism at this key cardinality). The
     count is :func:`state_partitions` of ``src_dir`` with ``state_parts``
-    as its floor. ``SPARK_GRAFT_STREAM_PARTITIONS`` overrides for real
-    deployments, where the right number is ≥ total executor slots sized
-    to key cardinality × throughput.
+    as its floor.
     """
     out_dir = stream_tmpdir(f"{tag}_out_")
     ckpt = stream_tmpdir(f"{tag}_ckpt_")
@@ -302,10 +300,7 @@ def run_stream_to_parquet(
     parts = state_partitions(
         src_dir, state_parts, spark.sparkContext.defaultParallelism
     )
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", str(parts)),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     # Checkpoint GC retention, not semantics: the default keeps 100
     # batches of offset/commit/state files alive, which for these
     # single-batch availableNow runs is pure metadata churn (~0.12 s per

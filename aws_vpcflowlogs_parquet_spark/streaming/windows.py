@@ -756,80 +756,3 @@ def stream_funnel(
             GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def stream_ewma(
-    events: DataFrame,
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming EXACT INTEGER EWMA per key — the sequential-fold
-    state shape (e_t = (3*x_t + 7*e_{t-1}) div 10 on the cents
-    lattice, an alpha=0.3 exponential filter with floor rounding;
-    e_1 = x_1): the recurrence that q_ewma deliberately truncates to
-    8 taps for batch parallelism is EXACT here, because a stateful
-    stream pays O(1) per event for it — the canonical example of an
-    operator whose streaming form is STRONGER than its batch form.
-    Integer arithmetic makes cross-engine and cross-batch replay
-    bit-exact (no float accumulation order anywhere). Emits the
-    running (user_id, n_events, ewma_cents) after each batch in
-    update mode; the availableNow single-batch run therefore emits
-    exactly the full-sequence fold. State: two int64s per key.
-    ORDERING PRECONDITION: batch-monotonic per key (the
-    stream_cep_peaks contract); within a batch rows are sorted by
-    (event time, event_id) before folding."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "user_id bigint, n_events bigint, ewma_cents bigint"
-    state_schema = "e bigint, n bigint"
-    events = events.select("user_id", ts_col, "event_id", "value")
-
-    def update(key, pdf_iter, state: GroupState):
-        import numpy as np
-
-        e, n = (-1, 0)
-        if state.exists:
-            e, n = int(state.get[0]), int(state.get[1])
-        xs_l = []
-        for pdf in pdf_iter:
-            if len(pdf):
-                us = (
-                    pdf[ts_col]
-                    .to_numpy()
-                    .astype("datetime64[us]")
-                    .astype("int64")
-                )
-                eid = pdf["event_id"].to_numpy().astype("int64")
-                x = np.floor(
-                    pdf["value"].to_numpy() * 100.0 + 0.5
-                ).astype("int64")
-                order = np.lexsort((eid, us))
-                xs_l.append(x[order])
-        if xs_l:
-            xs = xs_l[0] if len(xs_l) == 1 else np.concatenate(xs_l)
-            for x in xs:  # bounded per-key fold — the state kernel
-                xi = int(x)
-                e = xi if n == 0 else (3 * xi + 7 * e) // 10
-                n += 1
-        state.update((e, n))
-        if n:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "ewma_cents": [e],
-                }
-            )
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            out_schema,
-            state_schema,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )

@@ -1,7 +1,6 @@
 """Dump .explain("formatted") for catalog queries to plans/r12/<q>_<tag>.txt.
 
 Usage: python scripts/dump_plans.py --tag before q_lsh_recall q_near_dup_rate
-       python scripts/dump_plans.py --tag before --all-heavy
 
 Iterative queries run driver-side jobs during build (localCheckpoint
 rounds); their dump therefore costs real compute — expected, we want the

@@ -8,6 +8,7 @@ import json
 
 import pytest
 
+from aws_vpcflowlogs_parquet_spark import observability
 from aws_vpcflowlogs_parquet_spark.__main__ import main
 from aws_vpcflowlogs_parquet_spark.sources.flowlog import FlowLogParseError
 
@@ -67,3 +68,35 @@ def test_cli_query_and_profile(capsys):
     out = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")]
     digest = json.loads(out[-1])
     assert digest["rows_out"] == 10
+
+
+def _digests(capsys) -> list[dict]:
+    out = capsys.readouterr().out.splitlines()
+    return [json.loads(l) for l in out if l.startswith("{")]
+
+
+def test_cli_profile_digests_build_jobs_operators_and_streams(capsys):
+    rc = main(["profile", "q_topk", "q_kcore", "q_stream_stateful", "--sf", SF_DIR])
+    assert rc == 0
+    topk, kcore, stateful = _digests(capsys)
+    for d in (topk, kcore, stateful):
+        assert d["build_s"] >= 0 and d["jobs"] >= 1 and d["operators"], d
+    assert [d["query"] for d in (topk, kcore, stateful)] == [
+        "q_topk", "q_kcore", "q_stream_stateful"
+    ]
+    # kcore's peeling rounds each checkpoint: more jobs than a single top-k
+    assert kcore["jobs"] > topk["jobs"], (kcore["jobs"], topk["jobs"])
+    # only the stream reports micro-batches, and its batches read input
+    assert topk["streams"] == [] and kcore["streams"] == []
+    assert stateful["streams"], stateful
+    assert sum(b["numInputRows"] for b in stateful["streams"]) > 0
+    assert all("stateOperators" in b for b in stateful["streams"])
+
+
+def test_cli_profile_exits_1_when_a_query_spills(capsys, monkeypatch):
+    real = observability.profile
+    monkeypatch.setattr(
+        observability, "profile", lambda df: {**real(df), "spill_bytes": 1}
+    )
+    assert main(["profile", "q_topk", "--sf", SF_DIR]) == 1
+    assert len(_digests(capsys)) == 1

@@ -88,6 +88,4 @@ def test_run_creates_the_derived_number_of_state_partitions(spark):
     want = H.state_partitions(
         src_dir, 3, spark.sparkContext.defaultParallelism
     )
-    if "SPARK_GRAFT_STREAM_PARTITIONS" in os.environ:
-        want = int(os.environ["SPARK_GRAFT_STREAM_PARTITIONS"])
     assert len([p for p in parts if p.isdigit()]) == want
