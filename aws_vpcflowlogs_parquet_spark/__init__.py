@@ -5,8 +5,8 @@ m-mizutani/aws-vpcflowlogs-parquet (VPC Flow Logs → partitioned Parquet ETL
 Layout:
   session    — SparkSession factory (AQE on, UTC, tuned shuffle partitions)
   schema     — FlowLog record schema (reference flowlog.go:14-29)
-  functions/ — expression helpers (zero-default casts, exact decimal aggs,
-               vector math, text hashing) shared by operators and oracles
+  functions/ — expression helpers (zero-default casts, exact decimal aggs)
+               shared by operators and oracles
   sources/   — flowlog text source + event-notification target discovery
   operators/ — batch converter, dedup, similarity, text analysis, multimodal
   plans/     — the query catalog exposed through __spark_entry__.py

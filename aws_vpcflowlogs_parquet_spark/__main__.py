@@ -96,11 +96,14 @@ def main(argv: list[str] | None = None) -> int:
             q.awaitTermination()
     elif args.cmd == "event":
         from .handler import config_from_env, run_event
+        from .operators.convert import partition_columns
 
         with open(args.event) as f:
             event = json.load(f)
-        for dt, account in run_event(spark, event, config_from_env()):
-            print(f"dt={dt}/account={account}")
+        config = config_from_env()
+        cols = partition_columns(config.src_partition)
+        for key in run_event(spark, event, config):
+            print("/".join(f"{c}={v}" for c, v in zip(cols, key)))
     elif args.cmd == "query":
         from .plans.catalog import QUERIES
 

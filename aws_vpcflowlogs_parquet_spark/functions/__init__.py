@@ -1,8 +1,1 @@
 from .casts import exact_avg, exact_sum, zero_default_cast  # noqa: F401
-from .vectors import (  # noqa: F401
-    cosine_pandas_udf,
-    cosine_similarity,
-    dot_product,
-    l2_norm,
-    to_double_array,
-)

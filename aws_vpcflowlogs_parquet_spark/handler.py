@@ -45,7 +45,15 @@ class HandlerConfig:
 
 
 def config_from_env(env: dict[str, str] | None = None) -> HandlerConfig:
-    """Bind HandlerConfig from the reference's env vars (main.go:138)."""
+    """Bind HandlerConfig from the reference's env vars (main.go:138).
+
+    Binds ``src_partition=True``: each S3 event carries its own objects,
+    and the reference writes one output object per source file
+    (convert.go:86), so one event's conversion never touches another's
+    rows. With the 2-level layout, each event's dynamic overwrite would
+    replace the whole (dt, account) partition, dropping the rows of every
+    earlier object in it.
+    """
     env = os.environ if env is None else env
     bucket = env.get("S3_BUCKET", "")
     prefix = env.get("S3_PREFIX", "").strip("/")
@@ -59,6 +67,7 @@ def config_from_env(env: dict[str, str] | None = None) -> HandlerConfig:
     return HandlerConfig(
         dst_path=dst.rstrip("/"),
         table=f"{db}.{table}" if db and table else table,
+        src_partition=True,
     )
 
 

@@ -128,7 +128,6 @@ def convert_flowlogs(
     src_paths: list[str] | str,
     dst_path: str,
     strict: bool = True,
-    overwrite_partitions: bool = True,
     src_partition: bool = False,
 ) -> list[tuple[str, ...]]:
     """Convert raw flow-log text files into the partitioned Parquet table.
@@ -142,9 +141,8 @@ def convert_flowlogs(
     layout, dynamic overwrite replaces the *whole* (dt, account) partition
     — re-converting one source file of a multi-file partition drops the
     other files' rows. When one partition accumulates from many source
-    files over time, either use ``overwrite_partitions=False`` (append;
-    re-runs duplicate — follow with :func:`compact_partitions` dedup) or
-    ``src_partition=True``, which adds a third partition level
+    files over time (the S3-event handler's case; ``config_from_env``
+    sets it), use ``src_partition=True``, which adds a third partition level
     ``src=<hash(source file)>`` so dynamic overwrite replaces exactly the
     re-converted file's own output — the reference's per-source-file
     idempotence, expressed as partition layout. Register such tables with
@@ -170,8 +168,7 @@ def convert_flowlogs(
     if not src_partition:
         partitioned = partitioned.repartition(*part_cols)
 
-    mode = "overwrite" if overwrite_partitions else "append"
-    write_partitioned(partitioned, dst_path, part_cols, mode)
+    write_partitioned(partitioned, dst_path, part_cols, "overwrite")
     keys = observed_partition_keys(key_obs, part_cols)
     if strict:
         try:
@@ -185,35 +182,6 @@ def convert_flowlogs(
             err.partition_keys = keys
             raise
     return keys
-
-
-def compact_partitions(spark: SparkSession, src_path: str, dst_path: str) -> int:
-    """Rewrite a partitioned flow-log table to one file per partition key.
-
-    The reference emits one output file per (source file × partition key)
-    (convert.go:86) — at 100 TB that's millions of small files, the classic
-    scan killer. Compaction is one shuffle keyed on the partition columns
-    (every row of a key lands in one task → exactly one output file per
-    key). Spark cannot overwrite a path it is reading, so the compacted
-    table lands at ``dst_path``; callers swap locations (or repoint the
-    table's LOCATION) atomically. Returns the partition count.
-
-    At cluster scale, run per dt-range so the shuffle stays bounded, and
-    raise the per-key file count by salting the repartition key when a
-    single partition exceeds a task's output budget.
-    """
-    df = spark.read.parquet(src_path)
-    if SRC_COLUMN in df.columns:
-        # src-partitioned layout (per-source-file idempotence): compaction
-        # is exactly the step that retires the per-file granularity
-        df = df.drop(SRC_COLUMN)
-    (
-        df.repartition(*PARTITION_COLUMNS)
-        .write.mode("overwrite")
-        .partitionBy(*PARTITION_COLUMNS)
-        .parquet(dst_path, compression="snappy")
-    )
-    return df.select(*PARTITION_COLUMNS).distinct().count()
 
 
 def register_flowlog_table(

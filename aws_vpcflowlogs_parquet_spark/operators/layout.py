@@ -85,197 +85,6 @@ def optimize_layout(
     )
 
 
-def compact(
-    spark,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    preserve_sort: str | None = None,
-) -> dict:
-    """Small-file compaction: rewrite ``path`` into ⌈size/target⌉ files.
-
-    The small-files problem is the slow killer of streaming/incremental
-    sinks (every micro-batch appends a few files; a year later the
-    driver spends minutes listing and each task reads kilobytes). This
-    rewrites to size-targeted files — `coalesce` (no shuffle) when only
-    merging, or a range repartition on ``preserve_sort`` to keep a
-    clustered layout's skipping property through the rewrite. Writes to
-    a temp sibling then swaps via two os.renames.
-
-    Swap semantics (ADVICE r3): the rename pair is LOCAL-FS maintenance-
-    window tooling — on a local filesystem each rename is atomic, but
-    there is a window between the two where ``path`` does not exist, and
-    object stores (s3a://) have no rename at all. At 100 TB compaction
-    runs under a table-format's transaction log (Delta/Iceberg rewrite
-    commits) or during a scheduled maintenance window; this helper is
-    the latter. A crash between the renames is recoverable: on entry we
-    detect a stranded ``__old_*`` sibling with no live ``path`` and
-    restore it, and stale ``__compact_*`` temp dirs are swept before the
-    destructive rmtree ever runs.
-
-    SINGLE-WRITER PRECONDITION (ADVICE r4): at most one compact() may
-    run against a given ``path`` at a time — the recovery sweep removes
-    leftover temp/backup siblings, which under a concurrent compactor
-    would be the OTHER run's live state. A ``__compact_lock`` file
-    enforces this: entry raises RuntimeError if the lock is held and
-    fresh; locks older than ``stale_lock_seconds`` (default 24 h —
-    longer than any plausible rewrite, so only a crashed run leaves one)
-    are broken, preserving crash recovery. Breaking is one-winner via an
-    O_EXCL ``.breaking`` claim file; a STALE claim (a breaker crashed
-    inside the claim window) is never auto-swept and needs one manual rm
-    — the raised error says which file and why (ADVICE r6: remove-by-path
-    of a shared claim path cannot be made one-winner). Returns
-    {files_before, files_after, bytes}."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    lock = f"{path}__compact_lock"
-    stale_lock_seconds = 24 * 3600
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, str(os.getpid()).encode())
-            os.close(fd)
-            break
-        except FileExistsError:
-            pass
-        try:
-            age = time.time() - os.path.getmtime(lock)
-        except OSError:  # lock vanished between the open and the stat
-            continue  # re-contend the O_EXCL create
-        if age < stale_lock_seconds:
-            raise RuntimeError(
-                f"compact() already running on {path} (lock {lock}, "
-                f"{age:.0f}s old); single-writer required — see docstring"
-            )
-        # Stale lock from a crashed run: break it with ONE winner.
-        # The r5 rename-aside protocol had a TOCTOU hole: rename() moves
-        # whatever is at the path, not the inode that was stat'ed, so a
-        # breaker descheduled between getmtime() and rename() could move
-        # a competitor's FRESH lock aside and both would proceed into
-        # the destructive recovery sweep. The serialization point is now
-        # a separate O_EXCL claim file: exactly one breaker holds the
-        # claim; while the stale lock still exists no competitor can
-        # create a new lock (the O_EXCL create above fails on the stale
-        # file), and no competitor can remove it (removal requires the
-        # claim) — so the claim holder's re-stat + remove is race-free.
-        claim = f"{lock}.breaking"
-        # A stale claim means a breaker crashed inside the claim window
-        # (milliseconds wide, and only reachable after a compactor crash
-        # in the first place). It is NEVER auto-swept: any remove-by-path
-        # of a competitor's claim reopens the stat-then-remove TOCTOU
-        # this protocol exists to close — two sweepers stat the same
-        # >24h claim, the slower remove() deletes the faster one's FRESH
-        # replacement claim, and with two concurrent claim holders the
-        # holder-only lock removal below stops being holder-only (the
-        # ADVICE r6 double-writer interleaving). Rename-aside doesn't
-        # help either: once the winner re-creates a claim at the same
-        # path, a descheduled loser's rename captures the fresh file.
-        # The only race-free acquisition is the bare O_EXCL create, so a
-        # crashed takeover requires one manual rm — the error says so.
-        try:
-            cfd = os.open(claim, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            try:
-                claim_age = time.time() - os.path.getmtime(claim)
-            except OSError:
-                continue  # claim vanished; re-contend from the top
-            if claim_age >= stale_lock_seconds:
-                raise RuntimeError(
-                    f"compact() found a stale takeover claim on {path} "
-                    f"({claim}, {claim_age:.0f}s old) — a previous "
-                    f"stale-lock takeover crashed mid-flight. Verify no "
-                    f"compactor is running, then remove the claim file "
-                    f"manually and retry; it is never auto-swept because "
-                    f"remove-by-path cannot be made one-winner"
-                )
-            raise RuntimeError(
-                f"compact() stale-lock takeover already in progress on "
-                f"{path} (claim {claim}); single-writer required"
-            )
-        try:
-            os.close(cfd)
-            try:
-                still_stale = (
-                    time.time() - os.path.getmtime(lock)
-                ) >= stale_lock_seconds
-            except OSError:
-                still_stale = False  # lock vanished; nothing to break
-            if still_stale:
-                try:
-                    os.remove(lock)
-                except FileNotFoundError:
-                    pass
-        finally:
-            try:
-                os.remove(claim)
-            except OSError:
-                pass
-        # re-contend the O_EXCL create: a losing racer now sees either
-        # the winner's fresh lock (RuntimeError) or an open field
-
-    try:
-        # crash recovery from a previous interrupted swap: ``path``
-        # missing but a completed __old_* snapshot present → restore it;
-        # any leftover __compact_* temp (crash before the first rename)
-        # is dead weight either way → sweep it. Safe under the lock: no
-        # other compactor can own these siblings now.
-        if not os.path.exists(path):
-            stranded = sorted(glob.glob(f"{path}__old_*"))
-            if stranded:
-                os.rename(stranded[0], path)
-        for leftover in glob.glob(f"{path}__compact_*") + glob.glob(
-            f"{path}__old_*"
-        ):
-            # lock-protocol files (the lock itself, a racer's transient
-            # .breaking claim) are NEVER ours to sweep — a crashed
-            # breaker's stale claim is manual-cleanup-only by design
-            if not leftover.startswith(lock):
-                shutil.rmtree(leftover, ignore_errors=True)
-        return _compact_locked(spark, path, target_bytes, preserve_sort)
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
-
-
-def _compact_locked(
-    spark,
-    path: str,
-    target_bytes: int,
-    preserve_sort: str | None,
-) -> dict:
-    import glob
-    import os
-    import shutil
-    import uuid
-
-    files = glob.glob(os.path.join(path, "*.parquet"))
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total // target_bytes))
-    df = spark.read.parquet(path)
-    tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
-    if preserve_sort:
-        (
-            df.repartitionByRange(n_out, preserve_sort)
-            .sortWithinPartitions(preserve_sort)
-            .write.parquet(tmp)
-        )
-    else:
-        df.coalesce(n_out).write.parquet(tmp)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return {
-        "files_before": len(files),
-        "files_after": len(glob.glob(os.path.join(path, "*.parquet"))),
-        "bytes": total,
-    }
-
-
 def file_skip_fraction(path: str, col: str, lo, hi) -> float:
     """Fraction of parquet row groups a ``col BETWEEN lo AND hi`` scan
     can SKIP from footer min-max stats alone (1.0 = everything skipped).

@@ -93,9 +93,3 @@ def stream_events(spark: SparkSession, src: str) -> DataFrame:
     fields = [T.StructField(f.name, f.dataType, True) for f in raw]
     stream = spark.readStream.schema(T.StructType(fields)).parquet(src)
     return convert_nanos_ts(stream)
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register testdata tables as temp views for ``spark.sql`` queries."""
-    for name in names or TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -218,10 +218,9 @@ def stream_cep_peaks(
     Rows ARE sorted within each batch, but a within-watermark late row
     landing in a later batch is appended after the stored suffix, so
     its neighborhood is evaluated out of order — the standard CEP
-    trade-off. The fully late-tolerant form is
-    :func:`stream_cep_peaks_buffered` below: same automaton, rows
-    buffered per key and fed only once the watermark finalizes them,
-    at the cost of O(watermark-span) state per key instead of O(1).
+    trade-off, taken for O(1) state per key (a late-tolerant form would
+    buffer each key's rows until the watermark finalizes them, at
+    O(watermark-span) state per key).
 
     The state is the minimal suffix the pattern needs: the last ≤ 3
     (value, type) pairs plus how many are real. A peak at position p is
@@ -297,7 +296,7 @@ def _cep_kernel():
     (module-level functions pickle by reference, and the driver's
     harness runs workers without this package on their PYTHONPATH —
     the same by-value-closure rule every other worker-side kernel in
-    this package follows, see stateful.py)."""
+    this package follows)."""
 
     def cep_advance(tail, vals, types):
         # Advance the automaton over a key's next in-order values.
@@ -306,8 +305,7 @@ def _cep_kernel():
         # (delta counts by type, new tail). A peak at position p is
         # counted only when its successor is fed, so the final value
         # ever fed stays pending — the batch operator's lead()-null
-        # semantics. Shared by the O(1)-state operator (in-order feeds)
-        # and the watermark-buffered one (finalized-row feeds).
+        # semantics.
         #
         # numpy slices, not pandas Series/shift: this runs once per KEY
         # per micro-batch, and with ~30k user keys the per-call Series
@@ -362,122 +360,6 @@ def _cep_kernel():
         return pd.DataFrame({"user_id": [], "event_type": [], "n_peaks": []})
 
     return cep_advance, cep_out_frame
-
-
-def stream_cep_peaks_buffered(
-    events: DataFrame,
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Late-tolerant streaming CEP: the same rise-rise-peak automaton
-    as :func:`stream_cep_peaks`, but each key BUFFERS its rows in state
-    and feeds the automaton only rows the watermark has finalized — so
-    out-of-order arrival WITHIN the watermark is re-sorted into true
-    (ts, event_id) order before any pattern decision, and the result
-    equals the batch operator on whatever prefix the watermark has
-    passed. This is the Flink-CEP event-time discipline: correctness
-    under lateness bought with O(watermark-span × per-key rate) state
-    instead of the in-order variant's O(1).
-
-    Mechanics per micro-batch: new rows merge into the key's buffer
-    (rows at or behind the already-fed frontier are too late even for
-    the buffer and are dropped — the watermark contract); the buffer
-    sorts; every row with event time strictly below the current
-    watermark is fed to the shared automaton in order (a fed row's peak
-    still confirms only when its successor is fed, possibly next
-    batch); the rest stay buffered. A non-empty buffer arms an
-    EVENT-TIME TIMEOUT at its earliest row, so the key is re-invoked
-    when the watermark finalizes buffered rows even if no new data for
-    that key ever arrives — without it, a quiet key's buffer would sit
-    unprocessed forever (groups are only invoked on data or timeout).
-    Emitted rows are per-batch deltas, exactly like the in-order
-    operator."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "user_id bigint, event_type string, n_peaks bigint"
-    state_schema = (
-        "bus array<bigint>, beid array<bigint>, btyp array<string>,"
-        " bval array<double>,"
-        " v2 double, v1 double, v0 double, t0 string, have int,"
-        " f_us bigint, f_eid bigint"
-    )
-    cep_advance, cep_out_frame = _cep_kernel()
-    # same Arrow-transfer pruning as the in-order operator above
-    events = events.select("user_id", ts_col, "event_id", "event_type", "value")
-
-    def update(key, pdf_iter, state: GroupState):
-        if state.exists:
-            bus, beid, btyp, bval, v2, v1, v0, t0, have, f_us, f_eid = (
-                state.get
-            )
-            buf = list(zip(bus, beid, btyp, bval))
-        else:
-            buf = []
-            v2 = v1 = v0 = None
-            t0 = None
-            have = 0
-            f_us, f_eid = -1, -1
-        tail = (v2, v1, v0, t0, have)
-        for pdf in pdf_iter:
-            us = (pdf[ts_col].astype("int64") // 1000).tolist()
-            buf.extend(
-                zip(
-                    us,
-                    pdf["event_id"].tolist(),
-                    pdf["event_type"].tolist(),
-                    [float(x) for x in pdf["value"]],
-                )
-            )
-        # drop rows at or behind the fed frontier (beyond-watermark late)
-        buf = [r for r in buf if (r[0], r[1]) > (f_us, f_eid)]
-        buf.sort()
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        k = 0
-        while k < len(buf) and buf[k][0] < wm_us:
-            k += 1
-        ready, buf = buf[:k], buf[k:]
-        counts: dict[str, int] = {}
-        if ready:
-            counts, tail = cep_advance(
-                tail, [r[3] for r in ready], [r[2] for r in ready]
-            )
-            f_us, f_eid = ready[-1][0], ready[-1][1]
-        state.update(
-            (
-                [r[0] for r in buf],
-                [r[1] for r in buf],
-                [r[2] for r in buf],
-                [r[3] for r in buf],
-                tail[0],
-                tail[1],
-                tail[2],
-                tail[3],
-                tail[4],
-                f_us,
-                f_eid,
-            )
-        )
-        if buf:
-            # re-invoke this key when the watermark passes the earliest
-            # buffered row (timeouts reset on every invocation; must be
-            # strictly ahead of the current watermark)
-            state.setTimeoutTimestamp(
-                max(buf[0][0] // 1000, wm_us // 1000 + 1)
-            )
-        yield cep_out_frame(pd, key[0], counts)
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            out_schema,
-            state_schema,
-            "update",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
 
 
 def stream_stream_join_left_outer(

@@ -5,7 +5,7 @@ our factory), imports the contract module, runs entry(), then every
 queries()[name] at sf0.01 against oracle_sql()[name] via DuckDB with
 row-count + column + exact value comparison.
 
-Usage: python scripts/drive_contract.py [--shuffle SEED] [--sf DIR]
+Usage: python scripts/drive_contract.py [--shuffle SEED] [--sf DIR] [--only Q1,Q2]
   --shuffle SEED runs the catalog in a seeded RANDOM order instead of
   sorted — an order-dependence sweep: any query whose result depends on
   session state another query leaves behind (conf churn, temp views,
@@ -15,9 +15,15 @@ Usage: python scripts/drive_contract.py [--shuffle SEED] [--sf DIR]
   driver's gate); sf0.1 is the 10x stress form — quadratic brute-force
   oracles take minutes there, so it is an occasional artifact run, not
   the per-change gate.
+  --only Q1,Q2 checks just the named queries (comma-separated; an unknown
+  name aborts before the comparisons start).
+
+The script imports ``__spark_entry__`` from its own checkout (the parent
+of ``scripts/``), so it can run from any working directory.
 """
 
 import math
+import os
 import random
 import sys
 import time
@@ -25,7 +31,7 @@ import time
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as contract
 
 SF_DIR = "/root/testdata/sf0.01"

@@ -3,6 +3,10 @@ parity review depend on."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
+import aws_vpcflowlogs_parquet_spark as pkg
 from aws_vpcflowlogs_parquet_spark.plans.catalog import ORACLES, QUERIES
 
 
@@ -49,3 +53,134 @@ def test_readme_query_count_matches_catalog():
     assert counts, "README should state the catalog size"
     for c in counts:
         assert int(c) == len(QUERIES), (c, len(QUERIES))
+
+
+# Reachability: every top-level function or class in the package is
+# reached from an entry point — a registered query builder, the CLI
+# (``__main__.main``), code that runs at import, or a name used by
+# ``scripts/``, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``.
+# Code only tests reach is a second copy of a job the catalog does, or
+# dead weight; delete it with its tests instead of allow-listing it.
+# The allow-list holds only test references and instruments for reached
+# code, each with its reason.
+_PKG = "aws_vpcflowlogs_parquet_spark"
+_DECODE = "reference decoder: resize_images' inlined header parse must agree with it"
+_TEST_ONLY_ALLOWED = {
+    f"{_PKG}.operators.layout.file_skip_fraction":
+        "footer-stats instrument that measures optimize_layout's skipping",
+    f"{_PKG}.caching.tracked_cache_count":
+        "instrument for the cache release the @register wrapper performs",
+    f"{_PKG}.functions.casts.zero_default_cast":
+        "Column twin the parser's zero_default_cast_sql is checked against",
+    f"{_PKG}.operators.ranks.with_global_rank":
+        "rank form of the _ranged/_offsets machinery with_prefix_sum runs",
+    f"{_PKG}.operators.multimodal.DecodedImage": _DECODE,
+    f"{_PKG}.operators.multimodal.decode_image": _DECODE,
+    f"{_PKG}.operators.multimodal._decode_pnm": _DECODE,
+    f"{_PKG}.operators.multimodal._decode_bmp": _DECODE,
+    f"{_PKG}.operators.multimodal.resize_nearest": _DECODE,
+    f"{_PKG}.operators.multimodal.encode_ppm": _DECODE,
+}
+
+
+def _package_sources():
+    root = Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root.parent).with_suffix("")
+        parts = rel.parts[:-1] if rel.name == "__init__" else rel.parts
+        yield ".".join(parts), path.name == "__init__.py", path
+
+
+def _import_target(mod: str, is_pkg: bool, node) -> str:
+    if not node.level:
+        return node.module or ""
+    base = mod.split(".")
+    base = base[: len(base) - node.level + (1 if is_pkg else 0)]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
+def _names_used(tree) -> set[str]:
+    used = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            used.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            used.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            used.update(a.name for a in n.names)
+    return used
+
+
+def _unreached() -> set[str]:
+    defs, aliases, code = {}, {}, []
+    # the CLI, then every registered query builder
+    roots = {f"{_PKG}.__main__.main"}
+    top_level = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    for mod, is_pkg, path in _package_sources():
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        # alias -> qualified targets, from every ``from … import`` in the
+        # module (function-local ones included)
+        al = aliases[mod] = {}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom):
+                target = _import_target(mod, is_pkg, n)
+                for a in n.names:
+                    al.setdefault(a.asname or a.name, set()).add(f"{target}.{a.name}")
+        for stmt in tree.body:
+            if isinstance(stmt, top_level):
+                defs[f"{mod}.{stmt.name}"] = (mod, stmt)
+                # decorators run at import; @register marks a query builder
+                code += [(mod, d) for d in stmt.decorator_list]
+                if any(
+                    isinstance(d, ast.Call) and getattr(d.func, "id", "") == "register"
+                    for d in stmt.decorator_list
+                ):
+                    roots.add(f"{mod}.{stmt.name}")
+            elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                code.append((mod, stmt))  # runs at import; re-exports do not count
+
+    by_name = {}
+    for q in defs:
+        by_name.setdefault(q.rsplit(".", 1)[1], set()).add(q)
+
+    def resolve(q: str, seen=()) -> set[str]:
+        # follow ``from .x import y`` re-export chains to the defining module
+        if q in defs or q in seen:
+            return {q} & defs.keys()
+        mod, name = q.rsplit(".", 1)
+        return set().union(*(resolve(t, (*seen, q)) for t in aliases.get(mod, {}).get(name, ())))
+
+    def refs(mod: str, node) -> set[str]:
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out |= resolve(f"{mod}.{n.id}")
+            elif isinstance(n, ast.Attribute):  # x.f: any def named f
+                out |= by_name.get(n.attr, set())
+        return out
+
+    repo = Path(__file__).resolve().parent.parent
+    entry_files = [
+        *sorted((repo / "scripts").glob("*.py")),
+        *sorted((repo / "perfbench").glob("*.py")),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    for path in entry_files:
+        for name in _names_used(ast.parse(path.read_text(encoding="utf-8"))):
+            roots |= by_name.get(name, set())
+    todo = set().union(roots, *(refs(mod, node) for mod, node in code))
+    reached = set()
+    while todo:
+        q = todo.pop()
+        reached.add(q)
+        todo |= refs(*defs[q]) - reached
+    return defs.keys() - reached
+
+
+def test_every_package_function_has_an_entry_point_caller():
+    unreached = _unreached()
+    assert not unreached - _TEST_ONLY_ALLOWED.keys(), sorted(unreached - _TEST_ONLY_ALLOWED.keys())
+    # the allow-list stays exact: an entry that gained a caller or was
+    # deleted leaves it
+    assert _TEST_ONLY_ALLOWED.keys() <= unreached, sorted(_TEST_ONLY_ALLOWED.keys() - unreached)

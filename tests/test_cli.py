@@ -56,6 +56,36 @@ def test_cli_convert_is_strict_by_default(spark, tmp_path, capsys):
     assert spark.read.parquet(dst).count() == 1
 
 
+def test_cli_event_keeps_every_object_of_a_partition(spark, tmp_path, capsys, monkeypatch):
+    # two S3 events, one object each, both landing in the same (dt,
+    # account): the second event's overwrite must not drop the first
+    # object's row (per-source-object idempotence, convert.go:86)
+    bucket = tmp_path / "bucket"
+    (bucket / "logs").mkdir(parents=True)
+    monkeypatch.setenv("S3_BUCKET", str(tmp_path / "warehouse"))
+    monkeypatch.setenv("ATHENA_TABLE_NAME", "flowlogs_cli_event_test")
+    printed = []
+    try:
+        for name, sport in (("a.log", "20641"), ("b.log", "20642")):
+            (bucket / "logs" / name).write_text("\n".join([HEADER, LINE.replace("20641", sport)]))
+            event = tmp_path / f"{name}.json"
+            event.write_text(json.dumps({"Records": [{"s3": {
+                "bucket": {"name": str(bucket)}, "object": {"key": f"logs/{name}"},
+            }}]}))
+            assert main(["event", str(event)]) == 0
+            printed += capsys.readouterr().out.splitlines()
+        ports = spark.sql(
+            "SELECT srcport FROM flowlogs_cli_event_test"
+            " WHERE dt='2018-11-04' AND account='111111111111'"
+        ).collect()
+        assert sorted(r["srcport"] for r in ports) == [20641, 20642]
+        keys = [l for l in printed if l.startswith("dt=")]
+        assert len(keys) == 2 and len(set(keys)) == 2, printed
+        assert all(l.startswith("dt=2018-11-04/account=111111111111/src=") for l in keys)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS flowlogs_cli_event_test")
+
+
 def test_cli_query_and_profile(capsys):
     rc = main(["query", "q_topk", "--sf", SF_DIR, "--limit", "3"])
     assert rc == 0

@@ -461,10 +461,13 @@ def test_run_event_end_to_end(spark, tmp_path):
     )
     try:
         keys = run_event(spark, event, cfg)
-        assert keys == [
+        # (dt, account, src): the env-bound handler partitions by source
+        # object, and both keys come from the one object x.log
+        assert [k[:2] for k in keys] == [
             ("2018-11-04", "111111111111"),
             ("2018-11-05", "222222222222"),
         ]
+        assert all(len(k) == 3 for k in keys) and len({k[2] for k in keys}) == 1
         n = spark.sql(
             "SELECT count(*) AS n FROM flowlogs_h_test WHERE dt='2018-11-05'"
         ).collect()[0]["n"]

@@ -70,22 +70,6 @@ def test_zorder_write_is_single_shuffle_and_schema_stable(spark, tmp_path):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_compact_merges_small_files(spark, tmp_path):
-    from aws_vpcflowlogs_parquet_spark.operators.layout import compact
-
-    pts = _pts(spark)
-    path = str(tmp_path / "frag")
-    pts.repartition(32).write.parquet(path)  # fragmented sink output
-    before = spark.read.parquet(path)
-    n_rows, checksum = before.count(), before.agg(F.sum("event_id")).collect()[0][0]
-    stats = compact(spark, path, target_bytes=10 * 1024 * 1024)
-    assert stats["files_before"] == 32
-    assert stats["files_after"] <= 2
-    after = spark.read.parquet(path)
-    assert after.count() == n_rows
-    assert after.agg(F.sum("event_id")).collect()[0][0] == checksum
-
-
 def test_zorder_key_never_touches_sign_bit(spark):
     # 4 columns at the default 16 bits/dim would land a bit at position
     # 63 (bigint sign): the clamp (bits = 63 // n_cols) must keep every
@@ -114,138 +98,3 @@ def test_zorder_clamp_keeps_curve_locality(spark):
         ).orderBy("k").collect()
     ]
     assert keys[0] < keys[1]
-
-
-def test_compact_recovers_from_interrupted_swap(spark, tmp_path):
-    """Crash window between the two swap renames: path gone, __old_*
-    stranded. A subsequent compact() must restore the snapshot, sweep
-    temps, and complete normally (ADVICE r3)."""
-    import os
-
-    from aws_vpcflowlogs_parquet_spark.operators.layout import compact
-
-    pts = _pts(spark)
-    path = str(tmp_path / "t")
-    pts.repartition(8).write.parquet(path)
-    n_rows = spark.read.parquet(path).count()
-    # simulate the crash: first rename done, second never happened, plus
-    # a stale temp dir from the dead run
-    os.rename(path, f"{path}__old_deadbeef")
-    os.makedirs(f"{path}__compact_deadbeef")
-    stats = compact(spark, path, target_bytes=10 * 1024 * 1024)
-    assert stats["files_before"] == 8
-    assert spark.read.parquet(path).count() == n_rows
-    import glob
-
-    assert glob.glob(f"{path}__*") == []  # no strays left behind
-
-
-def test_compact_preserves_clustering(spark, tmp_path):
-    from aws_vpcflowlogs_parquet_spark.operators.layout import compact
-
-    pts = _pts(spark)
-    path = str(tmp_path / "clustered")
-    optimize_layout(pts, path, cluster_by=["x"], n_files=16)
-    assert file_skip_fraction(path, "x", 10, 20) > 0.5
-    compact(spark, path, target_bytes=20 * 1024, preserve_sort="x")
-    # the rewrite must keep the layout's skipping property (fewer, larger
-    # files → each covers a wider range, so the bar is lower than above)
-    assert file_skip_fraction(path, "x", 10, 20) >= 0.5
-
-
-def test_compact_rejects_concurrent_run_and_breaks_stale_lock(spark, tmp_path):
-    """ADVICE r4: the startup sweep deletes __compact_*/__old_* siblings,
-    which under a concurrent compactor would be the other run's live
-    state — so compact() must be single-writer. A fresh lock file makes
-    a second invocation fail fast; a stale lock (crashed run) is broken
-    and the compaction proceeds."""
-    import os
-    import time
-
-    import pytest as _pytest
-
-    from aws_vpcflowlogs_parquet_spark.operators.layout import compact
-
-    pts = _pts(spark)
-    path = str(tmp_path / "locked")
-    pts.repartition(4).write.parquet(path)
-
-    lock = f"{path}__compact_lock"
-    with open(lock, "w") as f:
-        f.write("12345")
-    with _pytest.raises(RuntimeError, match="already running"):
-        compact(spark, path, target_bytes=10 * 1024 * 1024)
-    assert os.path.exists(lock)  # a held lock is NOT cleaned up by the loser
-
-    # age the lock past the staleness threshold → broken and taken over
-    old = time.time() - 25 * 3600
-    os.utime(lock, (old, old))
-    stats = compact(spark, path, target_bytes=10 * 1024 * 1024)
-    assert stats["files_before"] == 4
-    assert not os.path.exists(lock)  # released after a successful run
-
-
-def test_compact_stale_lock_takeover_is_atomic(spark, tmp_path):
-    """ADVICE r5 (+ r6 hardening): breaking a stale lock must be a
-    one-winner operation. The serialization point is an O_EXCL
-    ``.breaking`` claim file — only the claim holder may remove the
-    stale lock (rename-by-path had a TOCTOU hole: a descheduled breaker
-    could rename a competitor's FRESH lock aside). A fresh claim makes
-    a racing breaker fail fast; a STALE claim (crashed breaker) is
-    never auto-swept — remove-by-path of the shared claim path cannot
-    be made one-winner (ADVICE r6) — so it demands one manual rm, and
-    the takeover proceeds after that cleanup."""
-    import os
-    import time
-
-    import pytest as _pytest
-
-    from aws_vpcflowlogs_parquet_spark.operators.layout import compact
-
-    pts = _pts(spark)
-    path = str(tmp_path / "atomic")
-    pts.repartition(4).write.parquet(path)
-    lock = f"{path}__compact_lock"
-    claim = f"{lock}.breaking"
-
-    # a crashed breaker's stale claim + a stale lock: fail fast with
-    # the manual-cleanup instruction, touching NEITHER file
-    old = time.time() - 25 * 3600
-    with open(lock, "w") as f:
-        f.write("999")
-    os.utime(lock, (old, old))
-    with open(claim, "w") as f:
-        f.write("998")
-    os.utime(claim, (old, old))
-    with _pytest.raises(RuntimeError, match="remove the claim file"):
-        compact(spark, path, target_bytes=10 * 1024 * 1024)
-    assert os.path.exists(lock) and os.path.exists(claim)
-
-    # after the manual rm the error demanded, the takeover proceeds
-    os.remove(claim)
-    stats = compact(spark, path, target_bytes=10 * 1024 * 1024)
-    assert stats["files_before"] == 4
-    assert not os.path.exists(lock)
-    assert not os.path.exists(claim)
-
-    # an ACTIVE breaker (fresh claim + stale lock): the racer must fail
-    # fast and leave both files for the claim holder
-    with open(lock, "w") as f:
-        f.write("999")
-    os.utime(lock, (old, old))
-    with open(claim, "w") as f:
-        f.write("winner")
-    with _pytest.raises(RuntimeError, match="takeover already in progress"):
-        compact(spark, path, target_bytes=10 * 1024 * 1024)
-    assert os.path.exists(lock) and os.path.exists(claim)
-    os.remove(claim)
-    os.remove(lock)
-
-    # the loser path: a FRESH lock (what a losing breaker observes after
-    # the winner re-creates) fails fast and leaves the winner's lock
-    with open(lock, "w") as f:
-        f.write("win")
-    with _pytest.raises(RuntimeError, match="already running"):
-        compact(spark, path, target_bytes=10 * 1024 * 1024)
-    assert os.path.exists(lock)
-    os.remove(lock)

@@ -1,5 +1,5 @@
-"""Scale-posture tests: small-file compaction, partition pruning at the
-scan, and the multimodal mapInPandas plumbing (resize / frame sampling).
+"""Scale-posture tests: partition pruning at the scan, and the multimodal
+mapInPandas plumbing (resize / frame sampling).
 
 These assert the *plan and layout properties* that carry to 100 TB, not
 just row values.
@@ -7,12 +7,7 @@ just row values.
 
 from __future__ import annotations
 
-import glob
-
-from aws_vpcflowlogs_parquet_spark.operators.convert import (
-    compact_partitions,
-    convert_flowlogs,
-)
+from aws_vpcflowlogs_parquet_spark.operators.convert import convert_flowlogs
 from aws_vpcflowlogs_parquet_spark.operators.multimodal import (
     resize_images,
     sample_frames,
@@ -35,36 +30,10 @@ def _mk_line(acct: str, start: int, sport: int) -> str:
     )
 
 
-def _write_batch(path, n, acct="111111111111", start=1541375637):
-    path.write_text(
-        "\n".join([HEADER] + [_mk_line(acct, start, i + 1) for i in range(n)])
-    )
-
-
 def test_codegen_cache_sized_to_working_set(spark):
     # static conf: only the session factory can set it
     conf = spark.conf.get("spark.sql.codegen.cache.maxEntries")
     assert int(conf) == CODEGEN_CACHE_ENTRIES
-
-
-def test_compact_partitions_one_file_per_key(spark, tmp_path):
-    src1, src2 = tmp_path / "a.log", tmp_path / "b.log"
-    _write_batch(src1, 5)
-    _write_batch(src2, 7)
-    dst = str(tmp_path / "table")
-    # two appends → ≥2 files in the partition (the reference's
-    # one-file-per-source-file behavior, convert.go:86)
-    convert_flowlogs(spark, str(src1), dst)
-    convert_flowlogs(spark, str(src2), dst, overwrite_partitions=False)
-    part_glob = f"{dst}/dt=2018-11-04/account=111111111111/*.parquet"
-    assert len(glob.glob(part_glob)) >= 2
-
-    compacted = str(tmp_path / "compacted")
-    n_parts = compact_partitions(spark, dst, compacted)
-    assert n_parts == 1
-    files = glob.glob(f"{compacted}/dt=2018-11-04/account=111111111111/*.parquet")
-    assert len(files) == 1
-    assert spark.read.parquet(compacted).count() == 12
 
 
 def test_partition_pruning_reaches_scan(spark, tmp_path):

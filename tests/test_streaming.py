@@ -376,136 +376,6 @@ def test_stateful_agg_recovers_state_across_restart(spark, tmp_path):
     assert expected.exceptAll(got).count() == 0
 
 
-def test_incremental_dedup_stream_forever_state(spark, tmp_path):
-    # forever-dedup via foreachBatch + lake-resident key state: keys seen
-    # in run 1 stay deduped in run 2 (beyond any watermark horizon), and
-    # the result equals the batch keep-first over all data when arrival
-    # order follows event time
-    import glob
-
-    from aws_vpcflowlogs_parquet_spark.operators.dedup import keep_first_dedup
-    from aws_vpcflowlogs_parquet_spark.streaming.upsert import (
-        start_incremental_dedup_stream,
-    )
-
-    src = tmp_path / "inc_src"
-    src.mkdir()
-    out, state, ckpt = (
-        str(tmp_path / "out"), str(tmp_path / "state"), str(tmp_path / "ckpt")
-    )
-    batch = load_table(spark, SF_DIR, "events")
-    cut = batch.approxQuantile("event_id", [0.5], 0.0)[0]
-    early = batch.filter(F.col("ts") < F.lit("2022-06-01").cast("timestamp"))
-    if early.count() == 0 or early.count() == batch.count():
-        # fall back to an id split if the ts range doesn't straddle the cut
-        early = batch.filter(F.col("event_id") <= cut)
-    late = batch.exceptAll(early)
-
-    def stage(df, name):
-        tmp = str(tmp_path / f"_iw_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], str(src / name))
-
-    keys, order = ["user_id", "event_type"], ["ts", "event_id"]
-    stage(early.orderBy(*order), "events.parquet")
-    q = start_incremental_dedup_stream(
-        spark, stream_events(spark, str(src)), out, state, ckpt, keys, order
-    )
-    q.awaitTermination()
-    n_run1 = spark.read.parquet(out).count()
-    assert n_run1 == early.select(*keys).distinct().count()
-
-    stage(late.orderBy(*order), "late.parquet")
-    q2 = start_incremental_dedup_stream(
-        spark, stream_events(spark, str(src)), out, state, ckpt, keys, order
-    )
-    q2.awaitTermination()
-    got = spark.read.parquet(out)
-    assert got.count() == batch.select(*keys).distinct().count()
-    # arrival order == event-time order here, so the incremental result
-    # must equal the global batch keep-first row-for-row
-    expected = keep_first_dedup(batch, keys, order).select(
-        "event_id", *keys
-    )
-    assert got.select("event_id", *keys).exceptAll(expected).count() == 0
-
-
-def test_incremental_dedup_state_scheme_versioned(spark, tmp_path):
-    # ADVICE r4: a state table written under an older key-hash scheme
-    # must make the stream FAIL FAST, not silently re-admit duplicates.
-    # Run 1 stamps the marker; a forged older marker aborts run 2; the
-    # current marker lets run 2 proceed.
-    import glob
-    import os
-
-    from aws_vpcflowlogs_parquet_spark.streaming.upsert import (
-        _KEY_SCHEME,
-        start_incremental_dedup_stream,
-    )
-
-    src = tmp_path / "scheme_src"
-    src.mkdir()
-    out, state, ckpt = (
-        str(tmp_path / "s_out"), str(tmp_path / "s_state"), str(tmp_path / "s_ckpt")
-    )
-    batch = load_table(spark, SF_DIR, "events").limit(200)
-
-    def stage(df, name):
-        tmp = str(tmp_path / f"_sw_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        shutil.move(glob.glob(f"{tmp}/part-*.parquet")[0], str(src / name))
-
-    keys, order = ["user_id", "event_type"], ["ts", "event_id"]
-    stage(batch, "events.parquet")
-    q = start_incremental_dedup_stream(
-        spark, stream_events(spark, str(src)), out, state, ckpt, keys, order
-    )
-    q.awaitTermination()
-
-    marker = os.path.join(state, "_key_scheme")
-    # lazily stamped on the NEXT state read; force it now via a 2nd batch
-    stage(batch, "b.parquet")
-    q2 = start_incremental_dedup_stream(
-        spark, stream_events(spark, str(src)), out, state, ckpt, keys, order
-    )
-    q2.awaitTermination()
-    assert open(marker).read().strip() == _KEY_SCHEME
-
-    # forge an older scheme → the stream must abort, not re-admit
-    # (drop the Hadoop LocalFS checksum sidecar our out-of-band write
-    # just invalidated; a real old-engine state would have a matching one)
-    with open(marker, "w") as f:
-        f.write("v1-md5-concat_ws")
-    crc = os.path.join(state, "._key_scheme.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    stage(batch, "c.parquet")
-    q3 = start_incremental_dedup_stream(
-        spark, stream_events(spark, str(src)), out, state, ckpt, keys, order
-    )
-    import pytest as _pytest
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    with _pytest.raises(StreamingQueryException, match="key scheme"):
-        q3.awaitTermination()
-
-
-def test_incremental_dedup_key_hash_null_safe(spark):
-    # concat_ws would have collapsed ('a', NULL), (NULL, 'a') and
-    # ('a', 'a') onto colliding hashes, silently anti-joining live rows
-    # away (ADVICE r3); the struct→json encoding must keep them distinct
-    from aws_vpcflowlogs_parquet_spark.streaming.upsert import _key_hash
-
-    df = spark.createDataFrame(
-        [("a", None), (None, "a"), ("a", "a"), ("a", None)],
-        "k1 string, k2 string",
-    )
-    hashes = [r["h"] for r in df.select(_key_hash(["k1", "k2"]).alias("h")).collect()]
-    assert len(set(hashes)) == 3  # 3 distinct keys
-    assert hashes[0] == hashes[3]  # identical keys still collide (dedup works)
-
-
 def test_watermark_drops_late_rows(spark, tmp_path):
     # the negative Kappa case: rows arriving with event times older than
     # the watermark horizon must be DROPPED by the streaming aggregation
@@ -612,101 +482,13 @@ def test_stream_cep_confirms_peaks_across_batches(spark, tmp_path):
         q.stop()
 
 
-def test_stream_cep_buffered_reorders_late_rows(spark, tmp_path):
-    # the watermark-buffered CEP must produce the BATCH answer even when
-    # a peak-deciding row arrives a batch late and out of order — the
-    # case the O(1)-state variant documents as its precondition limit.
-    # user 1's true series (minute, value): (0,1) (1,2) (2,5) (3,3)
-    # (4,4) (5,6) (6,2) → peaks at minute 2 (type A) and minute 5 (B).
-    # The minute-2 row is DELIVERED LATE (second file), inside the
-    # 30-minute watermark; sentinel user 99 events only push the
-    # watermark (flat values → never a peak).
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from aws_vpcflowlogs_parquet_spark.streaming.windows import (
-        stream_cep_peaks_buffered,
-    )
-
-    base_us = 1_700_000_000_000_000
-
-    def events_table(rows):
-        # rows: (event_id, minute, user_id, event_type, value)
-        return pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array(
-                    [base_us + r[1] * 60_000_000 for r in rows],
-                    pa.timestamp("us"),
-                ),
-                "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                "event_type": pa.array([r[3] for r in rows], pa.string()),
-                "value": pa.array([float(r[4]) for r in rows], pa.float64()),
-                "props": pa.array(["{}"] * len(rows), pa.string()),
-            }
-        )
-
-    src = tmp_path / "cepb_src"
-    src.mkdir()
-    pq.write_table(
-        events_table(
-            [
-                (10, 0, 1, "A", 1.0),
-                (11, 1, 1, "A", 2.0),
-                # minute-2 row missing — arrives in file 2
-                (13, 3, 1, "A", 3.0),
-                (14, 4, 1, "B", 4.0),
-                (15, 5, 1, "B", 6.0),
-                (16, 6, 1, "A", 2.0),
-                (90, 31, 99, "Z", 0.0),  # watermark pusher (wm → 1 min)
-            ]
-        ),
-        src / "events.parquet",
-    )
-    stream = stream_events(spark, str(src))
-    out = stream_cep_peaks_buffered(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("cepb_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # late but within-watermark: the first peak's own row
-        pq.write_table(
-            events_table(
-                [
-                    (12, 2, 1, "A", 5.0),
-                    (91, 37, 99, "Z", 0.0),  # wm → 7 min
-                ]
-            ),
-            src / "events2.parquet",
-        )
-        q.processAllAvailable()
-        # final pusher: wm passes every real row → all peaks confirmed
-        pq.write_table(
-            events_table([(92, 80, 99, "Z", 0.0)]), src / "events3.parquet"
-        )
-        q.processAllAvailable()
-        got = {
-            (r.event_type, r.n_peaks)
-            for r in spark.sql(
-                "SELECT event_type, CAST(sum(n_peaks) AS BIGINT) AS n_peaks"
-                " FROM cepb_out WHERE user_id = 1 GROUP BY event_type"
-            ).collect()
-        }
-        assert got == {("A", 1), ("B", 1)}
-    finally:
-        q.stop()
-
-
 def test_stream_cep_unbuffered_documents_late_row_miss(spark, tmp_path):
     # the O(1)-state CEP's stated PRECONDITION (windows.py docstring):
     # batch-equivalence requires per-key batch-monotone arrival. This
-    # pins what happens when that precondition is VIOLATED with the
-    # exact feed the buffered twin resolves correctly above: the
-    # minute-2 row delivered a batch late is appended after the stored
+    # pins what happens when that precondition is VIOLATED: user 1's
+    # true series (minute, value) is (0,1) (1,2) (2,5) (3,3) (4,4)
+    # (5,6) (6,2); the minute-2 row, delivered a batch late (inside the
+    # 30-minute watermark), is appended after the stored
     # suffix, so its true peak (1<2<5, next 3<5) is never evaluated in
     # order — the A peak is MISSED (and the out-of-order evaluation
     # creates no false positive either: 6,2,5 is not a rise-rise-peak).
