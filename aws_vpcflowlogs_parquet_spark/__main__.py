@@ -27,6 +27,14 @@ import json
 import sys
 
 
+def _print_keys(keys: list[tuple[str, ...]]) -> None:
+    """One ``dt=…/account=…/src=…`` line per partition key written."""
+    from .schema import PARTITION_COLUMNS
+
+    for key in keys:
+        print("/".join(f"{c}={v}" for c, v in zip(PARTITION_COLUMNS, key)))
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="aws_vpcflowlogs_parquet_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -36,7 +44,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--dst", required=True)
     p.add_argument("--strict", action=argparse.BooleanOptionalAction, default=True,
                    help="fail on a malformed line (default); --no-strict drops it")
-    p.add_argument("--src-partition", action="store_true")
 
     p = sub.add_parser("register", help="register/repair the partitioned table")
     p.add_argument("--table", required=True)
@@ -74,12 +81,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "convert":
         from .operators.convert import convert_flowlogs
 
-        keys = convert_flowlogs(
-            spark, args.src, args.dst,
-            strict=args.strict, src_partition=args.src_partition,
-        )
-        for k in keys:
-            print("/".join(str(x) for x in k))
+        _print_keys(convert_flowlogs(spark, args.src, args.dst, strict=args.strict))
     elif args.cmd == "register":
         from .operators.convert import register_flowlog_table
 
@@ -96,14 +98,10 @@ def main(argv: list[str] | None = None) -> int:
             q.awaitTermination()
     elif args.cmd == "event":
         from .handler import config_from_env, run_event
-        from .operators.convert import partition_columns
 
         with open(args.event) as f:
             event = json.load(f)
-        config = config_from_env()
-        cols = partition_columns(config.src_partition)
-        for key in run_event(spark, event, config):
-            print("/".join(f"{c}={v}" for c, v in zip(cols, key)))
+        _print_keys(run_event(spark, event, config_from_env()))
     elif args.cmd == "query":
         from .plans.catalog import QUERIES
 

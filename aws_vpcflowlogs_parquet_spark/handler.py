@@ -41,19 +41,22 @@ class HandlerConfig:
     dst_path: str  # s3a://{S3_BUCKET}/{S3_PREFIX} or any Hadoop-FS path
     table: str = ""  # {ATHENA_DATABASE_NAME}.{ATHENA_TABLE_NAME}; "" = skip DDL
     strict: bool = True
-    src_partition: bool = False
+    # The table is always partitioned by (dt, account, src): one event's
+    # conversion never touches another object's rows. The field stays so
+    # existing callers that pass True keep working; it is read nowhere.
+    src_partition: bool = True
+
+    def __post_init__(self) -> None:
+        if not self.src_partition:
+            raise ValueError(
+                "src_partition=False asked for the removed 2-level (dt, account) "
+                "layout, whose overwrite dropped earlier objects' rows; the table "
+                "is always partitioned by (dt, account, src)"
+            )
 
 
 def config_from_env(env: dict[str, str] | None = None) -> HandlerConfig:
-    """Bind HandlerConfig from the reference's env vars (main.go:138).
-
-    Binds ``src_partition=True``: each S3 event carries its own objects,
-    and the reference writes one output object per source file
-    (convert.go:86), so one event's conversion never touches another's
-    rows. With the 2-level layout, each event's dynamic overwrite would
-    replace the whole (dt, account) partition, dropping the rows of every
-    earlier object in it.
-    """
+    """Bind HandlerConfig from the reference's env vars (main.go:138)."""
     env = os.environ if env is None else env
     bucket = env.get("S3_BUCKET", "")
     prefix = env.get("S3_PREFIX", "").strip("/")
@@ -67,20 +70,19 @@ def config_from_env(env: dict[str, str] | None = None) -> HandlerConfig:
     return HandlerConfig(
         dst_path=dst.rstrip("/"),
         table=f"{db}.{table}" if db and table else table,
-        src_partition=True,
     )
 
 
 def run_event(
     spark: SparkSession, event: dict | str, config: HandlerConfig
-) -> list[tuple[str, ...]]:
+) -> list[tuple[str, str, str]]:
     """Event → convert → register: the whole reference job, end to end.
 
-    Returns the distinct partition keys written — ``(dt, account)``, plus a
-    trailing ``src`` element with ``config.src_partition``. Events with no
-    interpretable records are a no-op, not an error (main.go:119-123), and
-    so are objects with no data rows (header only): nothing is written
-    and nothing is registered.
+    Returns the distinct ``(dt, account, src)`` partition keys written,
+    one ``src`` per source object. Events with no interpretable records
+    are a no-op, not an error (main.go:119-123), and so are objects with
+    no data rows (header only): nothing is written and nothing is
+    registered.
 
     Strict mode is single-pass (convert_flowlogs docstring): a parse error
     surfaces AFTER the write, so the failing batch's valid rows are already
@@ -94,30 +96,14 @@ def run_event(
         return []
     try:
         keys = convert_flowlogs(
-            spark,
-            [t.path for t in targets],
-            config.dst_path,
-            strict=config.strict,
-            src_partition=config.src_partition,
+            spark, [t.path for t in targets], config.dst_path, strict=config.strict
         )
     except FlowLogParseError as err:
         written = getattr(err, "partition_keys", None)
         if config.table and written:
-            register_flowlog_table(
-                spark,
-                config.table,
-                config.dst_path,
-                partitions=written,
-                src_partitioned=config.src_partition,
-            )
+            register_flowlog_table(spark, config.table, config.dst_path, partitions=written)
         raise
     if config.table and keys:
-        register_flowlog_table(
-            spark,
-            config.table,
-            config.dst_path,
-            partitions=keys,
-            src_partitioned=config.src_partition,
-        )
+        register_flowlog_table(spark, config.table, config.dst_path, partitions=keys)
     return keys
 

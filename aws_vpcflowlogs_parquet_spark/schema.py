@@ -54,9 +54,12 @@ FLOW_SCHEMA = T.StructType(
     [T.StructField(name, dtype, True) for name, (_, dtype) in FLOW_COLUMNS.items()]
 )
 
-# Partition columns of the queryable table (reference template.yml:122-126);
-# values derived from event time + accountid (reference convert.go:13-27).
-PARTITION_COLUMNS = ["dt", "account"]
+# Partition columns of the queryable table (reference template.yml:122-126):
+# dt and account derived from event time + accountid (reference
+# convert.go:13-27), src from the source object, so each object's output
+# is its own partition as each is its own output object in the reference
+# (convert.go:86).
+PARTITION_COLUMNS = ["dt", "account", "src"]
 
 NUM_RAW_TOKENS = len(RAW_FIELDS)  # arity predicate: exactly 14 (flowlog.go:36-40)
 SUPPORTED_VERSION = 2  # version gate (flowlog.go:46-48)

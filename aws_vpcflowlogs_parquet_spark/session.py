@@ -50,9 +50,10 @@ def get_spark(app_name: str = "aws-vpcflowlogs-parquet-spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # dt/account partition values stay STRING (the reference's Glue
-        # table declares them string, template.yml:122-126); inference
-        # would turn dt= dirs into DATE and account= into LONG
+        # dt/account/src partition values stay STRING (the reference's
+        # Glue table declares them string, template.yml:122-126); inference
+        # would turn dt= dirs into DATE and account= (or an all-digit src=)
+        # into LONG
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")

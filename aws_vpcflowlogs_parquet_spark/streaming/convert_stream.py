@@ -4,14 +4,17 @@
 Reference posture: one Lambda invocation per S3 notification, concurrency
 capped at 5 (template.yml:35-37,61-62), errors swallowed → **at-most-once**
 (main.go:77-83). Spark-first posture: a file-source streaming query over
-the drop directory with ``maxFilesPerTrigger`` as the concurrency analogue,
-checkpoint + idempotent dynamic-partition writes → **exactly-once per
-micro-batch** — a deliberate upgrade documented in SURVEY §7.
+the drop directory with ``maxFilesPerTrigger`` as the concurrency analogue.
+Exactly-once needs a replayable source and an idempotent sink: the
+checkpoint's offset log replays a micro-batch whose commit was lost with
+the same files, and the sink overwrites each file's own ``src`` partitions,
+so the replay rewrites the rows it already wrote instead of adding a
+second copy — a deliberate upgrade documented in SURVEY §7.
 
-The per-batch body reuses the exact batch operators (parse → dt/account →
-partitioned parquet; operators/convert.py), so batch and streaming cannot
-drift semantically — the Kappa-architecture property Structured Streaming
-is built around.
+The per-batch body is the batch converter's write body
+(``operators.convert.write_flowlog_partitions``), so batch and
+streaming cannot drift semantically — the Kappa-architecture property
+Structured Streaming is built around.
 """
 
 from __future__ import annotations
@@ -19,14 +22,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.convert import (
-    observe_partition_keys,
-    observed_partition_keys,
-    register_flowlog_table,
-    with_partition_columns,
-    write_partitioned,
-)
-from ..schema import PARTITION_COLUMNS
+from ..operators.convert import register_flowlog_table, write_flowlog_partitions
 from ..sources.flowlog import parse_flowlog_lines
 
 
@@ -52,20 +48,12 @@ def start_flowlog_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(src_dir)
     )
-    parsed = with_partition_columns(parse_flowlog_lines(lines))
+    parsed = parse_flowlog_lines(lines)
 
     def write_batch(batch_df, epoch_id: int) -> None:
-        # partition keys ride the write as a CollectMetrics observation —
-        # the second micro-batch scan the round-1 distinct().collect() paid
-        # is gone (same single-pass contract as the batch converter)
-        batch_df, obs = observe_partition_keys(batch_df, PARTITION_COLUMNS)
-        write_partitioned(
-            batch_df.repartition(*PARTITION_COLUMNS), dst_path, PARTITION_COLUMNS, "append"
-        )
-        if table is not None:
-            keys = observed_partition_keys(obs, PARTITION_COLUMNS)
-            if keys:
-                register_flowlog_table(batch_df.sparkSession, table, dst_path, partitions=keys)
+        keys = write_flowlog_partitions(batch_df, dst_path)
+        if table is not None and keys:
+            register_flowlog_table(batch_df.sparkSession, table, dst_path, partitions=keys)
 
     return (
         parsed.writeStream.foreachBatch(write_batch)

@@ -7,12 +7,13 @@ and publishes no throughput numbers (BASELINE.md). This script measures our
 single-node (local[N]) conversion throughput end-to-end so the judge can
 compare like-for-like:
 
-  stage   — synthesize N realistic v2 flow-log lines (4 accounts × 3 days,
-            2% NODATA '-' rows, a few header lines) with Spark itself and
-            write them as gzipped text shards — the reference's exact input
-            shape (S3GzipLines, convert.go:44).
+  stage   — synthesize N realistic v2 flow-log lines (4 accounts × a
+            3-day span from 23:53 UTC, so 4 UTC dates; 2% NODATA '-' rows,
+            a few header lines) with Spark itself and write them as
+            gzipped text shards — the reference's exact input shape
+            (S3GzipLines, convert.go:44).
   batch   — time `convert_flowlogs` (read.text → codegen parse →
-            dt/account → repartition → partitioned snappy parquet).
+            dt/account/src → partitioned snappy parquet).
   stream  — time the same via `start_flowlog_stream` (file-source
             micro-batches, maxFilesPerTrigger=5 mirroring the reference's
             Lambda concurrency, checkpointed foreachBatch).

@@ -9,6 +9,9 @@ from pathlib import Path
 import aws_vpcflowlogs_parquet_spark as pkg
 from aws_vpcflowlogs_parquet_spark.plans.catalog import ORACLES, QUERIES
 
+# the checkout this test file belongs to, wherever it is run from
+_REPO = Path(__file__).resolve().parent.parent
+
 
 def test_registry_consistent():
     assert set(ORACLES) == set(QUERIES)
@@ -36,7 +39,7 @@ def test_survey_inventory_matches_catalog_exactly():
     # the 1:1 correspondence (both directions) so it cannot drift
     import re
 
-    s = open("/root/repo/SURVEY.md", encoding="utf-8").read()
+    s = (_REPO / "SURVEY.md").read_text(encoding="utf-8")
     sec23 = s.split("### 2.3", 1)[1].split("### 2.4", 1)[0]
     rows = set(re.findall(r"^\| `(q_\w+)`", sec23, re.M))
     assert rows == set(QUERIES), sorted(rows ^ set(QUERIES))
@@ -48,7 +51,7 @@ def test_readme_query_count_matches_catalog():
     # "N queries"/"N-query" mention to len(QUERIES).
     import re
 
-    text = open("/root/repo/README.md", encoding="utf-8").read()
+    text = (_REPO / "README.md").read_text(encoding="utf-8")
     counts = re.findall(r"(\d+)[- ]quer(?:y|ies)", text)
     assert counts, "README should state the catalog size"
     for c in counts:
@@ -159,12 +162,11 @@ def _unreached() -> set[str]:
                 out |= by_name.get(n.attr, set())
         return out
 
-    repo = Path(__file__).resolve().parent.parent
     entry_files = [
-        *sorted((repo / "scripts").glob("*.py")),
-        *sorted((repo / "perfbench").glob("*.py")),
-        repo / "bench.py",
-        repo / "__spark_entry__.py",
+        *sorted((_REPO / "scripts").glob("*.py")),
+        *sorted((_REPO / "perfbench").glob("*.py")),
+        _REPO / "bench.py",
+        _REPO / "__spark_entry__.py",
     ]
     for path in entry_files:
         for name in _names_used(ast.parse(path.read_text(encoding="utf-8"))):

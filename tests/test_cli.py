@@ -31,7 +31,8 @@ def test_cli_convert_and_register(spark, tmp_path, capsys):
     dst = str(tmp_path / "out")
     rc = main(["convert", "--src", str(src), "--dst", dst])
     assert rc == 0
-    assert "2018-11-04/111111111111" in capsys.readouterr().out
+    keys = [l for l in capsys.readouterr().out.splitlines() if l.startswith("dt=")]
+    assert len(keys) == 1 and keys[0].startswith("dt=2018-11-04/account=111111111111/src=")
     rc = main(["register", "--table", "flowlogs_cli_test", "--path", dst])
     assert rc == 0
     try:
@@ -52,7 +53,7 @@ def test_cli_convert_is_strict_by_default(spark, tmp_path, capsys):
         main(["convert", "--src", str(src), "--dst", str(tmp_path / "strict")])
     dst = str(tmp_path / "lenient")
     assert main(["convert", "--src", str(src), "--dst", dst, "--no-strict"]) == 0
-    assert "2018-11-04/111111111111" in capsys.readouterr().out
+    assert "dt=2018-11-04/account=111111111111/src=" in capsys.readouterr().out
     assert spark.read.parquet(dst).count() == 1
 
 

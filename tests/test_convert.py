@@ -51,11 +51,13 @@ def test_round_trip_and_partition_set(spark, tmp_path):
         )
     out = tmp_path / "out"
     keys = convert_flowlogs(spark, str(src), str(out))
-    assert keys == [
+    # (dt, account, src): every key of the one source file carries its src
+    assert [k[:2] for k in keys] == [
         ("2018-11-04", "111111111111"),
         ("2018-11-05", "111111111111"),
         ("2018-11-05", "222222222222"),
     ]
+    assert len({k[2] for k in keys}) == 1
     back = spark.read.parquet(str(out))
     assert back.count() == 4
     # partition columns usable for pruning; data columns intact
@@ -148,7 +150,7 @@ def test_strict_raises_single_pass_and_writes_valid_rows(spark, tmp_path):
     # corrected input converges to the same single row
     src.write_text("\n".join([HEADER, _mk_line("111111111111", DAY1)]))
     keys = convert_flowlogs(spark, str(src), str(out), strict=True)
-    assert keys == [("2018-11-04", "111111111111")]
+    assert [k[:2] for k in keys] == [("2018-11-04", "111111111111")]
     assert spark.read.parquet(str(out)).count() == 1
 
 
@@ -180,11 +182,11 @@ def test_src_partition_preserves_sibling_source_files(spark, tmp_path):
         )
     )
     out = tmp_path / "out"
-    convert_flowlogs(spark, str(f1), str(out), src_partition=True)
-    convert_flowlogs(spark, str(f2), str(out), src_partition=True)
+    convert_flowlogs(spark, str(f1), str(out))
+    convert_flowlogs(spark, str(f2), str(out))
     assert spark.read.parquet(str(out)).count() == 3
     # re-run of f1 alone: sibling f2 rows intact, no duplicates
-    convert_flowlogs(spark, str(f1), str(out), src_partition=True)
+    convert_flowlogs(spark, str(f1), str(out))
     back = spark.read.parquet(str(out))
     assert back.count() == 3
     assert back.filter(F.col("srcport") == 1111).count() == 1
@@ -192,46 +194,17 @@ def test_src_partition_preserves_sibling_source_files(spark, tmp_path):
     assert back.filter(F.col("dt") == "2018-11-04").count() == 3
 
 
-def test_register_partition_with_explicit_location(spark, tmp_path):
-    # non-Hive layout parity (reference main.go:177 always emits LOCATION):
-    # data lives outside the table root; explicit per-partition LOCATION
-    # registers it and queries prune on the declared key
-    src = tmp_path / "in.log"
-    src.write_text("\n".join([HEADER, _mk_line("333333333333", DAY1, 7777)]))
-    staged = tmp_path / "staged"
-    convert_flowlogs(spark, str(src), str(staged))
-    leaf = str(staged / "dt=2018-11-04" / "account=333333333333")
-    tbl_root = tmp_path / "tbl_root"
-    tbl_root.mkdir()
-    register_flowlog_table(
-        spark,
-        "flowlogs_loc_test",
-        str(tbl_root),
-        partitions=[("2018-11-04", "333333333333", leaf)],
-    )
-    try:
-        got = spark.sql(
-            "SELECT srcport FROM flowlogs_loc_test WHERE dt='2018-11-04'"
-        ).collect()
-        assert [r["srcport"] for r in got] == [7777]
-    finally:
-        spark.sql("DROP TABLE IF EXISTS flowlogs_loc_test")
-
-
 def test_src_partitioned_registration_full_spec(spark, tmp_path):
     # ADVICE r2 (medium): a table partitioned (dt, account, src) rejects
-    # 2-level ALTER TABLE specs. convert_flowlogs(src_partition=True) must
-    # return 3-tuples and register_flowlog_table(src_partitioned=True)
-    # must emit full specs.
+    # 2-level ALTER TABLE specs, so convert_flowlogs returns 3-tuples and
+    # register_flowlog_table emits full specs
     f1 = tmp_path / "a.log"
     f1.write_text("\n".join([HEADER, _mk_line("111111111111", DAY1)]))
     out = tmp_path / "tbl"
-    keys = convert_flowlogs(spark, str(f1), str(out), src_partition=True)
+    keys = convert_flowlogs(spark, str(f1), str(out))
     assert len(keys) == 1 and len(keys[0]) == 3
     assert keys[0][:2] == ("2018-11-04", "111111111111")
-    register_flowlog_table(
-        spark, "flowlogs_src_test", str(out), partitions=keys, src_partitioned=True
-    )
+    register_flowlog_table(spark, "flowlogs_src_test", str(out), partitions=keys)
     try:
         got = spark.sql(
             "SELECT count(*) AS n FROM flowlogs_src_test WHERE dt='2018-11-04'"
@@ -242,31 +215,9 @@ def test_src_partitioned_registration_full_spec(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS flowlogs_src_test")
 
 
-def test_src_partitioned_partial_keys_fall_back_to_msck(spark, tmp_path):
-    # legacy callers passing (dt, account) against a src-partitioned table
-    # must not fail after the data is written — MSCK fallback recovers all
-    f1 = tmp_path / "a.log"
-    f1.write_text("\n".join([HEADER, _mk_line("111111111111", DAY1)]))
-    out = tmp_path / "tbl"
-    convert_flowlogs(spark, str(f1), str(out), src_partition=True)
-    register_flowlog_table(
-        spark,
-        "flowlogs_msckfb_test",
-        str(out),
-        partitions=[("2018-11-04", "111111111111")],
-        src_partitioned=True,
-    )
-    try:
-        assert spark.sql("SHOW PARTITIONS flowlogs_msckfb_test").count() == 1
-        n = spark.sql("SELECT count(*) AS n FROM flowlogs_msckfb_test").collect()[0]["n"]
-        assert n == 1
-    finally:
-        spark.sql("DROP TABLE IF EXISTS flowlogs_msckfb_test")
-
-
 def test_run_event_src_partitioned_registers(spark, tmp_path):
-    # handler.run_event with src_partition=True previously died on the
-    # partial-spec DDL after a successful write (ADVICE r2)
+    # handler.run_event on the (dt, account, src) table previously died on
+    # the partial-spec DDL after a successful write (ADVICE r2)
     from aws_vpcflowlogs_parquet_spark.handler import HandlerConfig, run_event
 
     bucket = tmp_path / "bucket"
@@ -279,11 +230,7 @@ def test_run_event_src_partitioned_registers(spark, tmp_path):
             {"s3": {"bucket": {"name": str(bucket)}, "object": {"key": "logs/x.log"}}}
         ]
     }
-    cfg = HandlerConfig(
-        dst_path=str(tmp_path / "warehouse"),
-        table="flowlogs_srcrun_test",
-        src_partition=True,
-    )
+    cfg = HandlerConfig(dst_path=str(tmp_path / "warehouse"), table="flowlogs_srcrun_test")
     try:
         keys = run_event(spark, event, cfg)
         assert len(keys) == 1 and len(keys[0]) == 3
@@ -357,7 +304,7 @@ def test_msck_registers_many_partitions(spark, tmp_path):
     )
     for dt in days:
         for acct in accounts:
-            leaf = root / f"dt={dt}" / f"account={acct}"
+            leaf = root / f"dt={dt}" / f"account={acct}" / "src=000000000000"
             leaf.mkdir(parents=True)
             pq.write_table(tbl, leaf / "part-0.parquet")
     register_flowlog_table(spark, "flowlogs_msck_test", str(root), partitions=None)
@@ -416,12 +363,13 @@ def test_object_store_scheme_round_trip(spark, tmp_path):
     cfg = HandlerConfig(dst_path=dst, table="flowlogs_viewfs_test")
     try:
         keys = run_event(spark, event, cfg)
-        assert keys == [
+        assert [k[:2] for k in keys] == [
             ("2018-11-04", "111111111111"),
             ("2018-11-05", "222222222222"),
         ]
         # data physically landed under the mount target in Hive layout
-        assert (mount_root / "dt=2018-11-04" / "account=111111111111").exists()
+        leaf = mount_root / "dt=2018-11-04" / "account=111111111111" / f"src={keys[0][2]}"
+        assert leaf.exists()
         # query-back goes through the viewfs:// LOCATION
         n = spark.sql(
             "SELECT count(*) AS n FROM flowlogs_viewfs_test WHERE dt='2018-11-05'"
@@ -482,8 +430,8 @@ def _parquet_files(root):
     return sorted(p.relative_to(root) for p in root.rglob("*.parquet")) if root.exists() else []
 
 
-@pytest.mark.parametrize("src_partition", [False, True])
-def test_header_only_object_writes_nothing(spark, tmp_path, src_partition):
+@pytest.mark.parametrize("gzipped", [False, True])
+def test_header_only_object_writes_nothing(spark, tmp_path, gzipped):
     # an object with no data rows used to crash reading the key-set
     # observation (AQE dropped the empty shuffle stage and the
     # CollectMetrics node with it); it must be a clean no-op that leaves
@@ -491,23 +439,24 @@ def test_header_only_object_writes_nothing(spark, tmp_path, src_partition):
     out = tmp_path / "out"
     full = tmp_path / "full.log"
     full.write_text("\n".join([HEADER, _mk_line("111111111111", DAY1)]))
-    convert_flowlogs(spark, str(full), str(out), src_partition=src_partition)
+    convert_flowlogs(spark, str(full), str(out))
     before = _parquet_files(out)
-    empty = tmp_path / "empty.log.gz"
-    with gzip.open(empty, "wt") as f:
+    empty = tmp_path / ("empty.log.gz" if gzipped else "empty.log")
+    with (gzip.open if gzipped else open)(empty, "wt") as f:
         f.write(HEADER + "\n")
-    assert convert_flowlogs(spark, str(empty), str(out), src_partition=src_partition) == []
+    assert convert_flowlogs(spark, str(empty), str(out)) == []
     assert _parquet_files(out) == before
     assert spark.read.parquet(str(out)).count() == 1
 
 
-@pytest.mark.parametrize("src_partition", [False, True])
-def test_all_malformed_strict_raises_parse_error(spark, tmp_path, src_partition):
-    src = tmp_path / "bad.log"
-    src.write_text("\n".join([HEADER, "2 too few tokens", "3 also bad"]))
+@pytest.mark.parametrize("gzipped", [False, True])
+def test_all_malformed_strict_raises_parse_error(spark, tmp_path, gzipped):
+    src = tmp_path / ("bad.log.gz" if gzipped else "bad.log")
+    with (gzip.open if gzipped else open)(src, "wt") as f:
+        f.write("\n".join([HEADER, "2 too few tokens", "3 also bad"]))
     out = tmp_path / "out"
     with pytest.raises(FlowLogParseError, match="2 malformed") as err:
-        convert_flowlogs(spark, str(src), str(out), strict=True, src_partition=src_partition)
+        convert_flowlogs(spark, str(src), str(out), strict=True)
     assert err.value.partition_keys == []
     assert _parquet_files(out) == []
 
@@ -523,15 +472,21 @@ def test_run_event_header_only_registers_nothing(spark, tmp_path):
             {"s3": {"bucket": {"name": str(bucket)}, "object": {"key": "logs/x.log"}}}
         ]
     }
-    cfg = HandlerConfig(
-        dst_path=str(tmp_path / "warehouse"), table="flowlogs_empty_test", src_partition=True
-    )
+    cfg = HandlerConfig(dst_path=str(tmp_path / "warehouse"), table="flowlogs_empty_test")
     try:
         assert run_event(spark, event, cfg) == []
         assert _parquet_files(tmp_path / "warehouse") == []
         assert not spark.catalog.tableExists("flowlogs_empty_test")
     finally:
         spark.sql("DROP TABLE IF EXISTS flowlogs_empty_test")
+
+
+def test_handler_config_rejects_the_two_level_layout():
+    from aws_vpcflowlogs_parquet_spark.handler import HandlerConfig
+
+    with pytest.raises(ValueError, match="2-level"):
+        HandlerConfig(dst_path="out", src_partition=False)
+    assert HandlerConfig(dst_path="out").src_partition is True
 
 
 class _StatementLog:
@@ -547,29 +502,28 @@ class _StatementLog:
 
 
 def test_register_batches_new_existing_and_located_keys(spark, tmp_path):
-    # one call registers already-registered, new Hive-layout and explicit-
-    # LOCATION keys in a single ALTER TABLE; an identical call is a no-op
+    # one call registers already-registered and new (dt, account, src)
+    # keys, each located by the Hive layout under the table root, in a
+    # single ALTER TABLE; an identical call is a no-op
     src = tmp_path / "in.log"
     src.write_text(
         "\n".join([HEADER, _mk_line("111111111111", DAY1), _mk_line("222222222222", DAY2)])
     )
-    out = tmp_path / "tbl"
-    keys = convert_flowlogs(spark, str(src), str(out))
-    staged = tmp_path / "staged"
     other = tmp_path / "other.log"
     other.write_text("\n".join([HEADER, _mk_line("333333333333", DAY1, 7777)]))
-    convert_flowlogs(spark, str(other), str(staged))
-    leaf = str(staged / "dt=2018-11-04" / "account=333333333333")
+    out = tmp_path / "tbl"
+    keys = convert_flowlogs(spark, str(src), str(out))
+    keys += convert_flowlogs(spark, str(other), str(out))
     table = "flowlogs_batch_test"
     try:
         register_flowlog_table(spark, table, str(out), partitions=keys[:1])
-        entries = keys + [("2018-11-04", "333333333333", leaf)]
         log = _StatementLog(spark)
-        register_flowlog_table(log, table, str(out), partitions=entries)
+        register_flowlog_table(log, table, str(out), partitions=keys)
         alters = [q for q in log.statements if q.startswith("ALTER TABLE")]
         assert len(alters) == 1 and alters[0].count("PARTITION (") == 3
         parts = sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect())
-        assert parts == [
+        assert parts == sorted("dt={}/account={}/src={}".format(*k) for k in keys)
+        assert [p.rsplit("/src=", 1)[0] for p in parts] == [
             "dt=2018-11-04/account=111111111111",
             "dt=2018-11-04/account=333333333333",
             "dt=2018-11-05/account=222222222222",
@@ -579,16 +533,8 @@ def test_register_batches_new_existing_and_located_keys(spark, tmp_path):
             ("111111111111", 1234),
             ("333333333333", 7777),
         ]
-
-        def _location(spec):
-            rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table} PARTITION ({spec})").collect()
-            return next(r["data_type"] for r in rows if r["col_name"] == "Location")
-
-        located = "dt='2018-11-04', account='333333333333'"
-        assert _location(located).endswith(leaf)
-        register_flowlog_table(spark, table, str(out), partitions=entries)
+        register_flowlog_table(spark, table, str(out), partitions=keys)
         assert sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect()) == parts
-        assert _location(located).endswith(leaf)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
@@ -614,7 +560,7 @@ def test_src_partition_writes_one_file_per_key(spark, tmp_path):
             )
         srcs.append(str(p))
     out = tmp_path / "out"
-    keys = convert_flowlogs(spark, srcs, str(out), src_partition=True)
+    keys = convert_flowlogs(spark, srcs, str(out))
     assert len(keys) == 3 * 2 * 2
     leaves = [out / f"dt={dt}" / f"account={acct}" / f"src={src}" for dt, acct, src in keys]
     assert {p.parent for p in out.rglob("*.parquet")} == set(leaves)
@@ -630,8 +576,7 @@ def test_ingest_plan_build_py4j_bound(spark, tmp_path):
     # gateway client's send_command
     from aws_vpcflowlogs_parquet_spark.operators.convert import (
         observe_partition_keys,
-        partition_columns,
-        with_partition_columns,
+        table_rows,
     )
     from aws_vpcflowlogs_parquet_spark.sources.flowlog import parse_flowlog_lines_observed
 
@@ -649,7 +594,7 @@ def test_ingest_plan_build_py4j_bound(spark, tmp_path):
     client.send_command = send_command
     try:
         parsed, _ = parse_flowlog_lines_observed(lines)
-        observe_partition_keys(with_partition_columns(parsed, True), partition_columns(True))
+        observe_partition_keys(table_rows(parsed))
     finally:
         del client.send_command
     assert 0 < len(calls) <= 300

@@ -12,7 +12,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from aws_vpcflowlogs_parquet_spark.operators.convert import with_partition_columns
+from aws_vpcflowlogs_parquet_spark.operators.convert import table_rows
 from aws_vpcflowlogs_parquet_spark.sources.flowlog import (
     FlowLogParseError,
     parse_flowlog_lines,
@@ -149,7 +149,7 @@ def test_partition_date_matches_utc_epoch(spark, starts):
     df = spark.createDataFrame([(l,) for l in lines], "value string")
     got = sorted(
         r["dt"]
-        for r in with_partition_columns(parse_flowlog_lines(df)).select("dt").collect()
+        for r in table_rows(parse_flowlog_lines(df)).select("dt").collect()
     )
     want = sorted(
         dt.datetime.fromtimestamp(s, dt.timezone.utc).strftime("%Y-%m-%d")

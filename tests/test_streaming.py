@@ -101,6 +101,35 @@ def test_stream_restart_is_exactly_once(spark, tmp_path):
     ]
 
 
+def test_stream_replay_of_uncommitted_batch_is_exactly_once(spark, tmp_path):
+    # a crash after the sink write and before the commit: the restart
+    # replays the batch from the offset log, and the sink must rewrite its
+    # rows, not add a second copy (replayable source + idempotent sink)
+    src = tmp_path / "drop"
+    src.mkdir()
+    dst = tmp_path / "out"
+    ckpt = tmp_path / "ckpt"
+    rows = [("111111111111", 1541375637, 1), ("222222222222", 1541462037, 2)]
+    (src / "a.log").write_text("\n".join([HEADER, *(_mk_line(*r) for r in rows)]))
+    q = start_flowlog_stream(spark, str(src), str(dst), str(ckpt))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    commits = sorted((ckpt / "commits").glob("[0-9]*"), key=lambda p: int(p.name))
+    last = commits[-1]
+    last.unlink()
+    (last.parent / f".{last.name}.crc").unlink(missing_ok=True)
+    q = start_flowlog_stream(spark, str(src), str(dst), str(ckpt))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert (ckpt / "commits" / last.name).exists()  # the batch did replay
+    back = spark.read.parquet(str(dst)).select("accountid", "start_ts", "srcport")
+    assert sorted(tuple(r) for r in back.collect()) == rows
+
+
 def test_stream_registers_partitions_in_table(spark, tmp_path):
     # table= registers each micro-batch's keys through the batch
     # converter's register_flowlog_table (creating the table at dst on
@@ -125,11 +154,15 @@ def test_stream_registers_partitions_in_table(spark, tmp_path):
             )
         )
         q.processAllAvailable()
+        # (dt, account, src): a.log's key and c.log's two keys; c.log's
+        # row in 2018-11-04/111111111111 is a partition of its own
         parts = sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect())
-        assert parts == [
+        assert [p.split("/src=")[0] for p in parts] == [
+            "dt=2018-11-04/account=111111111111",
             "dt=2018-11-04/account=111111111111",
             "dt=2018-11-05/account=222222222222",
         ]
+        assert len({p.split("/src=")[1] for p in parts}) == 2
         got = spark.sql(
             f"SELECT dt, count(*) AS n FROM {table} GROUP BY dt ORDER BY dt"
         ).collect()
