@@ -148,7 +148,7 @@ def ckpt_count(df: DataFrame, probe=None):
     obs = Observation()
     expr = probe if probe is not None else F.count(F.lit(1))
     out = df.observe(obs, expr.alias("n")).localCheckpoint(eager=True)
-    if _await_observation(obs, OBSERVE_WAIT_S):
+    if _await_observation(obs):
         return out, obs.get["n"]
     _log.warning(
         "observed probe did not arrive within %g s; recomputing it "
@@ -157,14 +157,14 @@ def ckpt_count(df: DataFrame, probe=None):
     return out, out.agg(expr.alias("n")).first()["n"]
 
 
-def _await_observation(obs, timeout_s: float) -> bool:
-    """Wait at most ``timeout_s`` for ``obs``'s metrics; True once they
-    are in, so ``obs.get`` returns without blocking."""
+def _await_observation(obs) -> bool:
+    """Wait at most :data:`OBSERVE_WAIT_S` for ``obs``'s metrics; True
+    once they are in, so ``obs.get`` returns without blocking."""
     from py4j.protocol import Py4JJavaError
 
     jvm = obs._jvm
     bound = jvm.scala.concurrent.duration.Duration.create(
-        int(timeout_s * 1000), "ms"
+        int(OBSERVE_WAIT_S * 1000), "ms"
     )
     try:
         jvm.scala.concurrent.Await.ready(obs._jo.future(), bound)

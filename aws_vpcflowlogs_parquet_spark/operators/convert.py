@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import FLOW_COLUMNS, PARTITION_COLUMNS
+from ..schema import FLOW_COLUMNS, FLOW_SCHEMA, PARTITION_COLUMNS
 from ..sources.flowlog import (
     FlowLogParseError,
     parse_flowlog_lines_observed,
@@ -155,27 +155,31 @@ def register_flowlog_table(
     it, becomes one clause of a single ``ALTER TABLE … ADD IF NOT EXISTS
     PARTITION (…) PARTITION (…) …`` — the reference's per-key DDL
     (main.go:177) as one statement per call. Keys already registered are
-    skipped, so a repeated call is a no-op.
+    skipped, so a repeated call is a no-op. Partition values are written
+    as escaped SQL string literals: ``account`` comes from the log line.
     """
+    columns = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in FLOW_SCHEMA)
     spark.sql(
         f"""
-        CREATE TABLE IF NOT EXISTS {table} (
-          version INT, accountid STRING, interfaceid STRING,
-          srcaddr STRING, dstaddr STRING, srcport INT, dstport INT,
-          protocol INT, packets INT, bytes INT,
-          start_ts BIGINT, end_ts BIGINT, action STRING, logstatus STRING
-        )
+        CREATE TABLE IF NOT EXISTS {table} ({columns})
         USING PARQUET
         PARTITIONED BY ({", ".join(f"{c} STRING" for c in PARTITION_COLUMNS)})
-        LOCATION '{location}'
+        LOCATION {_sql_string(location)}
         """
     )
     if partitions is None:
         spark.sql(f"MSCK REPAIR TABLE {table}")
         return
     clauses = dict.fromkeys(
-        "PARTITION ({})".format(", ".join(f"{c}='{v}'" for c, v in zip(PARTITION_COLUMNS, key)))
+        "PARTITION ({})".format(
+            ", ".join(f"{c}={_sql_string(v)}" for c, v in zip(PARTITION_COLUMNS, key))
+        )
         for key in partitions
     )
     if clauses:
         spark.sql(f"ALTER TABLE {table} ADD IF NOT EXISTS {' '.join(clauses)}")
+
+
+def _sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal: backslash and quote escaped."""
+    return "'{}'".format(value.replace("\\", "\\\\").replace("'", "\\'"))

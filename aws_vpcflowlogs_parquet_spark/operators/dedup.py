@@ -42,16 +42,15 @@ SIMHASH_BITS = 16
 # Spark SQL expression fragments (Catalyst lambdas). The DuckDB twins live
 # in the *_SQL constants below; parameters are shared module constants so
 # the two dialects cannot drift independently.
-TOKENS_EXPR = "filter(split(lower({col}), ' '), t -> t != '')"
+TOKENS_EXPR = "filter(split(lower(text), ' '), t -> t != '')"
 
 
-def tokens_col(col: str = "text") -> F.Column:
-    return F.expr(TOKENS_EXPR.format(col=col))
+def tokens_col() -> F.Column:
+    """The lowercased, space-split, non-empty tokens of ``text``."""
+    return F.expr(TOKENS_EXPR)
 
 
-def shingle_rows(
-    documents: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def shingle_rows(documents: DataFrame) -> DataFrame:
     """(doc_id, s) distinct k-token shingle rows, built relationally.
 
     posexplode(tokens) → lead() window → concat — every step vectorized
@@ -61,37 +60,31 @@ def shingle_rows(
     planner a real row count to size the downstream joins. One shuffle on
     doc_id, which the subsequent groupBys reuse.
     """
-    toks = TOKENS_EXPR.format(col=text_col)
     tok_rows = documents.select(
-        F.col(id_col), F.posexplode(F.expr(toks)).alias("pos", "t")
+        F.col("doc_id"), F.posexplode(tokens_col()).alias("pos", "t")
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     parts = [F.col("t")] + [F.lead("t", i).over(w) for i in range(1, SHINGLE_K)]
     return (
         tok_rows.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.concat_ws(" ", *parts).alias("s"),
             F.lead("t", SHINGLE_K - 1).over(w).isNotNull().alias("_full"),
         )
         .filter(F.col("_full"))
-        .select(id_col, "s")
+        .select("doc_id", "s")
         .distinct()
     )
 
 
-def shingled(
-    documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    rows: DataFrame | None = None,
-) -> DataFrame:
+def shingled(documents: DataFrame, rows: DataFrame | None = None) -> DataFrame:
     """(doc_id, sh) with the distinct shingle set as an array; docs with
     fewer than k tokens drop out (no shingles). Pass a precomputed
     (persisted) ``rows`` relation to share the explode+distinct shuffle
     with another consumer (e.g. the prefix-filtered join in
     q_lsh_recall)."""
-    base = rows if rows is not None else shingle_rows(documents, id_col, text_col)
-    return base.groupBy(id_col).agg(F.collect_list("s").alias("sh"))
+    base = rows if rows is not None else shingle_rows(documents)
+    return base.groupBy("doc_id").agg(F.collect_list("s").alias("sh"))
 
 
 # ---------------------------------------------------------------- operators
@@ -218,10 +211,7 @@ def simhash_signatures(documents: DataFrame) -> DataFrame:
     you groupBy the signature (one shuffle of 2-tuples) rather than
     pairing all docs.
     """
-    toks = TOKENS_EXPR.format(col="text")
-    tok_rows = (
-        documents.select("doc_id", F.explode(F.expr(toks)).alias("t")).distinct()
-    )
+    tok_rows = documents.select("doc_id", F.explode(tokens_col()).alias("t")).distinct()
     votes = []
     for bit in range(SIMHASH_BITS):
         nibble_pos = bit // 4 + 1
@@ -250,21 +240,23 @@ def simhash_signatures(documents: DataFrame) -> DataFrame:
 
 
 NGRAM_PAIRS_MAX_INPUT = 10_000
+#: the all-pairs kernels verify documents with doc_id < NGRAM_MAX_ID
+NGRAM_MAX_ID = 200
 
 
-def ngram_jaccard_pairs(documents: DataFrame, max_id: int = 200) -> DataFrame:
+def ngram_jaccard_pairs(documents: DataFrame) -> DataFrame:
     """Exact token-3-gram Jaccard over a bounded id range (all-pairs).
 
     The quadratic all-pairs form is the *verification* kernel; production
-    candidate generation is :func:`minhash_lsh_pairs`. ``max_id`` bounds the
-    oracle-checkable form, and the bound is MANDATORY: the filtered input
+    candidate generation is :func:`minhash_lsh_pairs`. ``NGRAM_MAX_ID``
+    bounds the oracle-checkable form, and the bound is MANDATORY: the filtered input
     is counted and the call raises if it exceeds ``NGRAM_PAIRS_MAX_INPUT``
     — a caller wanting corpus-scale near-dup detection must go through
     minhash_lsh_pairs and use this only on its candidate output. The guard
     count is one scan of an already-filtered, projected input (cheap next
     to the n² join it prevents).
     """
-    docs = documents.filter(F.col("doc_id") < max_id)
+    docs = documents.filter(F.col("doc_id") < NGRAM_MAX_ID)
     n = docs.count()
     if n > NGRAM_PAIRS_MAX_INPUT:
         raise ValueError(
@@ -284,7 +276,7 @@ def ngram_jaccard_pairs(documents: DataFrame, max_id: int = 200) -> DataFrame:
     return scored.filter(F.col("jaccard") >= 0.2).select("doc_a", "doc_b", "jaccard")
 
 
-def dedup_clusters(documents: DataFrame, max_id: int = 200) -> DataFrame:
+def dedup_clusters(documents: DataFrame) -> DataFrame:
     """Near-duplicate *clusters*: connected components over the similarity
     pair graph, by iterative min-label propagation.
 
@@ -301,8 +293,8 @@ def dedup_clusters(documents: DataFrame, max_id: int = 200) -> DataFrame:
     Returns (doc_id, cluster_id) for every doc in the id range, singletons
     included.
     """
-    nodes = documents.filter(F.col("doc_id") < max_id).select("doc_id")
-    pairs = ngram_jaccard_pairs(documents, max_id=max_id).select("doc_a", "doc_b")
+    nodes = documents.filter(F.col("doc_id") < NGRAM_MAX_ID).select("doc_id")
+    pairs = ngram_jaccard_pairs(documents).select("doc_a", "doc_b")
     # symmetric edge list
     edges = pairs.unionByName(
         pairs.select(
@@ -354,11 +346,12 @@ def dedup_clusters(documents: DataFrame, max_id: int = 200) -> DataFrame:
     return labels
 
 
-def keep_first_dedup(df: DataFrame, keys: list[str], order: list[str]) -> DataFrame:
-    """Deterministic 'keep first' dedup: row_number over an explicit total
-    order instead of ``dropDuplicates`` (whose survivor is partition-order
+def keep_first_dedup(df: DataFrame) -> DataFrame:
+    """Deterministic 'keep first' dedup: the earliest (ts, event_id) row
+    per (user_id, event_type), by row_number over that total order
+    instead of ``dropDuplicates`` (whose survivor is partition-order
     dependent and would never hash-match an oracle)."""
-    w = Window.partitionBy(*keys).orderBy(*order)
+    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

@@ -25,10 +25,14 @@ from aws_vpcflowlogs_parquet_spark.caching import track_persist
 
 PR_SCALE = 1_000_000_000_000  # 1e-12 quantization of per-edge contributions
 PR_DAMPING = 0.85
+#: synchronous rounds of pagerank and of label_propagation; the unrolled
+#: DuckDB oracles (plans/catalog.py) read the same constants
+PR_ITERS = 3
+LPA_ITERS = 3
 
 
-def pagerank(edges: DataFrame, n_iter: int = 3, damping: float = PR_DAMPING) -> DataFrame:
-    """(node, rank) after ``n_iter`` synchronous PageRank rounds.
+def pagerank(edges: DataFrame) -> DataFrame:
+    """(node, rank) after ``PR_ITERS`` synchronous PageRank rounds.
 
     ``edges`` is a distinct (src, dst) DataFrame. Dangling nodes (no
     out-edges) contribute nothing (their mass leaks — the simple PR
@@ -61,7 +65,7 @@ def pagerank(edges: DataFrame, n_iter: int = 3, damping: float = PR_DAMPING) -> 
     ranks = nodes.select(
         "node", (F.lit(1.0) / F.lit(n_nodes)).alias("rank")
     )
-    for _ in range(n_iter):
+    for _ in range(PR_ITERS):
         contribs = (
             edges.join(
                 ranks.select(F.col("node").alias("src"), "rank"), "src"
@@ -85,8 +89,8 @@ def pagerank(edges: DataFrame, n_iter: int = 3, damping: float = PR_DAMPING) -> 
             .select(
                 "node",
                 (
-                    F.lit(1.0 - damping) / F.lit(n_nodes)
-                    + F.lit(damping)
+                    F.lit(1.0 - PR_DAMPING) / F.lit(n_nodes)
+                    + F.lit(PR_DAMPING)
                     * (
                         F.coalesce(F.col("csum"), F.lit(0.0))
                         / F.lit(float(PR_SCALE))
@@ -103,8 +107,8 @@ def pagerank(edges: DataFrame, n_iter: int = 3, damping: float = PR_DAMPING) -> 
     return out
 
 
-def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
-    """(node, label) after ``n_iter`` synchronous majority-vote rounds —
+def label_propagation(edges: DataFrame) -> DataFrame:
+    """(node, label) after ``LPA_ITERS`` synchronous majority-vote rounds —
     community detection, the third iterative-graph surface beside
     connected components (min-label) and PageRank (weighted sums).
 
@@ -127,7 +131,7 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
-    for _ in range(n_iter):
+    for _ in range(LPA_ITERS):
         votes = (
             sym.join(
                 labels.select(F.col("node").alias("dst"), "label"), "dst"

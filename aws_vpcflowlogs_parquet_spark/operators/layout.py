@@ -29,12 +29,12 @@ from pyspark.sql import functions as F
 ZBITS = 16  # bits per dimension in the interleaved key
 
 
-def zorder_key(cols: list[str], bits: int = ZBITS) -> F.Column:
-    """Interleave the low ``bits`` bits of each (non-negative integral)
+def zorder_key(cols: list[str]) -> F.Column:
+    """Interleave the low ``ZBITS`` bits of each (non-negative integral)
     column into one Morton key: bit i of column j lands at position
     i * n_cols + j. Pure integer arithmetic — codegen'd, deterministic.
 
-    ``bits`` is clamped so the key never touches the bigint sign bit
+    ``ZBITS`` is clamped so the key never touches the bigint sign bit
     (n_cols * bits <= 63): with the old unclamped default, 4+ columns
     placed a bit at position 63, making high-curve keys NEGATIVE — they
     range-partitioned before all positive keys, breaking Morton locality
@@ -44,7 +44,7 @@ def zorder_key(cols: list[str], bits: int = ZBITS) -> F.Column:
     aliasing degrades clustering quality but never correctness, since
     the key is projected away before the write."""
     n = len(cols)
-    bits = min(bits, 63 // n)
+    bits = min(ZBITS, 63 // n)
     terms = []
     for j, c in enumerate(cols):
         for i in range(bits):
@@ -60,7 +60,6 @@ def optimize_layout(
     path: str,
     cluster_by: list[str],
     n_files: int = 8,
-    bits: int = ZBITS,
 ) -> None:
     """Rewrite ``df`` at ``path`` clustered on ``cluster_by``.
 
@@ -73,7 +72,7 @@ def optimize_layout(
     if len(cluster_by) == 1:
         key = F.col(cluster_by[0])
     else:
-        key = zorder_key(cluster_by, bits)
+        key = zorder_key(cluster_by)
     out_cols = df.columns
     (
         df.withColumn("_ck", key)

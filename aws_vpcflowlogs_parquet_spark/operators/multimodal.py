@@ -209,8 +209,13 @@ RESIZE_SCHEMA = (
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_bytes int, frame_md5 string"
 
 
-def resize_images(documents: DataFrame, target_max: int = 64) -> DataFrame:
-    """Aspect-preserving resize plan over binary image payloads.
+#: resize_images: the longer output side, in pixels (never upscaled)
+RESIZE_TARGET_MAX = 64
+
+
+def resize_images(documents: DataFrame) -> DataFrame:
+    """Aspect-preserving resize plan over binary image payloads, longer
+    side down to ``RESIZE_TARGET_MAX``.
 
     Recognized image payloads (PNM/BMP — see :func:`decode_image`) are
     measured from their REAL headers; anything else gets deterministic
@@ -294,7 +299,7 @@ def resize_images(documents: DataFrame, target_max: int = 64) -> DataFrame:
             wh = pdf["payload"].map(dims)
             w = wh.map(lambda d: d[0]).astype("int32")
             h = wh.map(lambda d: d[1]).astype("int32")
-            scale = (target_max / w.combine(h, max)).clip(upper=1.0)
+            scale = (RESIZE_TARGET_MAX / w.combine(h, max)).clip(upper=1.0)
             yield _pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -310,9 +315,13 @@ def resize_images(documents: DataFrame, target_max: int = 64) -> DataFrame:
     )
 
 
-def sample_frames(documents: DataFrame, n_frames: int = 3) -> DataFrame:
+#: sample_frames: frames per video payload
+N_FRAMES = 3
+
+
+def sample_frames(documents: DataFrame) -> DataFrame:
     """Frame sampling over binary video payloads: one input row fans out
-    to ``n_frames`` output rows (1:N mapInPandas — the batch function
+    to ``N_FRAMES`` output rows (1:N mapInPandas — the batch function
     yields more rows than it receives, no explode/shuffle needed).
 
     Frames are deterministic byte slices standing in for codec output;
@@ -328,8 +337,8 @@ def sample_frames(documents: DataFrame, n_frames: int = 3) -> DataFrame:
         for pdf in batches:
             out = {"doc_id": [], "frame_idx": [], "frame_bytes": [], "frame_md5": []}
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                k = max(len(payload) // n_frames, 1)
-                for i in range(n_frames):
+                k = max(len(payload) // N_FRAMES, 1)
+                for i in range(N_FRAMES):
                     frame = bytes(payload[i * k : (i + 1) * k])
                     out["doc_id"].append(doc_id)
                     out["frame_idx"].append(i)
@@ -347,7 +356,11 @@ AUDIO_SCHEMA = (
 )
 
 
-def audio_energy(documents: DataFrame, window: int = 256) -> DataFrame:
+#: audio_energy: samples per energy window
+AUDIO_WINDOW = 256
+
+
+def audio_energy(documents: DataFrame) -> DataFrame:
     """Windowed audio-energy extraction over binary payloads: treat the
     payload as 8-bit PCM samples, emit per-window sum-of-squares energy
     and peak amplitude — the VAD/silence-detection front end of an audio
@@ -373,10 +386,10 @@ def audio_energy(documents: DataFrame, window: int = 256) -> DataFrame:
                 # oracle's generate_series(0, (len-1)//256), which is
                 # empty for len=0 (ADVICE r3: the old max(len,1) emitted
                 # a phantom zero-sample window the oracle never had)
-                for w in range(0, len(samples), window):
-                    chunk = samples[w : w + window].astype(_np.int64)
+                for w in range(0, len(samples), AUDIO_WINDOW):
+                    chunk = samples[w : w + AUDIO_WINDOW].astype(_np.int64)
                     out["doc_id"].append(doc_id)
-                    out["window_idx"].append(w // window)
+                    out["window_idx"].append(w // AUDIO_WINDOW)
                     out["n_samples"].append(int(chunk.size))
                     out["energy"].append(int((chunk * chunk).sum()))
                     out["peak"].append(int(chunk.max()) if chunk.size else 0)

@@ -27,7 +27,7 @@ the offset aggregate and the ranked output read the same materialized
 partitioning, and the stamped ids can never disagree between the two
 consumers. Bound: ≤ 2^33 rows per range partition — at 8.5 B rows per
 range × any sane range count, not the binding constraint at 100 TB
-(size num_ranges to cluster parallelism instead).
+(size RANGES to cluster parallelism instead).
 
 Used by the four exact audit twins (q_decile_stats, q_gini,
 q_lorenz_curve, q_abc_pareto); their oracles are unchanged — only the
@@ -50,23 +50,23 @@ __all__ = [
     "ntile_from_rank",
 ]
 
-#: default number of sampled key ranges. At 100 TB this should track
-#: cluster parallelism (executors × cores); the equi-depth sampling
-#: keeps ranges balanced regardless of key skew.
-DEFAULT_RANGES = 32
+#: number of sampled key ranges. At 100 TB this should track cluster
+#: parallelism (executors × cores); the equi-depth sampling keeps ranges
+#: balanced regardless of key skew.
+RANGES = 32
 
 _RANGE_ID = "_range_id"
 _LOCAL_IDX = "_local_idx"
 _IDX_MASK = (1 << 33) - 1
 
 
-def _ranged(df: DataFrame, order_by: list[Column], num_ranges: int) -> DataFrame:
+def _ranged(df: DataFrame, order_by: list[Column]) -> DataFrame:
     """Range-repartition on the total order, sort within each range, and
     stamp every row with (range id, 0-based in-range index). Persisted:
     the offset table and the ranked rows must read the SAME materialized
     partitioning and ids."""
     parted = (
-        df.repartitionByRange(num_ranges, *order_by)
+        df.repartitionByRange(RANGES, *order_by)
         .sortWithinPartitions(*order_by)
         .select(
             "*",
@@ -108,21 +108,17 @@ def _offsets(parted: DataFrame, aggs: dict[str, Column]) -> DataFrame:
 
 
 def with_global_rank(
-    df: DataFrame,
-    order_by: list[Column],
-    rank_name: str = "i",
-    total_name: str | None = None,
-    num_ranges: int = DEFAULT_RANGES,
+    df: DataFrame, order_by: list[Column], total_name: str | None = None
 ) -> DataFrame:
-    """Exact global ``row_number()`` over a TOTAL order (the caller must
-    pass a tie-free key tuple), with no single-partition exchange and no
-    data-row window. ``total_name`` optionally surfaces the grand row
+    """Exact global ``row_number()`` ``i`` over a TOTAL order (the caller
+    must pass a tie-free key tuple), with no single-partition exchange and
+    no data-row window. ``total_name`` optionally surfaces the grand row
     count as a column (read off the offset table — no extra data scan,
     which ntile reconstruction needs)."""
-    parted = _ranged(df, order_by, num_ranges)
+    parted = _ranged(df, order_by)
     offs = _offsets(parted, {"n": F.count("*")})
     out = parted.join(F.broadcast(offs), _RANGE_ID).withColumn(
-        rank_name,
+        "i",
         (F.col(_LOCAL_IDX) + 1 + F.col("_off_n")).cast("bigint"),
     )
     if total_name is not None:
@@ -130,18 +126,12 @@ def with_global_rank(
     return out.drop(_RANGE_ID, _LOCAL_IDX, "_off_n", "_tot_n")
 
 
-def with_prefix_sum(
-    df: DataFrame,
-    order_by: list[Column],
-    value: Column,
-    sum_name: str = "cum",
-    num_ranges: int = DEFAULT_RANGES,
-) -> DataFrame:
-    """Exact inclusive running SUM(value) over a total order: local
-    running sums within each sampled range (the one data-row window,
-    partitioned by range — fully parallel) plus the broadcast sum of
-    all lower ranges."""
-    parted = _ranged(df.withColumn("_psv", value), order_by, num_ranges)
+def with_prefix_sum(df: DataFrame, order_by: list[Column], value: Column) -> DataFrame:
+    """Exact inclusive running SUM(value) ``cum`` over a total order:
+    local running sums within each sampled range (the one data-row
+    window, partitioned by range — fully parallel) plus the broadcast
+    sum of all lower ranges."""
+    parted = _ranged(df.withColumn("_psv", value), order_by)
     offs = _offsets(parted, {"s": F.sum("_psv")})
     run = (
         Window.partitionBy(_RANGE_ID)
@@ -151,7 +141,7 @@ def with_prefix_sum(
     return (
         parted.join(F.broadcast(offs), _RANGE_ID)
         .withColumn(
-            sum_name,
+            "cum",
             (F.sum("_psv").over(run) + F.col("_off_s")).cast("bigint"),
         )
         .drop(_RANGE_ID, _LOCAL_IDX, "_off_s", "_tot_s", "_psv")
@@ -162,11 +152,9 @@ def with_bucketed_rank(
     df: DataFrame,
     bucket: Column,
     order_by: list[Column],
-    rank_name: str = "i",
     total_name: str | None = None,
-    descending: bool = False,
 ) -> DataFrame:
-    """Exact global ``row_number()`` by RANK-BY-COUNTING over a monotone
+    """Exact global ``row_number()`` ``i`` by RANK-BY-COUNTING over a monotone
     value bucket (the q_quantile_bisect lineage): histogram the bucket
     counts (one partial-aggregated scan, broadcast), roll them into
     exclusive prefix offsets over the BOUNDED bin table, and complete
@@ -175,18 +163,17 @@ def with_bucketed_rank(
     no single-partition exchange over data rows.
 
     CALLER CONTRACT: ``bucket`` must be monotone non-decreasing in the
-    leading ``order_by`` key (non-increasing when ``descending``), so
-    bucket order extends to row order. Versus ``with_global_rank``:
-    this variant is one scan cheaper and fully declarative, but bin
+    leading ``order_by`` key, so bucket order extends to row order.
+    Versus ``with_global_rank``: this variant is one scan cheaper and
+    fully declarative, but bin
     balance depends on the VALUE distribution — a pathological
     distribution concentrates one bin (mitigate by bucket granularity
     or fall back to the sampled-range kernel, which is equi-depth by
     construction)."""
     b = df.withColumn("_rb", bucket)
     hist = b.groupBy("_rb").agg(F.count("*").alias("_n"))
-    bin_order = F.col("_rb").desc() if descending else F.col("_rb").asc()
-    w = Window.orderBy(bin_order).rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy(bin_order).rowsBetween(
+    w = Window.orderBy(F.col("_rb").asc()).rowsBetween(Window.unboundedPreceding, -1)
+    w_all = Window.orderBy(F.col("_rb").asc()).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     offs = hist.select(
@@ -198,7 +185,7 @@ def with_bucketed_rank(
     )
     local = Window.partitionBy("_rb").orderBy(*order_by)
     out = b.join(F.broadcast(offs), "_rb").withColumn(
-        rank_name,
+        "i",
         (F.row_number().over(local) + F.col("_off_n")).cast("bigint"),
     )
     if total_name is not None:
@@ -207,21 +194,17 @@ def with_bucketed_rank(
 
 
 def with_bucketed_prefix_sum(
-    df: DataFrame,
-    bucket: Column,
-    order_by: list[Column],
-    value: Column,
-    sum_name: str = "cum",
-    descending: bool = False,
+    df: DataFrame, bucket: Column, order_by: list[Column], value: Column
 ) -> DataFrame:
-    """Exact inclusive running SUM(value) by the same rank-by-counting
-    shape: per-bin value totals broadcast as exclusive prefix offsets,
-    plus an in-bin running sum (window partitioned by bucket). Same
-    caller contract as :func:`with_bucketed_rank`."""
+    """Exact inclusive running SUM(value) ``cum_cents`` over a DESCENDING
+    order by the same rank-by-counting shape: per-bin value totals
+    broadcast as exclusive prefix offsets, plus an in-bin running sum
+    (window partitioned by bucket). ``bucket`` must be monotone
+    non-increasing in the leading ``order_by`` key — the mirror of
+    :func:`with_bucketed_rank`'s contract."""
     b = df.withColumn("_rb", bucket).withColumn("_psv", value)
     hist = b.groupBy("_rb").agg(F.sum("_psv").alias("_s"))
-    bin_order = F.col("_rb").desc() if descending else F.col("_rb").asc()
-    w = Window.orderBy(bin_order).rowsBetween(Window.unboundedPreceding, -1)
+    w = Window.orderBy(F.col("_rb").desc()).rowsBetween(Window.unboundedPreceding, -1)
     offs = hist.select(
         "_rb",
         F.coalesce(F.sum("_s").over(w), F.lit(0))
@@ -236,7 +219,7 @@ def with_bucketed_prefix_sum(
     return (
         b.join(F.broadcast(offs), "_rb")
         .withColumn(
-            sum_name,
+            "cum_cents",
             (F.sum("_psv").over(run) + F.col("_off_s")).cast("bigint"),
         )
         .drop("_rb", "_off_s", "_psv")
@@ -252,13 +235,18 @@ def _exact_div(num: Column, den: Column) -> Column:
     return ((num - num % den) / den).cast("bigint")
 
 
-def ntile_from_rank(rank: Column, total: Column, k: int) -> Column:
-    """SQL ``ntile(k)`` reconstructed from an exact global row number:
-    the first ``total % k`` tiles take ``total // k + 1`` rows, the rest
-    ``total // k`` — exact integer arithmetic only (``_exact_div``), so
-    the bucket boundary can never flicker against the oracle's ntile."""
-    q = _exact_div(total, F.lit(k))
-    r = total % k
+#: ntile_from_rank's tile count: deciles
+NTILES = 10
+
+
+def ntile_from_rank(rank: Column, total: Column) -> Column:
+    """SQL ``ntile(NTILES)`` reconstructed from an exact global row
+    number: the first ``total % NTILES`` tiles take
+    ``total // NTILES + 1`` rows, the rest ``total // NTILES`` — exact
+    integer arithmetic only (``_exact_div``), so the bucket boundary can
+    never flicker against the oracle's ntile."""
+    q = _exact_div(total, F.lit(NTILES))
+    r = total % NTILES
     big = r * (q + 1)  # rows covered by the (q+1)-sized leading tiles
     return (
         F.when(rank <= big, _exact_div(rank - 1, q + 1))

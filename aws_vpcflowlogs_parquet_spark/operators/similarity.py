@@ -26,6 +26,10 @@ from aws_vpcflowlogs_parquet_spark.caching import track_persist
 
 SIM_ROUND = 6
 LSH_BITS = 8
+#: every top-k search: the first N_QUERIES vectors (by vec_id) query,
+#: and each keeps its TOPK nearest
+N_QUERIES = 8
+TOPK = 3
 
 DOT_EXPR = (
     "aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
@@ -34,20 +38,19 @@ DOT_EXPR = (
 NORM_EXPR = "sqrt(aggregate({a}, cast(0.0 as double), (acc, v) -> acc + v * v))"
 
 
-def _as_double(col: str) -> F.Column:
-    return F.col(col).cast("array<double>")
+def _as_double() -> F.Column:
+    """The ``embedding`` column as ``array<double>``."""
+    return F.col("embedding").cast("array<double>")
 
 
 def cosine_expr(a: str, b: str) -> str:
     return f"({DOT_EXPR.format(a=a, b=b)} / ({NORM_EXPR.format(a=a)} * {NORM_EXPR.format(a=b)}))"
 
 
-def brute_force_topk(
-    embeddings: DataFrame, n_queries: int = 8, k: int = 3
-) -> DataFrame:
+def brute_force_topk(embeddings: DataFrame) -> DataFrame:
     """Exact cosine top-k of each query vector against the full corpus."""
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("e"))
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
+    emb = embeddings.select("vec_id", _as_double().alias("e"))
+    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("q")
     )
     pairs = (
@@ -57,28 +60,27 @@ def brute_force_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
     return (
         pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= TOPK)
         .select("query_id", "vec_id", "sim", "rk")
     )
 
 
-def sign_lsh_bucket_expr(e: str, bits: int = LSH_BITS) -> str:
-    """8-bit bucket id from component signs (element_at is 1-based)."""
-    terms = [
-        f"(CASE WHEN element_at({e}, {i + 1}) > 0 THEN {2 ** i} ELSE 0 END)"
-        for i in range(bits)
-    ]
-    return "(" + " + ".join(terms) + ")"
+#: the LSH_BITS-bit bucket id of ``embedding`` from its component signs
+#: (element_at is 1-based); plans/catalog.py's DuckDB twin reads LSH_BITS
+LSH_BUCKET_EXPR = "(" + " + ".join(
+    f"(CASE WHEN element_at(embedding, {i + 1}) > 0 THEN {2 ** i} ELSE 0 END)"
+    for i in range(LSH_BITS)
+) + ")"
 
 
-def lsh_topk(embeddings: DataFrame, n_queries: int = 8, k: int = 3) -> DataFrame:
+def lsh_topk(embeddings: DataFrame) -> DataFrame:
     """ANN top-k restricted to the query's sign-LSH bucket."""
     emb = embeddings.select(
         "vec_id",
-        _as_double("embedding").alias("e"),
-        F.expr(sign_lsh_bucket_expr("embedding")).alias("bucket"),
+        _as_double().alias("e"),
+        F.expr(LSH_BUCKET_EXPR).alias("bucket"),
     )
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
+    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("q"),
         F.col("bucket").alias("qbucket"),
@@ -93,25 +95,24 @@ def lsh_topk(embeddings: DataFrame, n_queries: int = 8, k: int = 3) -> DataFrame
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
     return (
         pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= TOPK)
         .select("query_id", "vec_id", "bucket", "sim", "rk")
     )
 
 
 IVF_CENTROIDS = 8
-IVF_QUERIES = 8
 
 
-def ivf_assign(embeddings: DataFrame, n_centroids: int = IVF_CENTROIDS) -> DataFrame:
+def ivf_assign(embeddings: DataFrame) -> DataFrame:
     """(vec_id, e, cell): each vector assigned to its nearest centroid.
 
-    Centroids are the first ``n_centroids`` vectors by vec_id — a
+    Centroids are the first ``IVF_CENTROIDS`` vectors by vec_id — a
     deterministic stand-in for a k-means fit (the *assignment* dataflow is
     what matters for the plan: centroid table broadcast, one corpus scan,
     argmax per vector, no shuffle). Ties break on (rounded sim, cent_id).
     """
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("e"))
-    cents = emb.filter(F.col("vec_id") < n_centroids).select(
+    emb = embeddings.select("vec_id", _as_double().alias("e"))
+    cents = emb.filter(F.col("vec_id") < IVF_CENTROIDS).select(
         F.col("vec_id").alias("cent_id"), F.col("e").alias("c")
     )
     scored = emb.join(F.broadcast(cents)).withColumn(
@@ -125,12 +126,7 @@ def ivf_assign(embeddings: DataFrame, n_centroids: int = IVF_CENTROIDS) -> DataF
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    n_centroids: int = IVF_CENTROIDS,
-    n_queries: int = IVF_QUERIES,
-    k: int = 3,
-) -> DataFrame:
+def ivf_topk(embeddings: DataFrame) -> DataFrame:
     """IVF (inverted-file) ANN: probe only the query's centroid cell.
 
     The scale path beside :func:`lsh_topk`: comparisons drop from n·q to
@@ -139,9 +135,10 @@ def ivf_topk(
     touch one partition per query. nprobe=1 here; production raises nprobe
     by joining on the query's top-p cells instead of its argmax cell.
     """
-    assigned = track_persist(ivf_assign(embeddings, n_centroids))
+    assigned = track_persist(ivf_assign(embeddings))
     queries = assigned.filter(
-        (F.col("vec_id") >= n_centroids) & (F.col("vec_id") < n_centroids + n_queries)
+        (F.col("vec_id") >= IVF_CENTROIDS)
+        & (F.col("vec_id") < IVF_CENTROIDS + N_QUERIES)
     ).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("q"),
@@ -154,7 +151,7 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
     return (
         pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= TOPK)
         .select("query_id", "vec_id", "cell", "sim", "rk")
     )
 
@@ -162,14 +159,8 @@ def ivf_topk(
 IVF_NPROBE = 2
 
 
-def ivf_topk_multiprobe(
-    embeddings: DataFrame,
-    n_centroids: int = IVF_CENTROIDS,
-    n_queries: int = IVF_QUERIES,
-    k: int = 3,
-    nprobe: int = IVF_NPROBE,
-) -> DataFrame:
-    """Multi-probe IVF ANN: probe the query's ``nprobe`` nearest cells.
+def ivf_topk_multiprobe(embeddings: DataFrame) -> DataFrame:
+    """Multi-probe IVF ANN: probe the query's ``IVF_NPROBE`` nearest cells.
 
     The production refinement over :func:`ivf_topk` (nprobe=1): recall
     lost to queries near a cell boundary is recovered by also scanning
@@ -180,8 +171,8 @@ def ivf_topk_multiprobe(
     and a query's probe cells are distinct, so no candidate dedup step is
     needed — (query_id, vec_id) pairs are unique by construction.
     """
-    emb = embeddings.select("vec_id", _as_double("embedding").alias("e"))
-    cents = emb.filter(F.col("vec_id") < n_centroids).select(
+    emb = embeddings.select("vec_id", _as_double().alias("e"))
+    cents = emb.filter(F.col("vec_id") < IVF_CENTROIDS).select(
         F.col("vec_id").alias("cent_id"), F.col("e").alias("c")
     )
     scored = emb.join(F.broadcast(cents)).withColumn(
@@ -193,9 +184,9 @@ def ivf_topk_multiprobe(
         "vec_id", "e", F.col("cent_id").alias("cell")
     )
     probes = ranked.filter(
-        (F.col("crk") <= nprobe)
-        & (F.col("vec_id") >= n_centroids)
-        & (F.col("vec_id") < n_centroids + n_queries)
+        (F.col("crk") <= IVF_NPROBE)
+        & (F.col("vec_id") >= IVF_CENTROIDS)
+        & (F.col("vec_id") < IVF_CENTROIDS + N_QUERIES)
     ).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("q"),
@@ -208,29 +199,33 @@ def ivf_topk_multiprobe(
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
     return (
         pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= TOPK)
         .select("query_id", "vec_id", "cell", "sim", "rk")
     )
 
 
-def embedding_near_dup_pairs(
-    embeddings: DataFrame, sample_mod: int = 5, threshold: float = 0.9
-) -> DataFrame:
+#: embedding_near_dup_pairs: every NEAR_DUP_SAMPLE_MOD-th vector, and
+#: the cosine a pair must reach
+NEAR_DUP_SAMPLE_MOD = 5
+NEAR_DUP_COSINE = 0.9
+
+
+def embedding_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
     """Embedding-cosine near-dup pairs, blocked on the sign-LSH bucket.
 
-    The block key is :func:`sign_lsh_bucket_expr` — the same sub-quadratic
+    The block key is :data:`LSH_BUCKET_EXPR` — the same sub-quadratic
     key the ANN path uses — so the candidate join is an equi-join on the
     bucket id and comparisons drop from n² to Σ|bucket|². Cosine ≥ 0.9
     vectors agree on almost all sign bits, so recall loss is the standard
     LSH trade; at 100 TB this is the only blocking that stays sub-quadratic
-    when a label spans a large fraction of the corpus. ``sample_mod``
-    bounds the oracle-checkable form; both sides emit (vec_a, vec_b,
+    when a label spans a large fraction of the corpus.
+    ``NEAR_DUP_SAMPLE_MOD`` bounds the oracle-checkable form; both sides emit (vec_a, vec_b,
     bucket, sim) so the driver hash-compare is exact.
     """
-    emb = embeddings.filter(F.col("vec_id") % sample_mod == 0).select(
+    emb = embeddings.filter(F.col("vec_id") % NEAR_DUP_SAMPLE_MOD == 0).select(
         "vec_id",
-        _as_double("embedding").alias("e"),
-        F.expr(sign_lsh_bucket_expr("embedding")).alias("bucket"),
+        _as_double().alias("e"),
+        F.expr(LSH_BUCKET_EXPR).alias("bucket"),
     )
     a = emb.select(
         F.col("vec_id").alias("vec_a"), F.col("bucket"), F.col("e").alias("ea")
@@ -243,6 +238,6 @@ def embedding_near_dup_pairs(
     pairs = a.join(
         b, (F.col("bucket") == F.col("bucket_b")) & (F.col("vec_a") < F.col("vec_b"))
     ).withColumn("sim", F.round(F.expr(cosine_expr("ea", "eb")), SIM_ROUND))
-    return pairs.filter(F.col("sim") >= threshold).select(
+    return pairs.filter(F.col("sim") >= NEAR_DUP_COSINE).select(
         "vec_a", "vec_b", "bucket", "sim"
     )

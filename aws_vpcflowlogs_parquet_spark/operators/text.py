@@ -39,7 +39,7 @@ def _marker_count(tokens: str, markers: tuple[str, ...]) -> str:
 
 
 def lang_scores(documents: DataFrame) -> DataFrame:
-    toks = TOKENS_EXPR.format(col="text")
+    toks = TOKENS_EXPR
     return documents.select(
         "doc_id",
         "lang",
@@ -76,7 +76,7 @@ def token_counts(documents: DataFrame) -> DataFrame:
     shuffle of (lang, counts) pairs: partial aggregation does the heavy
     lifting map-side.
     """
-    toks = TOKENS_EXPR.format(col="text")
+    toks = TOKENS_EXPR
     per_doc = documents.select(
         "lang",
         F.expr(f"size({toks})").alias("n_ws_tokens"),
@@ -95,7 +95,7 @@ def token_counts(documents: DataFrame) -> DataFrame:
 def quality_scores(documents: DataFrame) -> DataFrame:
     """Per-doc quality features: length, punctuation ratio, stopword ratio,
     mean token length — composed into one deterministic score."""
-    toks = TOKENS_EXPR.format(col="text")
+    toks = TOKENS_EXPR
     en = _marker_count(toks, LANG_MARKERS["en"])
     df = documents.select(
         "doc_id",
@@ -123,8 +123,12 @@ def quality_scores(documents: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
-    """Top-k TF-IDF terms per document — the retrieval/feature-extraction
+#: tfidf_top_terms keeps this many terms per document
+TFIDF_TOPK = 3
+
+
+def tfidf_top_terms(documents: DataFrame) -> DataFrame:
+    """Top-``TFIDF_TOPK`` TF-IDF terms per document — the retrieval/feature-extraction
     primitive of an LLM data pipeline, fully relational:
 
     explode tokens → per-(doc, term) tf (hash agg, map-side combine) →
@@ -135,7 +139,7 @@ def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
     Scales like the wordcount queries: shuffles keyed on term/doc only,
     score rounded for cross-engine determinism.
     """
-    toks = TOKENS_EXPR.format(col="text")
+    toks = TOKENS_EXPR
     tok_rows = documents.select("doc_id", F.explode(F.expr(toks)).alias("t"))
     tf = tok_rows.groupBy("doc_id", "t").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("t").agg(F.count("*").alias("df"))
@@ -163,7 +167,7 @@ def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("t"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= TFIDF_TOPK)
         .select("doc_id", F.col("t").alias("term"), "tf", "df", "tfidf",
                 F.col("rk").cast("int").alias("rk"))
     )
@@ -188,7 +192,7 @@ def fingerprint_expr(tokens: str) -> str:
 
 
 def fingerprints(documents: DataFrame) -> DataFrame:
-    toks = TOKENS_EXPR.format(col="text")
+    toks = TOKENS_EXPR
     return documents.select(
         "doc_id", F.expr(fingerprint_expr(toks)).alias("fingerprint")
     )
@@ -198,11 +202,7 @@ CHUNK_WINDOW = 32  # tokens per chunk
 CHUNK_STRIDE = 24  # tokens between chunk starts (8-token overlap)
 
 
-def chunk_windows(
-    documents: DataFrame,
-    window: int = CHUNK_WINDOW,
-    stride: int = CHUNK_STRIDE,
-) -> DataFrame:
+def chunk_windows(documents: DataFrame) -> DataFrame:
     """Split each document's token stream into fixed-size context windows
     with overlap — the chunking step that feeds an embedding or training
     pipeline. Number of chunks is exact integer arithmetic
@@ -211,12 +211,14 @@ def chunk_windows(
     arithmetic: sequence→explode fans out chunk indices executor-side
     (rows ∝ Σ chunks, no driver loop), slice/concat_ws build the chunk —
     no shuffle at all, output partitioning follows input."""
-    toks = F.expr(TOKENS_EXPR.format(col="text"))
+    toks = F.expr(TOKENS_EXPR)
     d = documents.select("doc_id", toks.alias("t")).withColumn(
         "n_tokens", F.size("t")
     )
-    n_chunks = F.when(F.col("n_tokens") <= window, F.lit(1)).otherwise(
-        F.expr(f"int((n_tokens - {window} + {stride} - 1) div {stride}) + 1")
+    n_chunks = F.when(F.col("n_tokens") <= CHUNK_WINDOW, F.lit(1)).otherwise(
+        F.expr(
+            f"int((n_tokens - {CHUNK_WINDOW} + {CHUNK_STRIDE} - 1) div {CHUNK_STRIDE}) + 1"
+        )
     )
     return (
         d.withColumn("chunk_idx", F.explode(F.sequence(F.lit(0), n_chunks - 1)))
@@ -224,7 +226,7 @@ def chunk_windows(
             "doc_id",
             "chunk_idx",
             F.slice(
-                F.col("t"), F.col("chunk_idx") * stride + 1, F.lit(window)
+                F.col("t"), F.col("chunk_idx") * CHUNK_STRIDE + 1, F.lit(CHUNK_WINDOW)
             ).alias("chunk_toks"),
         )
         .select(
@@ -236,9 +238,13 @@ def chunk_windows(
     )
 
 
-def contamination(documents: DataFrame, probe_mod: int = 101) -> DataFrame:
+#: contamination: every PROBE_MOD-th document stands in for the benchmark
+PROBE_MOD = 101
+
+
+def contamination(documents: DataFrame) -> DataFrame:
     """Train/test decontamination: which training documents share a
-     3-token shingle with the benchmark set (here: every ``probe_mod``-th
+     3-token shingle with the benchmark set (here: every ``PROBE_MOD``-th
     doc stands in for the benchmark). The probe's distinct shingle set is
     tiny next to the corpus, so the overlap check is a broadcast semi
     join against the train shingles — at 100 TB the corpus-side shingles
@@ -248,9 +254,9 @@ def contamination(documents: DataFrame, probe_mod: int = 101) -> DataFrame:
 
     sh = shingle_rows(documents)
     probe = (
-        sh.filter((F.col("doc_id") % probe_mod) == 0).select("s").distinct()
+        sh.filter((F.col("doc_id") % PROBE_MOD) == 0).select("s").distinct()
     )
-    train = sh.filter((F.col("doc_id") % probe_mod) != 0)
+    train = sh.filter((F.col("doc_id") % PROBE_MOD) != 0)
     totals = train.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     overlap = (
         train.join(F.broadcast(probe), "s")
@@ -275,7 +281,7 @@ def repetition_scores(documents: DataFrame) -> DataFrame:
     (no shingles, ratio undefined)."""
     from .dedup import SHINGLE_K, shingle_rows
 
-    toks = F.expr(TOKENS_EXPR.format(col="text"))
+    toks = F.expr(TOKENS_EXPR)
     totals = documents.select(
         "doc_id", (F.size(toks) - (SHINGLE_K - 1)).alias("n_total")
     ).filter(F.col("n_total") > 0)

@@ -11,28 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# Raw v2 text fields, in line order (reference flowlog.go:36-90;
-# samples/sample1.log header). Field #10/#11 are renamed start→start_ts,
-# end→end_ts at rest (flowlog.go:25-26 parquet tags).
-RAW_FIELDS = [
-    "version",
-    "account_id",
-    "interface_id",
-    "srcaddr",
-    "dstaddr",
-    "srcport",
-    "dstport",
-    "protocol",
-    "packets",
-    "bytes",
-    "start",
-    "end",
-    "action",
-    "log_status",
-]
-
-# column name at rest -> (raw index, spark type)
-# Names follow the Glue table (template.yml:130-158): lowercase, no dashes.
+# column name at rest -> (raw index, spark type), in v2 line order
+# (reference flowlog.go:36-90; samples/sample1.log header). Names follow
+# the Glue table (template.yml:130-158): lowercase, no dashes, and the raw
+# start/end fields are start_ts/end_ts at rest (flowlog.go:25-26).
 FLOW_COLUMNS: dict[str, tuple[int, T.DataType]] = {
     "version": (0, T.IntegerType()),
     "accountid": (1, T.StringType()),
@@ -61,5 +43,5 @@ FLOW_SCHEMA = T.StructType(
 # (convert.go:86).
 PARTITION_COLUMNS = ["dt", "account", "src"]
 
-NUM_RAW_TOKENS = len(RAW_FIELDS)  # arity predicate: exactly 14 (flowlog.go:36-40)
+NUM_RAW_TOKENS = len(FLOW_COLUMNS)  # arity predicate: exactly 14 (flowlog.go:36-40)
 SUPPORTED_VERSION = 2  # version gate (flowlog.go:46-48)

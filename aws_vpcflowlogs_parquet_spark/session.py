@@ -34,6 +34,21 @@ from pyspark.sql import SparkSession
 #: gives each segment 2,048, room for hash skew and catalog growth.
 CODEGEN_CACHE_ENTRIES = 8192
 
+#: The runtime posture every session gets, ours or a caller's; the
+#: shuffle partitions (sized to the session's cores) complete it.
+POSTURE = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # events.parquet stores TIMESTAMP(NANOS); read as long, converted
+    # to a timestamp in sources/tables.py
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # dt/account/src partition values stay STRING (the reference's Glue
+    # table declares them string, template.yml:122-126); inference would
+    # turn dt= dirs into DATE and account= (or an all-digit src=) into LONG
+    "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
+}
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -44,17 +59,7 @@ def get_spark(app_name: str = "aws-vpcflowlogs-parquet-spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # dt/account/src partition values stay STRING (the reference's
-        # Glue table declares them string, template.yml:122-126); inference
-        # would turn dt= dirs into DATE and account= (or an all-digit src=)
-        # into LONG
-        .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # 128 MB row groups — parity with the reference writer (parquet.go:34)
@@ -69,15 +74,15 @@ def get_spark(app_name: str = "aws-vpcflowlogs-parquet-spark") -> SparkSession:
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return ensure_session_posture(spark)
 
 
 def ensure_session_posture(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable posture to a session we did not create.
-
-    The driver passes its own SparkSession into ``queries()`` callables; the
-    settings that affect result correctness (timezone) or plan quality (AQE)
-    are runtime-settable and applied here.
+    """Apply the runtime posture (:data:`POSTURE` and the shuffle
+    partitions) to a session: ``get_spark``'s own, and one we did not
+    create — a caller may pass its own SparkSession into ``queries()``
+    callables; the settings that affect result correctness (timezone) or
+    plan quality (AQE) are runtime-settable and applied here.
 
     Static confs cannot be set here, so a driver-supplied session keeps
     Spark's defaults for them; notably ``spark.sql.codegen.cache.maxEntries``
@@ -93,19 +98,12 @@ def ensure_session_posture(spark: SparkSession) -> SparkSession:
     if getattr(spark, "_graft_postured", False):
         return spark
     spark._graft_postured = True
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    for key, value in POSTURE.items():
+        spark.conf.set(key, value)
     # size the pre-AQE shuffle fan-out to the actual core count: the 200
     # default costs real time on streaming stateful ops, which allocate one
     # state store per shuffle partition (AQE does not re-plan streams)
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    # events.parquet stores TIMESTAMP(NANOS); read as long, converted
-    # to a timestamp in sources/tables.py.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
     )
     return spark

@@ -71,10 +71,11 @@ class FlowLogParseError(ValueError):
     """Strict-mode analogue of the reference's abort-on-error (convert.go:48-50)."""
 
 
-def tokenize(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """Split on a single space (flowlog.go:36) and attach validity flags
-    ``_n_toks``, ``_is_header`` and ``_is_valid``."""
-    toks = df.selectExpr("*", f"split(`{value_col}`, ' ') AS _toks")
+def tokenize(df: DataFrame) -> DataFrame:
+    """Split each ``value`` line (``spark.read.text``'s column) on a
+    single space (flowlog.go:36) and attach validity flags ``_n_toks``,
+    ``_is_header`` and ``_is_valid``."""
+    toks = df.selectExpr("*", "split(`value`, ' ') AS _toks")
     return toks.selectExpr("*", *_FLAG_EXPRS)
 
 
@@ -88,15 +89,13 @@ def typed_projection(df: DataFrame) -> DataFrame:
     return df.selectExpr(*_TYPED_EXPRS)
 
 
-def parse_flowlog_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_flowlog_lines(lines: DataFrame) -> DataFrame:
     """Lines DataFrame → typed FlowLog DataFrame; malformed lines are
     dropped. Strict callers use :func:`parse_flowlog_lines_observed`."""
-    return typed_projection(tokenize(lines, value_col).filter("_is_valid"))
+    return typed_projection(tokenize(lines).filter("_is_valid"))
 
 
-def parse_flowlog_lines_observed(
-    lines: DataFrame, value_col: str = "value"
-) -> tuple[DataFrame, Observation]:
+def parse_flowlog_lines_observed(lines: DataFrame) -> tuple[DataFrame, Observation]:
     """Lines → typed DataFrame plus an :class:`Observation` for single-pass
     strict validation.
 
@@ -108,10 +107,10 @@ def parse_flowlog_lines_observed(
     convert.go:48-50).
     """
     obs = Observation()
-    tok = tokenize(lines, value_col).observe(
+    tok = tokenize(lines).observe(
         obs,
         F.expr(f"sum(CAST({_IS_BAD_SQL} AS BIGINT)) AS n_bad"),
-        F.expr(f"max(CASE WHEN {_IS_BAD_SQL} THEN `{value_col}` END) AS sample_bad"),
+        F.expr(f"max(CASE WHEN {_IS_BAD_SQL} THEN `value` END) AS sample_bad"),
     )
     return typed_projection(tok.filter("_is_valid")), obs
 

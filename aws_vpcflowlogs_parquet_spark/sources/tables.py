@@ -57,7 +57,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def convert_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:
+def convert_nanos_ts(df: DataFrame) -> DataFrame:
     """Normalize events.ts to a session-zone TIMESTAMP regardless of how the
     generator wrote it:
 
@@ -70,11 +70,11 @@ def convert_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    dtype = dict(df.dtypes).get(col)
+    dtype = dict(df.dtypes).get("ts")
     if dtype == "bigint":
-        df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif dtype == "timestamp_ntz":
-        df = df.withColumn(col, F.col(col).cast("timestamp"))
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -22,38 +22,30 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.convert import register_flowlog_table, write_flowlog_partitions
+from ..operators.convert import write_flowlog_partitions
 from ..sources.flowlog import parse_flowlog_lines
+
+#: files per micro-batch: the reference's reserved concurrency of 5
+#: Lambdas (template.yml:61-62)
+MAX_FILES_PER_TRIGGER = 5
 
 
 def start_flowlog_stream(
-    spark: SparkSession,
-    src_dir: str,
-    dst_path: str,
-    checkpoint_dir: str,
-    table: str | None = None,
-    max_files_per_trigger: int = 5,
+    spark: SparkSession, src_dir: str, dst_path: str, checkpoint_dir: str
 ) -> StreamingQuery:
-    """Watch ``src_dir`` for flow-log text files; convert each micro-batch.
-
-    ``max_files_per_trigger=5`` mirrors the reference's reserved
-    concurrency of 5 Lambdas (template.yml:61-62). Partition registration
-    (the reference's per-key ALTER TABLE, main.go:175-196) happens inside
-    ``foreachBatch`` through the batch converter's
-    :func:`register_flowlog_table` — one statement per micro-batch, the
-    table created at ``dst_path`` if missing — when ``table`` is given.
-    """
+    """Watch ``src_dir`` for flow-log text files; convert each micro-batch
+    of up to ``MAX_FILES_PER_TRIGGER`` files into the table at
+    ``dst_path``. The stream registers nothing: ``register`` (one ``MSCK
+    REPAIR``) makes its partitions visible in the catalog."""
     lines = (
         spark.readStream.format("text")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .load(src_dir)
     )
     parsed = parse_flowlog_lines(lines)
 
     def write_batch(batch_df, epoch_id: int) -> None:
-        keys = write_flowlog_partitions(batch_df, dst_path)
-        if table is not None and keys:
-            register_flowlog_table(batch_df.sparkSession, table, dst_path, partitions=keys)
+        write_flowlog_partitions(batch_df, dst_path)
 
     return (
         parsed.writeStream.foreachBatch(write_batch)

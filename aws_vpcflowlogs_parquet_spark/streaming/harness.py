@@ -75,14 +75,14 @@ def staged_events_dir(sf_dir: str) -> str:
     return _STAGED_DIR_CACHE[key]
 
 
-def parquet_max_ts(path: str, column: str = "ts"):
-    """max(column) read from the parquet FOOTER's row-group statistics —
+def parquet_max_ts(path: str):
+    """max(ts) read from the parquet FOOTER's row-group statistics —
     metadata-only, never loads a data page (ADVICE r7: the sentinel
     staging was pulling the whole ts column to the driver)."""
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(path)
-    idx = pf.schema_arrow.get_field_index(column)
+    idx = pf.schema_arrow.get_field_index("ts")
     mx = None
     for rg in range(pf.metadata.num_row_groups):
         st = pf.metadata.row_group(rg).column(idx).statistics
@@ -91,7 +91,7 @@ def parquet_max_ts(path: str, column: str = "ts"):
     if mx is None:  # stats suppressed (never on our writers) — fall back
         import pyarrow.compute as pc
 
-        mx = pc.max(pq.read_table(path, columns=[column])[column]).as_py()
+        mx = pc.max(pq.read_table(path, columns=["ts"])["ts"]).as_py()
     return mx
 
 

@@ -9,6 +9,9 @@ caller sinks; watermarks bound state so they run forever at 100 TB/day:
 - tumbling/sliding window aggregations over event time
 - session windows (gap-based)
 - exact dedup within a watermark horizon
+- one stream-stream join within an event-time horizon, inner or outer
+- custom stateful operators (running stats, CEP patterns, absence,
+  funnels) on ``applyInPandasWithState``
 
 The batch twins of these semantics are oracle-verified in the catalog
 (q_time_bucket, q_session_dedup); streaming tests drive file sources to
@@ -23,17 +26,17 @@ from pyspark.sql import functions as F
 from ..functions.casts import exact_sum
 
 
-def tumbling_agg(
-    events: DataFrame,
-    window_len: str = "1 hour",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Tumbling event-time windows; late rows beyond the watermark drop out
-    of state instead of accumulating it."""
+#: every operator's event-time column and watermark delay (late rows
+#: beyond it drop out of state instead of accumulating it)
+TS = "ts"
+WATERMARK = "30 minutes"
+
+
+def tumbling_agg(events: DataFrame) -> DataFrame:
+    """1-hour tumbling event-time windows per event type."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window_len), F.col("event_type"))
+        events.withWatermark(TS, WATERMARK)
+        .groupBy(F.window(TS, "1 hour"), F.col("event_type"))
         .agg(
             F.count("*").alias("n"),
             exact_sum("value", 2).alias("sum_value"),
@@ -48,17 +51,11 @@ def tumbling_agg(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window_len: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Sliding windows: each event lands in window_len/slide buckets."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """1-hour windows every 30 minutes: each event lands in two."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window_len, slide))
+        events.withWatermark(TS, WATERMARK)
+        .groupBy(F.window(TS, "1 hour", "30 minutes"))
         .agg(F.count("*").alias("n"))
         .select(
             F.col("window.start").alias("window_start"),
@@ -68,17 +65,16 @@ def sliding_counts(
     )
 
 
-def sessionized(
-    events: DataFrame,
-    gap: str = "20 minutes",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
+#: session_window gap: a session closes after 30 quiet minutes
+SESSION_GAP = "30 minutes"
+
+
+def sessionized(events: DataFrame) -> DataFrame:
     """Gap-based session windows per user (session_window merges runs of
-    events separated by < gap)."""
+    events separated by < SESSION_GAP)."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap), F.col("user_id"))
+        events.withWatermark(TS, WATERMARK)
+        .groupBy(F.session_window(TS, SESSION_GAP), F.col("user_id"))
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("session_window.start").alias("session_start"),
@@ -89,11 +85,7 @@ def sessionized(
     )
 
 
-def stateful_user_stats(
-    events: DataFrame,
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
+def stateful_user_stats(events: DataFrame) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: per-user
     running stats (event count, max value, last event time) maintained in
     explicit group state across micro-batches.
@@ -120,7 +112,7 @@ def stateful_user_stats(
             v = pdf["value"].max()
             if not pd.isna(v):
                 mx = float(v) if mx is None else max(mx, float(v))
-            t = pdf[ts_col].max()
+            t = pdf[TS].max()
             if not pd.isna(t):
                 t_us = t.value // 1000  # pd.Timestamp.value is ns
                 last_us = t_us if last_us is None else max(last_us, t_us)
@@ -137,7 +129,7 @@ def stateful_user_stats(
         )
 
     return (
-        events.withWatermark(ts_col, watermark)
+        events.withWatermark(TS, WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
@@ -146,65 +138,64 @@ def stateful_user_stats(
 
 
 def stream_stream_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    horizon: str = "30 minutes",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
+    left: DataFrame, right: DataFrame, how: str, horizon: str
 ) -> DataFrame:
-    """Stream-stream inner join within an event-time horizon: each left
-    event pairs with right events for the same key whose timestamp falls
-    in ``[left.ts, left.ts + horizon]``.
+    """Stream-stream join within an event-time horizon: each left event
+    pairs with the right events of the same user whose timestamp falls in
+    ``[left.ts, left.ts + horizon]``; ``how`` is the join type
+    (``inner``, ``left_outer``, ``full_outer``).
 
-    Both sides carry a watermark and the join condition bounds right.ts
-    relative to left.ts, which is what lets Spark expire buffered state on
-    BOTH sides: a left row can be dropped once the right watermark passes
-    ``left.ts + horizon``, and a right row once the left watermark passes
-    ``right.ts``. Without the time-range condition the state store grows
-    without bound — the difference between a demo and an operator that
-    survives an unbounded 100 TB/day feed. Matches emit immediately
-    (inner-join append semantics), so latency is one micro-batch, not one
-    watermark delay.
+    CONTRACT: both inputs already carry event-time watermarks, applied
+    UPSTREAM of any filtering — a watermark node placed after a filter
+    never sees the pusher rows the filter drops. The time-range condition
+    is what lets Spark expire buffered state on BOTH sides: a left row
+    can be dropped once the right watermark passes ``left.ts + horizon``,
+    and a right row once the left watermark passes ``right.ts``. Without
+    it the state store grows without bound — the difference between a
+    demo and an operator that survives an unbounded 100 TB/day feed.
+
+    Inner matches emit immediately (append semantics), so latency is one
+    micro-batch, not one watermark delay. An outer join's null rows are
+    different: "unmatched" is only a fact once the watermark PROVES no
+    future row can still match, and the two proofs are asymmetric — an
+    unmatched LEFT row needs the right watermark past ``l_ts + horizon``,
+    an unmatched RIGHT row needs the left watermark past ``r_ts`` only
+    (its matching lefts all lie at or before it). A terminating
+    (availableNow) run therefore needs watermark-pusher batches AFTER the
+    data on every side whose nulls it emits — the join emits nothing for
+    still-buffered rows at end-of-stream otherwise (see the sentinel
+    staging of q_stream_join_outer and q_stream_join_full_outer).
     """
-    l = left.withWatermark(ts_col, watermark).select(
-        F.col(key).alias("l_key"),
+    l = left.select(
+        F.col("user_id").alias("l_key"),
         F.col("event_id").alias("l_event_id"),
-        F.col(ts_col).alias("l_ts"),
+        F.col(TS).alias("l_ts"),
     )
-    r = right.withWatermark(ts_col, watermark).select(
-        F.col(key).alias("r_key"),
+    r = right.select(
+        F.col("user_id").alias("r_key"),
         F.col("event_id").alias("r_event_id"),
-        F.col(ts_col).alias("r_ts"),
+        F.col(TS).alias("r_ts"),
     )
     return l.join(
         r,
         (F.col("l_key") == F.col("r_key"))
         & (F.col("r_ts") >= F.col("l_ts"))
         & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {horizon}")),
-        "inner",
+        how,
     )
 
 
-def streaming_dedup(
-    events: DataFrame,
-    keys: list[str],
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Exactly-once-per-key within the watermark horizon: the streaming
-    form of exact dedup — state is bounded by the watermark, so this
-    sustains unbounded input (operators/dedup.py holds the batch forms)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        keys + [ts_col]
+def streaming_dedup(events: DataFrame) -> DataFrame:
+    """Exactly-once per (user, event type) within the watermark horizon:
+    the streaming form of exact dedup — state is bounded by the
+    watermark, so this sustains unbounded input (operators/dedup.py
+    holds the batch forms)."""
+    return events.withWatermark(TS, WATERMARK).dropDuplicatesWithinWatermark(
+        ["user_id", "event_type", TS]
     )
 
 
-def stream_cep_peaks(
-    events: DataFrame,
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
+def stream_cep_peaks(events: DataFrame) -> DataFrame:
     """Streaming CEP pattern match (the Flink-CEP / MATCH_RECOGNIZE
     shape) via ``applyInPandasWithState``: per user, detect
     rise-rise-peak-fall — two strictly increasing steps into a local
@@ -247,7 +238,7 @@ def stream_cep_peaks(
     # what the closure uses), and the events stream carries a wide JSON
     # props column the automaton never reads. Together with the numpy
     # per-key fast path below: 4.95 -> 3.0 s on the sf0.1 bench entry.
-    events = events.select("user_id", ts_col, "event_id", "event_type", "value")
+    events = events.select("user_id", TS, "event_id", "event_type", "value")
 
     def update(key, pdf_iter, state: GroupState):
         # per-KEY fast path (this closure runs ~|users| times per
@@ -261,7 +252,7 @@ def stream_cep_peaks(
         ts_l, eid_l, typ_l, val_l = [], [], [], []
         for pdf in pdf_iter:
             if len(pdf):
-                ts_l.append(pdf[ts_col].to_numpy())
+                ts_l.append(pdf[TS].to_numpy())
                 eid_l.append(pdf["event_id"].to_numpy())
                 typ_l.append(pdf["event_type"].to_numpy())
                 val_l.append(pdf["value"].to_numpy())
@@ -282,7 +273,7 @@ def stream_cep_peaks(
             yield cep_out_frame(pd, key[0], counts)
 
     return (
-        events.withWatermark(ts_col, watermark)
+        events.withWatermark(TS, WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
@@ -362,103 +353,19 @@ def _cep_kernel():
     return cep_advance, cep_out_frame
 
 
-def stream_stream_join_left_outer(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    horizon: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """LEFT OUTER stream-stream join within an event-time horizon:
-    matches emit immediately (the inner rows), and an UNMATCHED left
-    row emits once with nulls — but only after the watermark PROVES no
-    future right row can still match it (right watermark past
-    ``left.ts + horizon``), because until then "unmatched" is not a
-    fact, it's a race. This is the semantic difference from the inner
-    join above: correctness of the null rows depends entirely on the
-    event-time discipline, which is why a terminating (availableNow)
-    run needs watermark-pusher batches AFTER the data — the join emits
-    nothing for still-buffered lefts at end-of-stream otherwise (see
-    q_stream_join_outer's sentinel staging).
-
-    CONTRACT: both inputs must already carry event-time watermarks,
-    applied UPSTREAM of any filtering — a watermark node placed after
-    a filter never sees the pusher rows the filter drops. State stays
-    bounded exactly as in the inner join: each side's buffer expires
-    against the other side's watermark plus the horizon."""
-    l = left.select(
-        F.col(key).alias("l_key"),
-        F.col("event_id").alias("l_event_id"),
-        F.col(ts_col).alias("l_ts"),
-    )
-    r = right.select(
-        F.col(key).alias("r_key"),
-        F.col("event_id").alias("r_event_id"),
-        F.col(ts_col).alias("r_ts"),
-    )
-    return l.join(
-        r,
-        (F.col("l_key") == F.col("r_key"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {horizon}")),
-        "left_outer",
-    )
+#: stream_absence: a click (the trigger) no purchase (the expected
+#: event) follows within one hour is an abandonment
+ABSENCE_TRIGGER = "click"
+ABSENCE_EXPECTED = "purchase"
+ABSENCE_GAP_US = 3_600_000_000
 
 
-def stream_stream_join_full_outer(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    horizon: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """FULL OUTER stream-stream join within an event-time horizon — the
-    left-outer join's proof obligation applied to BOTH sides, and the
-    two obligations are asymmetric: an unmatched LEFT row needs the
-    right watermark past ``l_ts + horizon`` (a future right could
-    still land anywhere in the window ahead of it), while an unmatched
-    RIGHT row needs the left watermark past ``r_ts`` only (matching
-    lefts satisfy ``l_ts ∈ [r_ts − horizon, r_ts]``, all at or before
-    the right row). A terminating run therefore needs pusher batches
-    that advance BOTH sides' watermarks past the data — one side alone
-    flushes only its own nulls (see q_stream_join_full_outer).
-
-    CONTRACT: both inputs must carry event-time watermarks applied
-    UPSTREAM of any filtering (the q_stream_join_outer lesson — a
-    filter pushed below the watermark node starves it). State bounds
-    are the inner join's on both sides."""
-    l = left.select(
-        F.col(key).alias("l_key"),
-        F.col("event_id").alias("l_event_id"),
-        F.col(ts_col).alias("l_ts"),
-    )
-    r = right.select(
-        F.col(key).alias("r_key"),
-        F.col("event_id").alias("r_event_id"),
-        F.col(ts_col).alias("r_ts"),
-    )
-    return l.join(
-        r,
-        (F.col("l_key") == F.col("r_key"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {horizon}")),
-        "full_outer",
-    )
-
-
-def stream_absence(
-    events: DataFrame,
-    trigger: str = "click",
-    expected: str = "purchase",
-    gap_us: int = 3_600_000_000,
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
+def stream_absence(events: DataFrame) -> DataFrame:
     """Streaming ABSENCE / timeout detection (the Flink-CEP
     ``notFollowedBy`` + within() shape, the second CEP family next to
     :func:`stream_cep_peaks`'s sequence matcher): per user, a TRIGGER
     event (click) with NO EXPECTED event (purchase) in the following
-    ``gap_us`` window is an abandonment — but absence is only
+    ``ABSENCE_GAP_US`` window is an abandonment — but absence is only
     *confirmable* once the stream provably advances past the deadline,
     so the operator emits a per-batch DELTA count of clicks whose
     deadline passed unanswered, and holds not-yet-decidable clicks in
@@ -466,8 +373,8 @@ def stream_absence(
 
     Decision rule per candidate click at t (identical to the batch
     twin in q_stream_absence's oracle): PRESENT if some expected event
-    has t < p_us <= t + gap_us; ABSENT once the key's observed horizon
-    (max event-time seen, any type) exceeds t + gap_us without such an
+    has t < p_us <= t + ABSENCE_GAP_US; ABSENT once the key's observed horizon
+    (max event-time seen, any type) exceeds t + ABSENCE_GAP_US without such an
     event; PENDING otherwise. ORDERING PRECONDITION: batch-monotonic
     per key, as stream_cep_peaks documents — within-watermark late
     rows landing in later batches are evaluated against the later
@@ -483,7 +390,7 @@ def stream_absence(
 
     out_schema = "user_id bigint, n_abandoned bigint"
     state_schema = "pending string"
-    events = events.select("user_id", ts_col, "event_type")
+    events = events.select("user_id", TS, "event_type")
 
     def update(key, pdf_iter, state: GroupState):
         import numpy as np
@@ -495,7 +402,7 @@ def stream_absence(
         for pdf in pdf_iter:
             if len(pdf):
                 us_l.append(
-                    pdf[ts_col]
+                    pdf[TS]
                     .to_numpy()
                     .astype("datetime64[us]")
                     .astype("int64")
@@ -506,10 +413,10 @@ def stream_absence(
             us = us_l[0] if len(us_l) == 1 else np.concatenate(us_l)
             typ = typ_l[0] if len(typ_l) == 1 else np.concatenate(typ_l)
             horizon = int(us.max())
-            exp_us = np.sort(us[typ == expected])
+            exp_us = np.sort(us[typ == ABSENCE_EXPECTED])
             cand = np.sort(
                 np.concatenate(
-                    [np.asarray(pend, dtype="int64"), us[typ == trigger]]
+                    [np.asarray(pend, dtype="int64"), us[typ == ABSENCE_TRIGGER]]
                 )
             )
             if len(cand):
@@ -522,10 +429,10 @@ def stream_absence(
                         exp_us[np.minimum(idx, len(exp_us) - 1)],
                         np.iinfo("int64").max,
                     )
-                    present = has_next & (nxt <= cand + gap_us)
+                    present = has_next & (nxt <= cand + ABSENCE_GAP_US)
                 else:
                     present = np.zeros(len(cand), dtype=bool)
-                expired = cand + gap_us < horizon
+                expired = cand + ABSENCE_GAP_US < horizon
                 absent = (~present) & expired
                 n_abandoned = int(absent.sum())
                 pend = [int(x) for x in cand[(~present) & (~expired)]]
@@ -536,7 +443,7 @@ def stream_absence(
             )
 
     return (
-        events.withWatermark(ts_col, watermark)
+        events.withWatermark(TS, WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -548,20 +455,21 @@ def stream_absence(
     )
 
 
-def stream_funnel(
-    events: DataFrame,
-    stages: tuple[str, str, str] = ("view", "click", "purchase"),
-    within_us: int = 172_800_000_000,
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
+#: stream_funnel: the three stages in order, and the window (2 days)
+#: the whole chain must complete within
+FUNNEL_STAGES = ("view", "click", "purchase")
+FUNNEL_WITHIN_US = 172_800_000_000
+
+
+def stream_funnel(events: DataFrame) -> DataFrame:
     """Streaming 3-STAGE FUNNEL matcher (the Flink-CEP ``next/followedBy``
     sequence-with-deadline shape — the third CEP family next to
     :func:`stream_cep_peaks`'s local-extremum matcher and
     :func:`stream_absence`'s notFollowedBy): per user, match the
-    EARLIEST deterministic chain v = first ``stages[0]`` event,
-    c = first ``stages[1]`` strictly after v, p = first ``stages[2]``
-    strictly after c; the funnel COMPLETES iff p - v <= ``within_us``.
+    EARLIEST deterministic chain v = first ``FUNNEL_STAGES[0]`` event,
+    c = first ``FUNNEL_STAGES[1]`` strictly after v, p = first
+    ``FUNNEL_STAGES[2]`` strictly after c; the funnel COMPLETES iff
+    p - v <= ``FUNNEL_WITHIN_US``.
 
     Emits (user_id, v_us, c_us, p_us) exactly once when the chain
     resolves within the window; a chain that resolves OUTSIDE the
@@ -576,10 +484,10 @@ def stream_funnel(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    s1, s2, s3 = stages
+    s1, s2, s3 = FUNNEL_STAGES
     out_schema = "user_id bigint, v_us bigint, c_us bigint, p_us bigint"
     state_schema = "v bigint, c bigint, done int"
-    events = events.select("user_id", ts_col, "event_type")
+    events = events.select("user_id", TS, "event_type")
 
     def update(key, pdf_iter, state: GroupState):
         import numpy as np
@@ -591,7 +499,7 @@ def stream_funnel(
         for pdf in pdf_iter:
             if len(pdf):
                 us_l.append(
-                    pdf[ts_col]
+                    pdf[TS]
                     .to_numpy()
                     .astype("datetime64[us]")
                     .astype("int64")
@@ -614,7 +522,7 @@ def stream_funnel(
                 if len(m):
                     p = int(m.min())
                     done = 1
-                    if p - v <= within_us:
+                    if p - v <= FUNNEL_WITHIN_US:
                         rows = pd.DataFrame(
                             {
                                 "user_id": [key[0]],
@@ -628,7 +536,7 @@ def stream_funnel(
             yield rows
 
     return (
-        events.withWatermark(ts_col, watermark)
+        events.withWatermark(TS, WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             update,

@@ -124,7 +124,6 @@ def main() -> None:
             src,
             os.path.join(work, "out_stream"),
             os.path.join(work, "ckpt"),
-            max_files_per_trigger=5,
         )
         q.processAllAvailable()
         q.stop()

@@ -1,6 +1,12 @@
-"""Dump .explain("formatted") for catalog queries to plans/r12/<q>_<tag>.txt.
+"""Dump .explain("formatted") of catalog queries to <out>/<q>_<tag>.txt.
 
-Usage: python scripts/dump_plans.py --tag before q_lsh_recall q_near_dup_rate
+Usage: python scripts/dump_plans.py --out DIR [--tag before] [q_lsh_recall ...]
+
+With no query names every registered query is dumped. Expression IDs
+(``#1234``) and exchange plan ids (``plan_id=56``) count up across a
+session, so they are stripped: two dumps of the same plan, from two
+checkouts, compare equal with ``diff -r``. The input is
+``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test tables).
 
 Iterative queries run driver-side jobs during build (localCheckpoint
 rounds); their dump therefore costs real compute — expected, we want the
@@ -9,7 +15,9 @@ final unrolled plan anyway.
 
 from __future__ import annotations
 
+import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -17,32 +25,27 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from aws_vpcflowlogs_parquet_spark.plans.catalog import QUERIES
 from aws_vpcflowlogs_parquet_spark.session import get_spark
 
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "plans",
-    os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r12"),
-)
+_SESSION_IDS = re.compile(r"(#|plan_id=)\d+")
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    tag = "before"
-    if "--tag" in args:
-        i = args.index("--tag")
-        tag = args[i + 1]
-        del args[i : i + 2]
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", required=True, help="directory the dumps are written to")
+    ap.add_argument("--tag", default="before")
+    ap.add_argument("names", nargs="*", help="default: every registered query")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.makedirs(OUT_DIR, exist_ok=True)
+    os.makedirs(args.out, exist_ok=True)
     spark = get_spark("dump-plans")
-    for name in args:
+    for name in args.names or sorted(QUERIES):
         df = QUERIES[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
+        path = os.path.join(args.out, f"{name}_{args.tag}.txt")
         with open(path, "w", encoding="utf-8") as fh:
-            fh.write(plan)
-        print(f"wrote {path} ({len(plan)} bytes)")
+            fh.write(_SESSION_IDS.sub(r"\1", plan))
+        print(f"wrote {path} ({len(plan)} bytes)", flush=True)
 
 
 if __name__ == "__main__":

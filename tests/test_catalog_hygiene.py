@@ -86,6 +86,19 @@ _TEST_ONLY_ALLOWED = {
 }
 
 
+# the entry points outside the package
+_ENTRY_FILES = [
+    *sorted((_REPO / "scripts").glob("*.py")),
+    *sorted((_REPO / "perfbench").glob("*.py")),
+    _REPO / "bench.py",
+    _REPO / "__spark_entry__.py",
+]
+
+
+def _is_register(decorator) -> bool:
+    return isinstance(decorator, ast.Call) and getattr(decorator.func, "id", "") == "register"
+
+
 def _package_sources():
     root = Path(pkg.__file__).parent
     for path in sorted(root.rglob("*.py")):
@@ -134,10 +147,7 @@ def _unreached() -> set[str]:
                 defs[f"{mod}.{stmt.name}"] = (mod, stmt)
                 # decorators run at import; @register marks a query builder
                 code += [(mod, d) for d in stmt.decorator_list]
-                if any(
-                    isinstance(d, ast.Call) and getattr(d.func, "id", "") == "register"
-                    for d in stmt.decorator_list
-                ):
+                if any(_is_register(d) for d in stmt.decorator_list):
                     roots.add(f"{mod}.{stmt.name}")
             elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
                 code.append((mod, stmt))  # runs at import; re-exports do not count
@@ -162,13 +172,7 @@ def _unreached() -> set[str]:
                 out |= by_name.get(n.attr, set())
         return out
 
-    entry_files = [
-        *sorted((_REPO / "scripts").glob("*.py")),
-        *sorted((_REPO / "perfbench").glob("*.py")),
-        _REPO / "bench.py",
-        _REPO / "__spark_entry__.py",
-    ]
-    for path in entry_files:
+    for path in _ENTRY_FILES:
         for name in _names_used(ast.parse(path.read_text(encoding="utf-8"))):
             roots |= by_name.get(name, set())
     todo = set().union(roots, *(refs(mod, node) for mod, node in code))
@@ -186,3 +190,93 @@ def test_every_package_function_has_an_entry_point_caller():
     # the allow-list stays exact: an entry that gained a caller or was
     # deleted leaves it
     assert _TEST_ONLY_ALLOWED.keys() <= unreached, sorted(_TEST_ONLY_ALLOWED.keys() - unreached)
+
+
+# Parameter hygiene: a parameter is an option only if the entry points
+# pass it at least two different values. Every call in the package,
+# ``scripts/``, ``perfbench/``, ``bench.py`` and ``__spark_entry__.py``
+# that binds to a top-level package function is read; an omitted
+# argument counts as its default, a literal or an UPPER_CASE constant as
+# that value, anything else as varying. A parameter every call site sets
+# to one value is a constant: make it one. Registered query builders are
+# exempt — the registry calls them. The allow-list holds only test
+# seams, each with the test that varies the parameter.
+_TEST_SEAMS = {
+    f"{_PKG}.__main__.main(argv)":
+        "test_cli::test_cli_convert_and_register drives the CLI with argument lists",
+    f"{_PKG}.handler.config_from_env(env)":
+        "test_convert::test_run_event_end_to_end binds the handler from a dict",
+    f"{_PKG}.operators.graph.wedges(hub_threshold)":
+        "test_round7_properties::test_wedges_salted_path_identical_to_plain "
+        "forces both hub branches at sf0.001",
+    f"{_PKG}.operators.graph.wedges(n_salts)":
+        "test_round7_properties::test_wedges_salted_plan_spreads_center_key",
+    f"{_PKG}.operators.dedup.prefix_filtered_pairs(threshold_num)":
+        "test_dedup_prefix_filter::test_higher_thresholds_subset_of_lower sweeps thresholds",
+}
+_VARIES = object()
+
+
+def _value(node):
+    try:
+        return repr(ast.literal_eval(node))
+    except ValueError:
+        pass
+    name = getattr(node, "id", None) or getattr(node, "attr", None)
+    return name if name and name.isupper() else _VARIES
+
+
+def _bind(args: ast.arguments, call: ast.Call) -> dict | None:
+    """parameter -> value at this call site; None if the call cannot be
+    a call of a function with these ``args`` (a namesake's)."""
+    pos = [*args.posonlyargs, *args.args]
+    names = [a.arg for a in pos + args.kwonlyargs]
+    if any(isinstance(a, ast.Starred) for a in call.args) or any(
+        k.arg is None for k in call.keywords
+    ):
+        return dict.fromkeys(names, _VARIES)
+    if len(call.args) > len(pos) or any(k.arg not in names for k in call.keywords):
+        return None
+    defaults = dict(zip([a.arg for a in pos[len(pos) - len(args.defaults):]], args.defaults))
+    defaults |= {a.arg: d for a, d in zip(args.kwonlyargs, args.kw_defaults) if d}
+    given = {a.arg: v for a, v in zip(pos, call.args)}
+    given |= {k.arg: k.value for k in call.keywords}
+    if not all(n in given or n in defaults for n in names):
+        return None
+    return {n: _value(given.get(n, defaults.get(n))) for n in names}
+
+
+def _single_valued_parameters() -> dict[str, str]:
+    defs, trees = {}, []
+    for mod, _, path in _package_sources():
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        trees.append(tree)
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)) and not any(
+                _is_register(d) for d in stmt.decorator_list
+            ):
+                defs.setdefault(stmt.name, []).append((f"{mod}.{stmt.name}", stmt.args))
+    trees += [ast.parse(p.read_text(encoding="utf-8")) for p in _ENTRY_FILES]
+    seen = {}
+    for tree in trees:
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            for qual, args in defs.get(name, ()):
+                for param, v in (_bind(args, call) or {}).items():
+                    seen.setdefault(f"{qual}({param})", set()).add(v)
+    return {
+        k: next(iter(vals))
+        for k, vals in seen.items()
+        if len(vals) == 1 and _VARIES not in vals
+    }
+
+
+def test_every_parameter_is_varied_by_an_entry_point():
+    single = _single_valued_parameters()
+    extra = {k: v for k, v in single.items() if k not in _TEST_SEAMS}
+    assert not extra, extra
+    # the allow-list stays exact: a seam an entry point now varies, or
+    # that was deleted, leaves it
+    assert _TEST_SEAMS.keys() <= single.keys(), sorted(_TEST_SEAMS.keys() - single.keys())

@@ -99,6 +99,58 @@ def test_catalog_registration(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS flowlogs_test")
 
 
+def test_registered_table_schema_is_the_flow_schema(spark, tmp_path):
+    # the CREATE TABLE column list is built from schema.FLOW_SCHEMA, the
+    # parser's types; the partition columns are strings
+    from pyspark.sql import types as T
+
+    from aws_vpcflowlogs_parquet_spark.schema import FLOW_SCHEMA, PARTITION_COLUMNS
+
+    try:
+        register_flowlog_table(spark, "flowlogs_schema_test", str(tmp_path / "tbl"), partitions=[])
+        got = spark.table("flowlogs_schema_test").schema
+        want = T.StructType(
+            [*FLOW_SCHEMA, *(T.StructField(c, T.StringType(), True) for c in PARTITION_COLUMNS)]
+        )
+        assert [(f.name, f.dataType) for f in got] == [(f.name, f.dataType) for f in want]
+        assert PARTITION_COLUMNS == ["dt", "account", "src"]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS flowlogs_schema_test")
+
+
+def test_run_event_registers_an_account_with_a_quote(spark, tmp_path):
+    # accountid comes from the log line: a quote (or backslash) in it is
+    # escaped in the partition DDL, and the event's other keys, which the
+    # same ALTER TABLE registers, are not lost with it
+    from aws_vpcflowlogs_parquet_spark.handler import HandlerConfig, run_event
+
+    bucket = tmp_path / "bucket"
+    (bucket / "logs").mkdir(parents=True)
+    odd = ["12'34", "56\\78"]
+    (bucket / "logs" / "x.log").write_text(
+        "\n".join([HEADER, *(_mk_line(a, DAY1) for a in odd), _mk_line("111111111111", DAY2)])
+    )
+    event = {
+        "Records": [
+            {"s3": {"bucket": {"name": str(bucket)}, "object": {"key": "logs/x.log"}}}
+        ]
+    }
+    cfg = HandlerConfig(dst_path=str(tmp_path / "warehouse"), table="flowlogs_quote_test")
+    try:
+        keys = run_event(spark, event, cfg)
+        assert sorted(k[1] for k in keys) == sorted(["111111111111", *odd])
+        assert spark.sql("SHOW PARTITIONS flowlogs_quote_test").count() == 3
+        got = spark.sql(
+            "SELECT account, dt, count(*) AS n FROM flowlogs_quote_test "
+            "GROUP BY account, dt ORDER BY account"
+        ).collect()
+        assert [tuple(r) for r in got] == sorted(
+            [("111111111111", "2018-11-05", 1), *((a, "2018-11-04", 1) for a in odd)]
+        )
+    finally:
+        spark.sql("DROP TABLE IF EXISTS flowlogs_quote_test")
+
+
 def test_targets_from_s3_event():
     event = {
         "Records": [

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from aws_vpcflowlogs_parquet_spark.operators.dedup import (
+    NGRAM_MAX_ID,
     ngram_jaccard_pairs,
     prefix_filtered_pairs,
     shingle_rows,
@@ -27,8 +28,8 @@ def _collect_pairs(df):
 
 def test_equals_all_pairs_kernel_on_bounded_range(spark):
     docs = load_table(spark, SF_DIR, "documents")
-    bounded = docs.filter(F.col("doc_id") < 200)
-    want = _collect_pairs(ngram_jaccard_pairs(docs, max_id=200))
+    bounded = docs.filter(F.col("doc_id") < NGRAM_MAX_ID)
+    want = _collect_pairs(ngram_jaccard_pairs(docs))
     got = _collect_pairs(prefix_filtered_pairs(bounded, 1, 5))  # t = 0.2
     assert got == want
 

@@ -10,9 +10,9 @@ from __future__ import annotations
 import pytest
 
 from aws_vpcflowlogs_parquet_spark.operators.joins import (
+    SALT_KEY,
     ensure_bucketed,
     salted_join,
-    write_bucketed,
 )
 from aws_vpcflowlogs_parquet_spark.sources.tables import load_table
 
@@ -24,12 +24,14 @@ def _rows(df):
 
 
 def test_salted_join_matches_plain_join(spark):
-    orders = load_table(spark, SF_DIR, "orders")
-    customer = load_table(spark, SF_DIR, "customer").withColumnRenamed(
-        "c_custkey", "o_custkey"
+    orders = load_table(spark, SF_DIR, "orders").withColumnRenamed(
+        "o_custkey", SALT_KEY
     )
-    plain = orders.join(customer, ["o_custkey"], "inner")
-    salted = salted_join(orders, customer, ["o_custkey"], salts=4)
+    customer = load_table(spark, SF_DIR, "customer").withColumnRenamed(
+        "c_custkey", SALT_KEY
+    )
+    plain = orders.join(customer, [SALT_KEY], "inner")
+    salted = salted_join(orders, customer)
     assert sorted(plain.columns) == sorted(salted.columns)
     assert _rows(plain.select(*sorted(plain.columns))) == _rows(
         salted.select(*sorted(plain.columns))
@@ -37,15 +39,14 @@ def test_salted_join_matches_plain_join(spark):
 
 
 def test_salted_join_spreads_keys(spark):
-    # every (key, salt) combination of the small side exists: 4 salts per row
+    # every (key, salt) combination of the small side exists: SALTS per row
     customer = load_table(spark, SF_DIR, "customer").limit(10)
-    orders = load_table(spark, SF_DIR, "orders")
-    out = salted_join(
-        orders, customer.withColumnRenamed("c_custkey", "o_custkey"), ["o_custkey"],
-        salts=4,
+    orders = load_table(spark, SF_DIR, "orders").withColumnRenamed(
+        "o_custkey", SALT_KEY
     )
+    out = salted_join(orders, customer.withColumnRenamed("c_custkey", SALT_KEY))
     plain = orders.join(
-        customer.withColumnRenamed("c_custkey", "o_custkey"), ["o_custkey"]
+        customer.withColumnRenamed("c_custkey", SALT_KEY), [SALT_KEY]
     )
     assert out.count() == plain.count()
 
@@ -56,12 +57,8 @@ def bucketed_tables(spark):
     # default warehouse and are dropped afterward
     orders = load_table(spark, SF_DIR, "orders")
     lineitem = load_table(spark, SF_DIR, "lineitem")
-    write_bucketed(
-        orders.withColumnRenamed("o_orderkey", "okey"), "orders_b", ["okey"], 4
-    )
-    write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "okey"), "lineitem_b", ["okey"], 4
-    )
+    ensure_bucketed(orders.withColumnRenamed("o_orderkey", "okey"), "orders_b")
+    ensure_bucketed(lineitem.withColumnRenamed("l_orderkey", "okey"), "lineitem_b")
     yield "orders_b", "lineitem_b"
     spark.sql("DROP TABLE IF EXISTS orders_b")
     spark.sql("DROP TABLE IF EXISTS lineitem_b")
@@ -98,16 +95,12 @@ def test_ensure_bucketed_writes_once_per_session(spark):
 
     orders = load_table(spark, SF_DIR, "orders")
     try:
-        ensure_bucketed(
-            orders.withColumnRenamed("o_orderkey", "okey"), "orders_eb", ["okey"], 4
-        )
+        ensure_bucketed(orders.withColumnRenamed("o_orderkey", "okey"), "orders_eb")
         wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
         files = sorted(glob.glob(os.path.join(wh, "orders_eb", "*.parquet")))
         assert files
         mtimes = [os.path.getmtime(f) for f in files]
-        ensure_bucketed(
-            orders.withColumnRenamed("o_orderkey", "okey"), "orders_eb", ["okey"], 4
-        )
+        ensure_bucketed(orders.withColumnRenamed("o_orderkey", "okey"), "orders_eb")
         files2 = sorted(glob.glob(os.path.join(wh, "orders_eb", "*.parquet")))
         assert files2 == files
         assert [os.path.getmtime(f) for f in files2] == mtimes

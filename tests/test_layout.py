@@ -42,7 +42,7 @@ def test_zorder_improves_skipping_on_both_columns(spark, tmp_path):
     pts = _pts(spark)
     base, opt = str(tmp_path / "base"), str(tmp_path / "opt")
     pts.repartition(16).write.parquet(base)
-    optimize_layout(pts, opt, cluster_by=["x", "y"], n_files=16, bits=8)
+    optimize_layout(pts, opt, cluster_by=["x", "y"], n_files=16)
     # a box predicate must prune on EITHER clustered column — the whole
     # point of the curve vs. single-column sort (which helps only x)
     for col in ("x", "y"):
@@ -53,14 +53,14 @@ def test_zorder_improves_skipping_on_both_columns(spark, tmp_path):
 def test_zorder_write_is_single_shuffle_and_schema_stable(spark, tmp_path):
     pts = _pts(spark)
     out = str(tmp_path / "z")
-    optimize_layout(pts, out, cluster_by=["x", "y"], n_files=4, bits=8)
+    optimize_layout(pts, out, cluster_by=["x", "y"], n_files=4)
     back = spark.read.parquet(out)
     assert back.columns == pts.columns  # helper key projected away
     assert back.count() == pts.count()
     # the rewrite plan: exactly one exchange (the range repartition); the
     # sort rides it
     plan = (
-        pts.withColumn("_ck", zorder_key(["x", "y"], 8))
+        pts.withColumn("_ck", zorder_key(["x", "y"]))
         .repartitionByRange(4, "_ck")
         .sortWithinPartitions("_ck")
         ._jdf.queryExecution()

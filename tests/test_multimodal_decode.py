@@ -133,15 +133,16 @@ def test_resize_nearest_downsamples():
 def test_resize_images_uses_real_header_dims(spark):
     # An ASCII-raster PPM survives the text→UTF-8 payload round trip
     # byte-for-byte (all bytes < 0x80), so the operator sees a REAL image
-    # and must report its true 33x7 header dims, not the length fallback.
-    raster = bytes((i % 64) + 32 for i in range(33 * 7 * 3))
-    ppm_text = (b"P6\n33 7\n255\n" + raster).decode("ascii")
+    # and must report its true 128x28 header dims, not the length fallback.
+    raster = bytes((i % 64) + 32 for i in range(128 * 28 * 3))
+    ppm_text = (b"P6\n128 28\n255\n" + raster).decode("ascii")
     docs = spark.createDataFrame(
         [(0, ppm_text), (1, "plain text document")], "doc_id long, text string"
     )
-    rows = {r.doc_id: r for r in resize_images(docs, target_max=16).collect()}
-    assert (rows[0].width, rows[0].height) == (33, 7)
-    assert (rows[0].out_width, rows[0].out_height) == (16, 3)
+    rows = {r.doc_id: r for r in resize_images(docs).collect()}
+    assert (rows[0].width, rows[0].height) == (128, 28)
+    # halved: the longer side down to RESIZE_TARGET_MAX = 64
+    assert (rows[0].out_width, rows[0].out_height) == (64, 14)
     # unrecognized payload → deterministic length-derived dims (oracle path)
     n = len("plain text document")
     assert (rows[1].width, rows[1].height) == (16 + n % 241, 16 + (n * 7) % 241)
@@ -154,7 +155,7 @@ def test_resize_images_rejects_fake_bm_text(spark):
     # falls back to length-derived dims (ADVICE r4, medium).
     fake = "BM" + "x" * 200  # 202 bytes, passes no validation
     docs = spark.createDataFrame([(0, fake)], "doc_id long, text string")
-    row = resize_images(docs, target_max=16).collect()[0]
+    row = resize_images(docs).collect()[0]
     n = len(fake)
     assert (row.width, row.height) == (16 + n % 241, 16 + (n * 7) % 241)
 
@@ -178,7 +179,7 @@ def test_resize_images_rejects_fake_bm_text(spark):
 )
 def test_resize_images_rejects_truncated_pnm_header(spark, fake):
     docs = spark.createDataFrame([(0, fake)], "doc_id long, text string")
-    row = resize_images(docs, target_max=16).collect()[0]
+    row = resize_images(docs).collect()[0]
     n = len(fake)
     assert (row.width, row.height) == (16 + n % 241, 16 + (n * 7) % 241)
 

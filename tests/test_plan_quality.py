@@ -362,7 +362,7 @@ def test_pagerank_plan_depth_is_constant_in_iterations(spark):
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    plan = _optimized(pagerank(e, n_iter=3))
+    plan = _optimized(pagerank(e))
     assert "Join" not in plan, plan
     assert "Scan ExistingRDD" in plan or "LogicalRDD" in plan, plan
 

@@ -171,7 +171,7 @@ def test_stream_full_outer_emits_both_orphan_classes(spark, tmp_path):
 
     from aws_vpcflowlogs_parquet_spark.sources.tables import convert_nanos_ts
     from aws_vpcflowlogs_parquet_spark.streaming.windows import (
-        stream_stream_join_full_outer,
+        stream_stream_join,
     )
 
     base_us = 1_700_000_000_000_000
@@ -231,8 +231,8 @@ def test_stream_full_outer_emits_both_orphan_classes(spark, tmp_path):
                 .filter(F.col("event_type") == et)
             )
 
-        joined = stream_stream_join_full_outer(
-            one_side("purchase"), one_side("click"), horizon="10 minutes"
+        joined = stream_stream_join(
+            one_side("purchase"), one_side("click"), "full_outer", "10 minutes"
         )
         q = (
             joined.writeStream.outputMode("append")

@@ -13,6 +13,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from aws_vpcflowlogs_parquet_spark.operators.ranks import (
+    NTILES,
     ntile_from_rank,
     with_bucketed_prefix_sum,
     with_bucketed_rank,
@@ -44,9 +45,7 @@ def test_with_global_rank_matches_row_number(spark):
     want = _expected_ranks(df)
     got = {
         (r.v, r.k): r.i
-        for r in with_global_rank(
-            df, [F.col("v"), F.col("k")], num_ranges=7
-        ).collect()
+        for r in with_global_rank(df, [F.col("v"), F.col("k")]).collect()
     }
     assert got == want
 
@@ -86,18 +85,11 @@ def test_prefix_sums_match_window_running_sum(spark):
             "v", "k", F.sum("k").over(w).cast("bigint").alias("c")
         ).collect()
     }
-    for got_df in (
-        with_prefix_sum(
-            df, [F.col("v"), F.col("k")], F.col("k"), sum_name="c",
-            num_ranges=7,
-        ),
-        with_bucketed_prefix_sum(
-            df, F.shiftright("v", 3), [F.col("v"), F.col("k")],
-            F.col("k"), sum_name="c",
-        ),
-    ):
-        got = {(r.v, r.k): r.c for r in got_df.collect()}
-        assert got == want
+    got = {
+        (r.v, r.k): r.cum
+        for r in with_prefix_sum(df, [F.col("v"), F.col("k")], F.col("k")).collect()
+    }
+    assert got == want
 
 
 def test_bucketed_prefix_sum_descending(spark):
@@ -113,14 +105,12 @@ def test_bucketed_prefix_sum_descending(spark):
         ).collect()
     }
     got = {
-        (r.v, r.k): r.c
+        (r.v, r.k): r.cum_cents
         for r in with_bucketed_prefix_sum(
             df,
             F.shiftright("v", 3),
             [F.desc("v"), F.asc("k")],
             F.col("k"),
-            sum_name="c",
-            descending=True,
         ).collect()
     }
     assert got == want
@@ -134,16 +124,14 @@ def test_ntile_from_rank_matches_sql_ntile(spark):
         want = {
             r.k: r.nt
             for r in df.select(
-                "k", F.ntile(10).over(w).alias("nt")
+                "k", F.ntile(NTILES).over(w).alias("nt")
             ).collect()
         }
         got = {
             r.k: r.nt
             for r in df.select(
                 "k",
-                ntile_from_rank(
-                    F.col("k"), F.lit(n).cast("bigint"), 10
-                ).alias("nt"),
+                ntile_from_rank(F.col("k"), F.lit(n).cast("bigint")).alias("nt"),
             ).collect()
         }
         assert got == want, f"n={n}"
@@ -233,7 +221,7 @@ def test_sampled_ranges_stay_balanced_under_skew(spark):
         .alias("v"),
         F2.col("id").alias("k"),
     )
-    parted = ranks._ranged(df, [F2.col("v"), F2.col("k")], 8)
+    parted = ranks._ranged(df, [F2.col("v"), F2.col("k")])
     sizes = [
         r.n
         for r in parted.groupBy(ranks._RANGE_ID)
@@ -241,9 +229,9 @@ def test_sampled_ranges_stay_balanced_under_skew(spark):
         .collect()
     ]
     assert sum(sizes) == n
-    assert max(sizes) <= 3 * (n / 8), sizes  # no range hoards the skew
+    assert max(sizes) <= 3 * (n / ranks.RANGES), sizes  # no range hoards the skew
     # and the ranks built on it are still exactly row_number
-    got = ranks.with_global_rank(df, [F2.col("v"), F2.col("k")], num_ranges=8)
+    got = ranks.with_global_rank(df, [F2.col("v"), F2.col("k")])
     from pyspark.sql import Window as W
 
     want = df.select(

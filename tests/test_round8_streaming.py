@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from aws_vpcflowlogs_parquet_spark.streaming import harness as H
 from aws_vpcflowlogs_parquet_spark.sources.tables import convert_nanos_ts
 from aws_vpcflowlogs_parquet_spark.streaming.windows import (
-    stream_stream_join_full_outer,
+    stream_stream_join,
 )
 
 
@@ -74,8 +74,8 @@ def test_single_sentinel_nodata_batch_flushes_both_null_classes(
             .filter(F.col("event_type") == et)
         )
 
-    joined = stream_stream_join_full_outer(
-        one_side("purchase"), one_side("click"), horizon="10 minutes"
+    joined = stream_stream_join(
+        one_side("purchase"), one_side("click"), "full_outer", "10 minutes"
     )
     q = (
         joined.writeStream.outputMode("append")

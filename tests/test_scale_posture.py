@@ -56,7 +56,7 @@ def test_partition_pruning_reaches_scan(spark, tmp_path):
 
 def test_resize_images_plumbing(spark):
     docs = load_table(spark, SF_DIR, "documents").limit(50)
-    out = resize_images(docs, target_max=64).collect()
+    out = resize_images(docs).collect()
     assert len(out) == 50
     for r in out:
         assert max(r.out_width, r.out_height) <= 64
@@ -69,7 +69,7 @@ def test_sample_frames_fan_out(spark):
     import hashlib
 
     docs = load_table(spark, SF_DIR, "documents").limit(20)
-    out = sample_frames(docs, n_frames=3)
+    out = sample_frames(docs)
     rows = out.collect()
     assert len(rows) == 60
     assert out.columns == ["doc_id", "frame_idx", "frame_bytes", "frame_md5"]
@@ -131,13 +131,15 @@ def test_ngram_pairs_guard_rejects_unbounded_input(spark):
     from aws_vpcflowlogs_parquet_spark.operators import dedup as dd
 
     docs = load_table(spark, SF_DIR, "documents")
+    # more rows inside the id bound than the kernel accepts
     wide = spark.range(dd.NGRAM_PAIRS_MAX_INPUT + 1).selectExpr(
-        "id AS doc_id", "'the quick brown fox jumps over the lazy dog' AS text"
+        f"id % {dd.NGRAM_MAX_ID} AS doc_id",
+        "'the quick brown fox jumps over the lazy dog' AS text",
     )
     with _pytest.raises(ValueError, match="quadratic verification kernel"):
-        dd.ngram_jaccard_pairs(wide, max_id=dd.NGRAM_PAIRS_MAX_INPUT + 1)
+        dd.ngram_jaccard_pairs(wide)
     # bounded form still works
-    assert dd.ngram_jaccard_pairs(docs, max_id=50).count() >= 0
+    assert dd.ngram_jaccard_pairs(docs).count() >= 0
 
 
 def test_parquet_aggregate_pushdown_available(spark):

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from aws_vpcflowlogs_parquet_spark.sources.tables import load_table, stream_events
 from aws_vpcflowlogs_parquet_spark.streaming.convert_stream import start_flowlog_stream
 from aws_vpcflowlogs_parquet_spark.streaming.windows import (
+    WATERMARK,
     sessionized,
     stream_stream_join,
     streaming_dedup,
@@ -130,48 +131,6 @@ def test_stream_replay_of_uncommitted_batch_is_exactly_once(spark, tmp_path):
     assert sorted(tuple(r) for r in back.collect()) == rows
 
 
-def test_stream_registers_partitions_in_table(spark, tmp_path):
-    # table= registers each micro-batch's keys through the batch
-    # converter's register_flowlog_table (creating the table at dst on
-    # first use); a header-only file is a batch with nothing to register
-    src = tmp_path / "drop"
-    src.mkdir()
-    dst = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-    (src / "a.log").write_text(
-        "\n".join([HEADER, _mk_line("111111111111", 1541375637, 1)])
-    )
-    (src / "b.log").write_text(HEADER + "\n")
-    table = "flowlogs_stream_test"
-    q = start_flowlog_stream(
-        spark, str(src), str(dst), str(ckpt), table=table, max_files_per_trigger=1
-    )
-    try:
-        q.processAllAvailable()
-        (src / "c.log").write_text(
-            "\n".join(
-                [HEADER, _mk_line("222222222222", 1541462037, 2), _mk_line("111111111111", 1541375637, 3)]
-            )
-        )
-        q.processAllAvailable()
-        # (dt, account, src): a.log's key and c.log's two keys; c.log's
-        # row in 2018-11-04/111111111111 is a partition of its own
-        parts = sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect())
-        assert [p.split("/src=")[0] for p in parts] == [
-            "dt=2018-11-04/account=111111111111",
-            "dt=2018-11-04/account=111111111111",
-            "dt=2018-11-05/account=222222222222",
-        ]
-        assert len({p.split("/src=")[1] for p in parts}) == 2
-        got = spark.sql(
-            f"SELECT dt, count(*) AS n FROM {table} GROUP BY dt ORDER BY dt"
-        ).collect()
-        assert [(r["dt"], r["n"]) for r in got] == [("2018-11-04", 2), ("2018-11-05", 1)]
-    finally:
-        q.stop()
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def _stream_events(spark, tmp_path):
     # stage the events table as a parquet streaming source
     src = tmp_path / "events_src"
@@ -183,7 +142,7 @@ def _stream_events(spark, tmp_path):
 
 def test_tumbling_agg_matches_batch(spark, tmp_path):
     streaming, batch = _stream_events(spark, tmp_path)
-    out = tumbling_agg(streaming, "1 hour", "30 minutes")
+    out = tumbling_agg(streaming)
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
@@ -195,7 +154,7 @@ def test_tumbling_agg_matches_batch(spark, tmp_path):
         got = spark.sql(
             "SELECT window_start, event_type, n, sum_value FROM tumbling_out"
         )
-        expected = tumbling_agg(batch, "1 hour", "30 minutes").select(
+        expected = tumbling_agg(batch).select(
             "window_start", "event_type", "n", "sum_value"
         )
         # append mode emits only windows closed by the watermark; every
@@ -208,7 +167,7 @@ def test_tumbling_agg_matches_batch(spark, tmp_path):
 
 def test_sessionized_runs(spark, tmp_path):
     streaming, _ = _stream_events(spark, tmp_path)
-    out = sessionized(streaming, gap="20 minutes")
+    out = sessionized(streaming)
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
@@ -227,7 +186,7 @@ def test_sessionized_runs(spark, tmp_path):
 
 def test_streaming_dedup_bounded_state(spark, tmp_path):
     streaming, batch = _stream_events(spark, tmp_path)
-    out = streaming_dedup(streaming, ["user_id", "event_type"])
+    out = streaming_dedup(streaming)
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
@@ -322,10 +281,10 @@ def test_stream_stream_join_buffers_state_across_batches(spark, tmp_path):
 
     stream = stream_events(spark, str(src))
     out = stream_stream_join(
-        stream.filter(F.col("event_type") == "click"),
-        stream.filter(F.col("event_type") == "purchase"),
-        horizon=horizon,
-        watermark="30 minutes",
+        stream.filter(F.col("event_type") == "click").withWatermark("ts", WATERMARK),
+        stream.filter(F.col("event_type") == "purchase").withWatermark("ts", WATERMARK),
+        "inner",
+        horizon,
     )
     q = (
         out.writeStream.outputMode("append")
@@ -383,7 +342,7 @@ def test_stateful_agg_recovers_state_across_restart(spark, tmp_path):
 
     def run_once():
         stream = stream_events(spark, str(src))
-        agg = tumbling_agg(stream, "1 hour", "30 minutes")
+        agg = tumbling_agg(stream)
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -401,7 +360,7 @@ def test_stateful_agg_recovers_state_across_restart(spark, tmp_path):
     stage(half_b, "b.parquet")
     run_once()  # restart: must process ONLY b, merging into restored state
     got = spark.sql("SELECT window_start, event_type, n, sum_value FROM restart_out")
-    expected = tumbling_agg(batch, "1 hour", "30 minutes").select(
+    expected = tumbling_agg(batch).select(
         "window_start", "event_type", "n", "sum_value"
     )
     assert got.count() == expected.count()
@@ -440,7 +399,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 
     def run_once():
         stream = stream_events(spark, str(src))
-        agg = tumbling_agg(stream, "1 hour", "30 minutes")
+        agg = tumbling_agg(stream)
         q = (
             agg.writeStream.outputMode("append")
             .format("parquet")
@@ -608,7 +567,7 @@ def test_stream_outer_join_nulls_need_watermark_proof(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from aws_vpcflowlogs_parquet_spark.streaming.windows import (
-        stream_stream_join_left_outer,
+        stream_stream_join,
     )
 
     base_us = 1_700_000_000_000_000
@@ -672,8 +631,8 @@ def test_stream_outer_join_nulls_need_watermark_proof(spark, tmp_path):
                 .filter(F.col("event_type") == et)
             )
 
-        joined = stream_stream_join_left_outer(
-            one_side("purchase"), one_side("click"), horizon="10 minutes"
+        joined = stream_stream_join(
+            one_side("purchase"), one_side("click"), "left_outer", "10 minutes"
         )
         q = (
             joined.writeStream.outputMode("append")
