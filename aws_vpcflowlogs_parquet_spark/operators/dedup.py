@@ -286,9 +286,9 @@ def dedup_clusters(documents: DataFrame) -> DataFrame:
     + one min-aggregate — both shuffles on doc_id, reusable partitioning —
     and the loop runs until a fixed point (≤ graph diameter steps; the
     driver-side loop condition is a single count, not data). This is the
-    standard large-graph CC pattern (GraphX/Pregel's simplest case) and
-    the only iterative operator in the engine; the oracle is a recursive
-    CTE computing min reachable id.
+    standard large-graph CC pattern (GraphX/Pregel's simplest case), the
+    loop shape of ``graph.pagerank`` and ``graph.label_propagation`` too;
+    the oracle is a recursive CTE computing min reachable id.
 
     Returns (doc_id, cluster_id) for every doc in the id range, singletons
     included.
@@ -465,6 +465,10 @@ def prefix_filtered_pairs(
     return cross.unionByName(within)
 
 
+#: the primary shingle hash the prefix join, ranking and verify run on
+SHINGLE_HASH = "xxhash64(s)"
+
+
 def _prefix_pairs_core(rows: DataFrame, tn: int, td: int) -> DataFrame:
     """Steps 1-4 of :func:`prefix_filtered_pairs` over an
     already-persisted, exact-dup-free (doc_id, s) shingle relation.
@@ -486,28 +490,16 @@ def _prefix_pairs_core(rows: DataFrame, tn: int, td: int) -> DataFrame:
     shingles collide in 64 bits, which would merge their frequency
     buckets and dedup them inside ``array_intersect``. Over a corpus of
     D distinct shingles the collision probability is ~D²/2^65 (≈1.8e-7
-    at D=2.6M; the shipped corpora are fixed and verified collision-free
-    by the brute-force equality suite + oracle at three SFs). Deployments
-    that ingest arbitrary corpora can set ``SPARK_GRAFT_STRICT=1`` to
-    pay one guard job per run that PROVES injectivity on their data and
-    raises instead of ever answering wrong."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_STRICT"):
-        # injectivity guard: one pass over the (persisted) string
-        # relation proves xxhash64 is collision-free on THIS corpus —
-        # fail loud, never answer wrong
-        g = rows.agg(
-            F.countDistinct("s").alias("n_s"),
-            F.countDistinct(F.xxhash64("s")).alias("n_h"),
-        ).collect()[0]
-        if g["n_s"] != g["n_h"]:
-            raise ValueError(
-                f"xxhash64 shingle collision on this corpus "
-                f"({g['n_s']} distinct shingles, {g['n_h']} distinct "
-                f"hashes): rerun _prefix_pairs_core with string shingles"
-            )
-    rows = track_persist(rows.select("doc_id", F.xxhash64("s").alias("s")))
+    at D=2.6M), so the guard is always on and costs no job: ``freq``
+    groups the persisted string relation by :data:`SHINGLE_HASH` and
+    carries the min and max of a second, independent hash (Murmur3
+    ``hash(s)``) per bucket; a bucket whose two bounds differ holds two
+    distinct shingles, and the query fails in-plan (``raise_error``,
+    ``USER_RAISED_EXCEPTION``) instead of answering wrong. A wrong answer
+    now needs xxhash64 and Murmur3 to collide on the same pair. Integer
+    bounds keep the aggregation a ``HashAggregate``; string ``min``/``max``
+    would plan a ``SortAggregate``."""
+    hashed = track_persist(rows.select("doc_id", F.expr(SHINGLE_HASH).alias("s")))
     # sizes and the verify arrays are DELIBERATELY separate aggregations
     # over the (persisted) shingle relation: the sizes branch is a
     # count-only hash agg with map-side combine, while folding it into
@@ -515,10 +507,31 @@ def _prefix_pairs_core(rows: DataFrame, tn: int, td: int) -> DataFrame:
     # sorted per-doc arrays to materialize for the cheap branch too —
     # Catalyst can no longer prune collect_list out of the sizes path —
     # and measured 4.8 s → 7.6 s at sf0.1.
-    sizes = rows.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    freq = rows.groupBy("s").agg(F.count("*").alias("df"))
+    sizes = hashed.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    freq = (
+        rows.groupBy(F.expr(SHINGLE_HASH).alias("s"))
+        .agg(
+            F.count("*").alias("df"),
+            F.min(F.hash("s")).alias("lo"),
+            F.max(F.hash("s")).alias("hi"),
+        )
+        .select(
+            "s",
+            F.when(F.col("lo") == F.col("hi"), F.col("df"))
+            .otherwise(
+                F.raise_error(
+                    F.concat(
+                        F.lit(f"shingle hash collision: {SHINGLE_HASH} = "),
+                        F.col("s").cast("string"),
+                        F.lit(" for distinct shingles"),
+                    )
+                )
+            )
+            .alias("df"),
+        )
+    )
     ranked = (
-        rows.join(freq, "s")
+        hashed.join(freq, "s")
         .withColumn(
             "pos",
             F.row_number().over(
@@ -551,7 +564,7 @@ def _prefix_pairs_core(rows: DataFrame, tn: int, td: int) -> DataFrame:
     # ObjectHashAggregate collect_list over the full shingle relation
     # (measured ~2× the array-build cost in the executed plan).
     arrs = track_persist(
-        rows.groupBy("doc_id").agg(
+        hashed.groupBy("doc_id").agg(
             F.sort_array(F.collect_list("s")).alias("sh"),
             F.count("*").alias("sz"),
         )

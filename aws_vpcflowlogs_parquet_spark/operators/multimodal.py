@@ -1,14 +1,14 @@
 """Multimodal column plumbing (SURVEY §2.4): opaque binary payloads with
 typed metadata, processed via Arrow-batched ``mapInPandas``.
 
-The container has no image/audio codec LIBRARIES, but `decode_image` is a
-real pure-Python decoder for the two formats that need none: binary PPM /
-PGM (P6/P5) and uncompressed 8/24-bit BMP — enough to exercise the whole
-decode → dims → resize-plan path on actual pixels (VERDICT r3 item 4).
-Payloads in other formats (JPEG/PNG/…) raise ``ValueError``; operators
-that must stay total over arbitrary bytes (resize_images) fall back to a
-deterministic length-derived dimension for unrecognized payloads, which
-also keeps them oracle-checkable over the text-derived test corpus.
+The container has no image/audio codec LIBRARIES and no entry point
+decodes pixels; `image_header_parser` reads the dimensions of the two
+formats that need none, binary PPM / PGM (P6/P5) and uncompressed
+8/24-bit BMP, from their real headers. Payloads in other formats
+(JPEG/PNG/…) or that fail its checks raise ``ValueError``;
+resize_images, which must stay total over arbitrary bytes, falls back to
+a deterministic length-derived dimension for them, which also keeps it
+oracle-checkable over the text-derived test corpus.
 
 The Spark-side plumbing is the production shape throughout: binary column
 in, ``mapInPandas`` with an explicit output schema, Arrow batches
@@ -29,138 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FEATURE_SCHEMA = "doc_id bigint, n_bytes int, content_md5 string, is_ascii boolean"
-
-
-class DecodedImage:
-    """Decoded raster: ``pixels`` is a numpy array of shape
-    (height, width, channels), dtype uint8."""
-
-    __slots__ = ("width", "height", "channels", "pixels")
-
-    def __init__(self, width: int, height: int, channels: int, pixels):
-        self.width = width
-        self.height = height
-        self.channels = channels
-        self.pixels = pixels
-
-
-def _decode_pnm(payload: bytes) -> DecodedImage:
-    """Binary PPM (P6, RGB) / PGM (P5, gray): ASCII header of magic,
-    width, height, maxval separated by whitespace (with ``#`` comments),
-    then one raster byte per sample."""
-    import numpy as np
-
-    channels = 3 if payload[:2] == b"P6" else 1
-    pos, fields = 2, []
-    while len(fields) < 3:
-        while pos < len(payload) and payload[pos : pos + 1].isspace():
-            pos += 1
-        if payload[pos : pos + 1] == b"#":  # comment runs to end of line
-            while pos < len(payload) and payload[pos] != 0x0A:
-                pos += 1
-            continue
-        start = pos
-        while pos < len(payload) and not payload[pos : pos + 1].isspace():
-            pos += 1
-        fields.append(int(payload[start:pos]))
-    width, height, maxval = fields
-    if width <= 0 or height <= 0:
-        raise ValueError("non-positive PNM dimensions")
-    if maxval > 255:
-        raise ValueError("16-bit PNM not supported")
-    pos += 1  # single whitespace byte after maxval, then the raster
-    n = width * height * channels
-    raster = np.frombuffer(payload, dtype=np.uint8, count=n, offset=pos)
-    return DecodedImage(
-        width, height, channels, raster.reshape(height, width, channels)
-    )
-
-
-def _decode_bmp(payload: bytes) -> DecodedImage:
-    """Uncompressed (BI_RGB) 8-bit or 24-bit Windows BMP: little-endian
-    BITMAPFILEHEADER (14 bytes) + BITMAPINFOHEADER (40 bytes, the only
-    supported info header); rows padded to 4-byte multiples and stored
-    bottom-up (top-down when height < 0). 24-bit pixel order is BGR,
-    flipped to RGB. 8-bit pixels are palette INDICES: they are mapped
-    through the BGRA color table that follows the info header (biClrUsed
-    entries, 256 when zero), yielding 3-channel RGB — an index is not an
-    intensity unless the palette happens to be the identity gray ramp
-    (ADVICE r4)."""
-    import struct
-
-    import numpy as np
-
-    data_offset = struct.unpack_from("<I", payload, 10)[0]
-    info_size = struct.unpack_from("<I", payload, 14)[0]
-    width, raw_h = struct.unpack_from("<ii", payload, 18)
-    bpp, compression = struct.unpack_from("<HI", payload, 28)
-    planes = struct.unpack_from("<H", payload, 26)[0]
-    if info_size != 40 or compression != 0 or bpp not in (8, 24) or planes != 1:
-        raise ValueError(
-            f"unsupported BMP (info={info_size}, bpp={bpp}, "
-            f"compression={compression})"
-        )
-    if width <= 0 or raw_h == 0:
-        raise ValueError("non-positive BMP dimensions")
-    height, bottom_up = abs(raw_h), raw_h > 0
-    in_channels = bpp // 8
-    row_bytes = (width * in_channels + 3) & ~3  # 4-byte aligned stride
-    rows = (
-        np.frombuffer(
-            payload, dtype=np.uint8, count=row_bytes * height, offset=data_offset
-        )
-        .reshape(height, row_bytes)[:, : width * in_channels]
-        .reshape(height, width, in_channels)
-    )
-    if bottom_up:
-        rows = rows[::-1]
-    if bpp == 24:
-        rows = rows[:, :, ::-1]  # BGR → RGB
-        return DecodedImage(width, height, 3, np.ascontiguousarray(rows))
-    # 8-bit: resolve indices through the color table (BGRA quads)
-    n_colors = struct.unpack_from("<I", payload, 46)[0] or 256
-    palette = (
-        np.frombuffer(payload, dtype=np.uint8, count=n_colors * 4, offset=54)
-        .reshape(n_colors, 4)[:, 2::-1]  # BGR(A) → RGB
-    )
-    idx = rows[:, :, 0]
-    if int(idx.max(initial=0)) >= n_colors:
-        raise ValueError("BMP palette index out of range")
-    return DecodedImage(width, height, 3, np.ascontiguousarray(palette[idx]))
-
-
-def decode_image(payload: bytes) -> DecodedImage:
-    """Decode a binary image payload to pixels — pure Python + numpy, no
-    codec libraries. Supported: binary PPM/PGM (``P6``/``P5``) and
-    uncompressed 8/24-bit BMP (``BM``). Anything else raises ValueError
-    (the sandbox has no JPEG/PNG codecs; at scale this dispatch gains
-    cases, the mapInPandas plumbing around it is unchanged)."""
-    payload = bytes(payload)
-    if payload[:2] in (b"P6", b"P5"):
-        return _decode_pnm(payload)
-    if payload[:2] == b"BM":
-        return _decode_bmp(payload)
-    raise ValueError("unsupported image format (need P5/P6 PNM or BI_RGB BMP)")
-
-
-def resize_nearest(img: DecodedImage, out_w: int, out_h: int) -> DecodedImage:
-    """Nearest-neighbor resample via pure index arithmetic — the
-    vectorized kernel a real resize slots into."""
-    import numpy as np
-
-    ys = (np.arange(out_h) * img.height) // out_h
-    xs = (np.arange(out_w) * img.width) // out_w
-    return DecodedImage(
-        out_w, out_h, img.channels, img.pixels[ys][:, xs]
-    )
-
-
-def encode_ppm(img: DecodedImage) -> bytes:
-    """Round-trip encoder (P6/P5) for tests and re-materializing decoded
-    payloads as a binary column."""
-    magic = b"P6" if img.channels == 3 else b"P5"
-    header = b"%s\n%d %d\n255\n" % (magic, img.width, img.height)
-    return header + img.pixels.tobytes()
 
 
 def with_binary_payload(documents: DataFrame) -> DataFrame:
@@ -213,11 +81,95 @@ FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_bytes int, frame_md5 string"
 RESIZE_TARGET_MAX = 64
 
 
+def image_header_parser():
+    """Build the PNM/BMP header parse as a NESTED function so cloudpickle
+    ships it BY VALUE inside the mapInPandas closure (module-level
+    functions pickle by reference, and workers may not be able to import
+    this package — the ``streaming.windows._cep_kernel`` pattern).
+
+    The returned ``header_dims(payload) -> (width, height)`` trusts a
+    header only when the payload validates as a real image, and raises
+    ``ValueError`` otherwise: arbitrary bytes that merely start with a
+    magic (text beginning "BM" or "P6 12 34") must never parse into
+    garbage dims (ADVICE r4). A header scan that reaches end-of-buffer
+    raises too, never spins (ADVICE r5)."""
+
+    def pnm_dims(p: bytes) -> tuple[int, int]:
+        # binary PPM (P6, RGB) / PGM (P5, gray): ASCII magic, width,
+        # height, maxval separated by whitespace (with ``#`` comments),
+        # one whitespace byte, then one raster byte per sample. Slicing
+        # past the end yields b'', which is not whitespace, and int(b'')
+        # raises — so a truncated header cannot loop
+        pos, fields = 2, []
+        while len(fields) < 3:
+            while pos < len(p) and p[pos : pos + 1].isspace():
+                pos += 1
+            if p[pos : pos + 1] == b"#":  # comment runs to end of line
+                while pos < len(p) and p[pos] != 0x0A:
+                    pos += 1
+                continue
+            start = pos
+            while pos < len(p) and not p[pos : pos + 1].isspace():
+                pos += 1
+            fields.append(int(p[start:pos]))
+        w, h, maxval = fields
+        channels = 3 if p[:2] == b"P6" else 1
+        if w <= 0 or h <= 0:
+            raise ValueError("non-positive PNM dimensions")
+        if maxval > 255:
+            raise ValueError("16-bit PNM not supported")
+        # the declared raster must actually be present — text that
+        # merely starts "P6 .." and parses as numbers is not an image
+        if pos + 1 + w * h * channels > len(p):
+            raise ValueError("not a complete PNM raster")
+        return w, h
+
+    def bmp_dims(p: bytes) -> tuple[int, int]:
+        # uncompressed (BI_RGB) 8/24-bit BMP: little-endian
+        # BITMAPFILEHEADER (14 bytes) + BITMAPINFOHEADER (40 bytes, the
+        # only supported info header); rows padded to 4-byte multiples,
+        # bottom-up (top-down when height < 0). The file-size field must
+        # equal the payload length and the declared raster must fit
+        # inside it — a text payload cannot satisfy these by accident
+        import struct
+
+        if len(p) < 54:
+            raise ValueError("truncated BMP header")
+        file_size, data_offset, info_size = struct.unpack_from("<I4xII", p, 2)
+        w, h, planes, bpp, compression = struct.unpack_from("<iiHHI", p, 18)
+        if (
+            file_size != len(p)
+            or info_size != 40
+            or planes != 1
+            or bpp not in (8, 24)
+            or compression != 0
+        ):
+            raise ValueError(
+                f"unsupported BMP (size={file_size}/{len(p)}, info={info_size}, "
+                f"planes={planes}, bpp={bpp}, compression={compression})"
+            )
+        if w <= 0 or h == 0:
+            raise ValueError("non-positive BMP dimensions")
+        stride = (w * (bpp // 8) + 3) & ~3  # 4-byte aligned row
+        if not 54 <= data_offset <= len(p) - stride * abs(h):
+            raise ValueError("BMP raster outside the payload")
+        return w, abs(h)
+
+    def header_dims(p: bytes) -> tuple[int, int]:
+        if p[:2] in (b"P6", b"P5"):
+            return pnm_dims(p)
+        if p[:2] == b"BM":
+            return bmp_dims(p)
+        raise ValueError("unsupported image format (need P5/P6 PNM or BI_RGB BMP)")
+
+    return header_dims
+
+
 def resize_images(documents: DataFrame) -> DataFrame:
     """Aspect-preserving resize plan over binary image payloads, longer
     side down to ``RESIZE_TARGET_MAX``.
 
-    Recognized image payloads (PNM/BMP — see :func:`decode_image`) are
+    Recognized image payloads (PNM/BMP — see :func:`image_header_parser`) are
     measured from their REAL headers; anything else gets deterministic
     length-derived dims, keeping the operator total over arbitrary bytes
     and oracle-checkable over the text-derived test corpus. The dataflow
@@ -226,74 +178,18 @@ def resize_images(documents: DataFrame) -> DataFrame:
     with input bytes.
     """
 
+    header_dims = image_header_parser()
+
     def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd
 
-        # inlined helpers: module-level references would make cloudpickle
-        # serialize this closure by module path, which breaks on workers
-        # that can't import the engine package
-        def pnm_dims(p: bytes) -> tuple[int, int]:
-            # mirrors _decode_pnm including its bounds guards: a header
-            # scan that reaches end-of-buffer must raise (int(b'') →
-            # ValueError, caught in dims()), never spin — slicing past
-            # the end yields b'', which is not whitespace (ADVICE r5)
-            pos, fields = 2, []
-            while len(fields) < 3:
-                while pos < len(p) and p[pos : pos + 1].isspace():
-                    pos += 1
-                if p[pos : pos + 1] == b"#":
-                    while pos < len(p) and p[pos] != 0x0A:
-                        pos += 1
-                    continue
-                start = pos
-                while pos < len(p) and not p[pos : pos + 1].isspace():
-                    pos += 1
-                fields.append(int(p[start:pos]))
-            w, h, maxval = fields
-            # the declared raster must actually be present — text that
-            # merely starts "P6 .." and parses as numbers is not an image
-            channels = 3 if p[:2] == b"P6" else 1
-            if maxval > 255 or pos + 1 + w * h * channels > len(p):
-                raise ValueError("not a complete PNM raster")
-            return w, h
-
         def dims(payload: bytes) -> tuple[int, int]:
-            # Header dims are trusted ONLY for payloads that validate as
-            # real images; arbitrary bytes that merely start with a magic
-            # (e.g. text beginning "BM") must NOT be parsed into garbage
-            # dims (ADVICE r4). BMP validation: BITMAPINFOHEADER, the
-            # file-size field must equal the actual payload length, and
-            # the declared raster must fit inside the payload — a text
-            # payload cannot satisfy these by accident.
             p = bytes(payload)
             try:
-                if p[:2] in (b"P6", b"P5"):
-                    w, h = pnm_dims(p)
-                    if w > 0 and h > 0:
-                        return w, h
-                if p[:2] == b"BM" and len(p) >= 54:
-                    import struct as _struct
-
-                    file_size = _struct.unpack_from("<I", p, 2)[0]
-                    data_offset = _struct.unpack_from("<I", p, 10)[0]
-                    info_size = _struct.unpack_from("<I", p, 14)[0]
-                    w, h = _struct.unpack_from("<ii", p, 18)
-                    bpp = _struct.unpack_from("<H", p, 28)[0]
-                    stride = (w * (bpp // 8) + 3) & ~3
-                    if (
-                        file_size == len(p)
-                        and info_size == 40
-                        and bpp in (8, 24)
-                        and w > 0
-                        and h != 0
-                        and 54 <= data_offset <= len(p)
-                        and data_offset + stride * abs(h) <= len(p)
-                    ):
-                        return w, abs(h)
-            except Exception:
-                pass  # malformed header → length-derived fallback
-            n = len(p)
-            return 16 + n % 241, 16 + (n * 7) % 241
+                return header_dims(p)
+            except ValueError:  # not a valid image → length-derived fallback
+                n = len(p)
+                return 16 + n % 241, 16 + (n * 7) % 241
 
         for pdf in batches:
             wh = pdf["payload"].map(dims)

@@ -67,7 +67,6 @@ def test_readme_query_count_matches_catalog():
 # The allow-list holds only test references and instruments for reached
 # code, each with its reason.
 _PKG = "aws_vpcflowlogs_parquet_spark"
-_DECODE = "reference decoder: resize_images' inlined header parse must agree with it"
 _TEST_ONLY_ALLOWED = {
     f"{_PKG}.operators.layout.file_skip_fraction":
         "footer-stats instrument that measures optimize_layout's skipping",
@@ -77,12 +76,6 @@ _TEST_ONLY_ALLOWED = {
         "Column twin the parser's zero_default_cast_sql is checked against",
     f"{_PKG}.operators.ranks.with_global_rank":
         "rank form of the _ranged/_offsets machinery with_prefix_sum runs",
-    f"{_PKG}.operators.multimodal.DecodedImage": _DECODE,
-    f"{_PKG}.operators.multimodal.decode_image": _DECODE,
-    f"{_PKG}.operators.multimodal._decode_pnm": _DECODE,
-    f"{_PKG}.operators.multimodal._decode_bmp": _DECODE,
-    f"{_PKG}.operators.multimodal.resize_nearest": _DECODE,
-    f"{_PKG}.operators.multimodal.encode_ppm": _DECODE,
 }
 
 
@@ -280,3 +273,30 @@ def test_every_parameter_is_varied_by_an_entry_point():
     # the allow-list stays exact: a seam an entry point now varies, or
     # that was deleted, leaves it
     assert _TEST_SEAMS.keys() <= single.keys(), sorted(_TEST_SEAMS.keys() - single.keys())
+
+
+# Environment hygiene: an environment variable is a deployment setting
+# (hardware, memory, scratch location), never a switch between two code
+# paths — a path only an env var selects is one no test, script or
+# benchmark runs. Every exact ``SPARK_GRAFT_*`` string in the package is
+# on this list, with its reason.
+_ENV_SETTINGS = {
+    "SPARK_GRAFT_CPUS": "cores of the local[n] master and the partition counts",
+    "SPARK_GRAFT_DRIVER_MEM": "driver JVM memory",
+    "SPARK_GRAFT_STREAM_TMP": "scratch path of the stream harness",
+}
+
+
+def test_every_env_var_is_a_deployment_setting():
+    import re
+
+    found = {
+        n.value
+        for _, _, path in _package_sources()
+        for n in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
+        if isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and re.fullmatch(r"SPARK_GRAFT_\w+", n.value)
+    }
+    # exact both ways: a new env var needs a reason, a removed one leaves
+    assert found == _ENV_SETTINGS.keys(), sorted(found ^ _ENV_SETTINGS.keys())

@@ -9,6 +9,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from aws_vpcflowlogs_parquet_spark.operators import dedup
 from aws_vpcflowlogs_parquet_spark.operators.dedup import (
     NGRAM_MAX_ID,
     ngram_jaccard_pairs,
@@ -69,6 +70,17 @@ def test_equals_duckdb_brute_force_on_full_corpus(spark, duck):
     ).fetchall()
     want = sorted((a, b, round(j, 9)) for a, b, j in rows)
     assert got == want
+
+
+def test_shingle_hash_collision_fails_the_query(spark, monkeypatch):
+    # a primary hash with 8 values merges distinct shingles into one
+    # frequency bucket; the second hash the frequency aggregation carries
+    # must catch it and fail the query instead of answering wrong
+    monkeypatch.setattr(dedup, "SHINGLE_HASH", "xxhash64(s) % 8")
+    docs = load_table(spark, SF_DIR, "documents").filter(F.col("doc_id") < 50)
+    with pytest.raises(Exception, match="USER_RAISED_EXCEPTION") as e:
+        prefix_filtered_pairs(docs, 1, 5).collect()
+    assert "shingle hash collision: xxhash64(s) % 8 = " in str(e.value)
 
 
 @pytest.mark.parametrize("tn,td", [(1, 2), (4, 5)])
