@@ -73,7 +73,7 @@ _VERIFIED_PRIOR_ROUNDS = frozenset({
     "q_autocorr", "q_containment", "q_dataset_card", "q_balanced_sample",
     "q_interval_overlap", "q_window_nth", "q_pack_sequences", "q_pagerank",
     "q_bloom_join", "q_sketch_hll", "q_cms_heavy_hitters",
-    "q_triangle_count", "q_label_propagation", "q_cohort_retention",
+    "q_label_propagation", "q_cohort_retention",
     "q_seq_bigrams", "q_fuzzy_join", "q_event_rate_alert", "q_entropy",
     "q_markov_transitions", "q_weighted_median", "q_chi2_assoc",
     "q_rollup_hierarchy", "q_sketch_hll_merge", "q_anomaly_mad",
@@ -181,7 +181,7 @@ _VERIFIED_PRIOR_ROUNDS = frozenset({
     # (already listed in round 1 above).
     "q_group_lcp", "q_histogram_equalize", "q_ratio_delta_method",
     "q_h_index", "q_linear_interpolate", "q_csv_sniff", "q_outlier_iqr",
-    "q_readability", "q_forecast_backtest", "q_ua_parse", "q_modularity",
+    "q_readability", "q_forecast_backtest", "q_ua_parse",
     "q_er_score", "q_flow_stitch", "q_feature_hash_audit",
     "q_revenue_recognition", "q_diff_in_diff", "q_grid_hotspot",
     "q_reconciliation", "q_sampling_temperature", "q_span_f1",
@@ -193,14 +193,17 @@ _VERIFIED_PRIOR_ROUNDS = frozenset({
     "q_prefix_free_check", "q_knn_classify", "q_chao1_ndv",
     "q_psi_stability", "q_capture_recapture", "q_sketch_rank_error",
     "q_l_moments", "q_sequential_probe",
-    # round 13 (CORRECTNESS_r13.json, the same 50 greens as r12): two of
+    # round 13 (CORRECTNESS_r13.json, the same 50 greens as r12): four of
     # them, whose builders and oracles are unchanged since, keep the
-    # pending count at 50 after the six re-verifies below.
-    "q_jarque_bera", "q_cochran_q",
+    # pending count at 50 after the re-verifies below.
+    "q_jarque_bera", "q_cochran_q", "q_join_order_plan", "q_business_days",
     # Re-verify: the shingle-hash guard changed the dedup core behind
     # q_dedup_prefix_filter, q_lsh_recall, q_near_dup_rate and
     # q_dedup_threshold_sweep; q_multimodal_resize runs the one image
     # header parser; q_pandas_udaf's UDAFs are type-hinted.
+    # Re-verify: q_triangle_count's oracle reads the fixture graph from
+    # _duck_edges (LEAST/GREATEST spelled upper-case); q_modularity's
+    # builder and oracle read undirected_edges and _duck_edges.
 })
 
 

@@ -14,6 +14,10 @@ partition counts — and the teleport/damping arithmetic is a fixed
 double-expression tree. Three rounds at 100 TB: ranks and edges both hash
 by src, so each round reuses one co-partitioned shuffle; the node-count
 scalar broadcasts.
+
+The module also holds the catalog's fixture interaction graph — one
+definition, :func:`undirected_edges`, symmetrized by :func:`sym_edges` —
+and :func:`wedges`, the degree-guarded length-2 path join over it.
 """
 
 from __future__ import annotations
@@ -151,29 +155,34 @@ def label_propagation(edges: DataFrame) -> DataFrame:
     return out
 
 
-def sym_edges(events: DataFrame, mod: int) -> DataFrame:
-    """Symmetric (a, b) edge list of the shared deterministic
+def undirected_edges(events: DataFrame, mod: int) -> DataFrame:
+    """Canonical (lo, hi) edge list of the shared deterministic
     interaction graph: nodes are ``user_id % mod``, each event
     contributes the undirected edge to ``(2*user_id + event_id) % mod``
-    (self-loops dropped), canonicalized (lo, hi) + distinct and then
-    symmetrized — every undirected edge appears once per direction, the
-    form the wedge/degree queries consume. One distinct-edge shuffle;
-    |E| ≤ mod² regardless of event count.
+    (self-loops dropped), canonicalized lo < hi + distinct. One
+    distinct-edge shuffle; |E| ≤ mod² regardless of event count.
 
-    Shared by q_graph_2hop / q_node_jaccard (mod 41), q_assortativity
-    (mod 499, sparse so degree variance is non-degenerate) and the
-    staged q_resource_alloc — a single definition so edge
-    canonicalization (and any future hub-capping) changes in one
-    place."""
+    The single Spark definition of the fixture graph — every catalog
+    graph query on it (mod 41, and mod 499 where the sparser graph keeps
+    degree variance non-degenerate) starts here, and its DuckDB twin is
+    ``plans/catalog.py``'s ``_duck_edges``; edge canonicalization (and
+    any future hub-capping) changes in these two places only."""
     a = F.col("user_id") % mod
     b = (F.lit(2) * F.col("user_id") + F.col("event_id")) % mod
-    raw = (
+    return (
         events.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
         .filter(a != b)
         .distinct()
     )
-    return raw.select(F.col("lo").alias("a"), F.col("hi").alias("b")).unionAll(
-        raw.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
+
+
+def sym_edges(edges: DataFrame) -> DataFrame:
+    """Symmetric (a, b) form of a canonical (lo, hi) edge list such as
+    :func:`undirected_edges`: every undirected edge appears once per
+    direction, the form the wedge, degree and frontier queries
+    consume."""
+    return edges.select(F.col("lo").alias("a"), F.col("hi").alias("b")).unionAll(
+        edges.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
     )
 
 

@@ -1,12 +1,14 @@
-"""Dump .explain("formatted") of catalog queries to <out>/<q>_<tag>.txt.
+"""Dump .explain("formatted") of catalog queries to <out>/<q>_<tag>.txt
+and each query's DuckDB oracle to <out>/<q>_<tag>.sql.
 
 Usage: python scripts/dump_plans.py --out DIR [--tag before] [q_lsh_recall ...]
 
 With no query names every registered query is dumped. Expression IDs
 (``#1234``) and exchange plan ids (``plan_id=56``) count up across a
-session, so they are stripped: two dumps of the same plan, from two
-checkouts, compare equal with ``diff -r``. The input is
-``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test tables).
+session, so they are stripped; the oracle text is written with every
+whitespace run collapsed to one space. Two dumps of the same plans and
+oracles, from two checkouts, compare equal with ``diff -r``. The input
+is ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test tables).
 
 Iterative queries run driver-side jobs during build (localCheckpoint
 rounds); their dump therefore costs real compute — expected, we want the
@@ -22,7 +24,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from aws_vpcflowlogs_parquet_spark.plans.catalog import QUERIES
+from aws_vpcflowlogs_parquet_spark.plans.catalog import ORACLES, QUERIES
 from aws_vpcflowlogs_parquet_spark.session import get_spark
 
 _SESSION_IDS = re.compile(r"(#|plan_id=)\d+")
@@ -42,10 +44,12 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(args.out, f"{name}_{args.tag}.txt")
-        with open(path, "w", encoding="utf-8") as fh:
+        path = os.path.join(args.out, f"{name}_{args.tag}")
+        with open(f"{path}.txt", "w", encoding="utf-8") as fh:
             fh.write(_SESSION_IDS.sub(r"\1", plan))
-        print(f"wrote {path} ({len(plan)} bytes)", flush=True)
+        with open(f"{path}.sql", "w", encoding="utf-8") as fh:
+            fh.write(" ".join(ORACLES[name].split()) + "\n")
+        print(f"wrote {path}.txt ({len(plan)} bytes) and .sql", flush=True)
 
 
 if __name__ == "__main__":

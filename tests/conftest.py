@@ -28,6 +28,17 @@ def duck():
     con.close()
 
 
+def executed_plan(df) -> str:
+    """The physical plan of ``df`` as Spark prints it (AQE's final plan
+    once ``df`` has run)."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def no_python(plan: str) -> bool:
+    """True when ``plan`` evaluates no Python UDF row-wise or Arrow-batched."""
+    return "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
 def _canon_cell(v):
     """Canonical, exact representation of one value (floats bit-exact)."""
     if v is None:

@@ -4,6 +4,7 @@ parity review depend on."""
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 import aws_vpcflowlogs_parquet_spark as pkg
@@ -300,3 +301,43 @@ def test_every_env_var_is_a_deployment_setting():
     }
     # exact both ways: a new env var needs a reason, a removed one leaves
     assert found == _ENV_SETTINGS.keys(), sorted(found ^ _ENV_SETTINGS.keys())
+
+
+# Fixture hygiene: the interaction graph the graph queries share (nodes
+# ``user_id % m``, an edge to ``(2 * user_id + event_id) % m`` per event)
+# has one Spark definition and one DuckDB twin. Its endpoint formula, as
+# SQL text or as Column code, appears nowhere else in the package but in
+# the graphs that are not that fixture, each with its reason.
+_EDGE_FORMULA = re.compile(
+    r'(?<![\w.])(?:2|F\.lit\(2\)) \* (?:user_id|F\.col\("user_id"\))'
+    r' \+ (?:event_id|F\.col\("event_id"\))'
+)
+_EDGE_FORMULA_HOMES = {
+    f"{_PKG}.operators.graph.undirected_edges": "the Spark definition",
+    f"{_PKG}.plans.catalog._duck_edges": "its DuckDB twin",
+    f"{_PKG}.plans.catalog.q_local_matching":
+        "weighted edge list (min(event_id) per edge), builder and oracle",
+    f"{_PKG}.plans.catalog.q_reciprocity":
+        "directed mod-97 graph: (src, dst) is not canonicalized",
+    f"{_PKG}.plans.catalog.q_bom_explosion":
+        "layered DAG: the formula is the in-layer offset of a mod-101 node",
+}
+
+
+def _formula_homes() -> set[str]:
+    found = set()
+    for mod, _, path in _package_sources():
+        text = path.read_text(encoding="utf-8")
+        lines = {text.count("\n", 0, m.start()) + 1 for m in _EDGE_FORMULA.finditer(text)}
+        for stmt in ast.parse(text).body:
+            first = min([stmt.lineno, *(d.lineno for d in getattr(stmt, "decorator_list", ()))])
+            if any(first <= n <= stmt.end_lineno for n in lines):
+                name = getattr(stmt, "name", None) or ast.unparse(stmt).split("=", 1)[0].strip()
+                found.add(f"{mod}.{name}")
+    return found
+
+
+def test_fixture_graph_has_one_definition_per_engine():
+    found = _formula_homes()
+    # exact both ways: a new copy fails, and so does a home that lost it
+    assert found == _EDGE_FORMULA_HOMES.keys(), sorted(found ^ _EDGE_FORMULA_HOMES.keys())

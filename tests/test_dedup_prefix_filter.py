@@ -94,35 +94,27 @@ def test_higher_thresholds_subset_of_lower(spark, tn, td):
 
 
 def test_prefix_join_is_smaller_than_all_pairs(spark):
-    # the scalability claim, measured: candidate pairs from the prefix
-    # join must be far fewer than n*(n-1)/2
+    # the scalability claim, measured on the operator itself: the rows
+    # out of the candidate-pair distinct in prefix_filtered_pairs'
+    # executed plan must be far fewer than n*(n-1)/2
+    import re
+
+    from aws_vpcflowlogs_parquet_spark import observability as obs
+
     docs = load_table(spark, SF_DIR, "documents")
     n = shingle_rows(docs).select("doc_id").distinct().count()
-    # re-derive the candidate count the operator's join would produce
-    rows = shingle_rows(docs)
-    sizes = rows.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    freq = rows.groupBy("s").agg(F.count("*").alias("df"))
-    from pyspark.sql import Window
-
-    ranked = (
-        rows.join(freq, "s")
-        .withColumn(
-            "pos",
-            F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "s")),
-        )
-        .join(sizes, "doc_id")
-    )
-    plen = F.col("sz") - F.expr("(sz * 1 + 5 - 1) div 5") + 1
-    prefix = ranked.filter(F.col("pos") <= plen).select("doc_id", "s")
-    cand = (
-        prefix.select(F.col("doc_id").alias("a"), "s")
-        .join(prefix.select(F.col("doc_id").alias("b"), "s"), "s")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-        .count()
-    )
-    assert cand < n * (n - 1) / 2 * 0.5, (cand, n)
+    pairs = prefix_filtered_pairs(docs)
+    obs.profile(pairs)
+    distinct = re.compile(r"HashAggregate\(keys=\[doc_a#\d+L?, doc_b#\d+L?\], functions=\[\]\)")
+    # partial and final aggregate of the one distinct; the final's rows
+    # are the candidate count
+    rows = [
+        obs._metrics(node)["numOutputRows"]
+        for node in obs._nodes(pairs._jdf.queryExecution().executedPlan())
+        if distinct.fullmatch(node.simpleString(25))
+    ]
+    assert rows, "no candidate distinct in the executed plan"
+    assert min(rows) < n * (n - 1) / 2 * 0.5, (rows, n)
 
 
 def _brute_force_pairs(spark, docs, tn, td):

@@ -9,7 +9,7 @@ import pytest
 
 from aws_vpcflowlogs_parquet_spark.plans.catalog import QUERIES
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, executed_plan, no_python
 
 # the 27 round-10-staged queries, now registered in the catalog
 PROMOTED_R10 = [
@@ -43,26 +43,18 @@ PROMOTED_R10 = [
 ]
 
 
-def _executed(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _no_python(plan: str) -> bool:
-    return "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 @pytest.mark.parametrize("name", sorted(PROMOTED_R10))
 def test_staged_no_cartesian_no_rowwise_python(spark, name):
     # universal posture: no cartesian product, no row-at-a-time Python
     # UDF in any staged plan (broadcast nested-loop against 1-row or
     # constant-size frames is allowed and asserted per-query below)
-    plan = _executed(QUERIES[name](spark, SF_DIR))
+    plan = executed_plan(QUERIES[name](spark, SF_DIR))
     assert "CartesianProduct" not in plan, (name, plan)
-    assert _no_python(plan), (name, plan)
+    assert no_python(plan), (name, plan)
 
 
 def test_group_lcp_two_mergeable_aggs_no_join(spark):
-    plan = _executed(QUERIES["q_group_lcp"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_group_lcp"](spark, SF_DIR))
     assert "Join" not in plan, plan
     # string min/max may plan as Sort- or ObjectHashAggregate; the pin
     # is that SOME aggregate pair exists and nothing else shuffles
@@ -72,7 +64,7 @@ def test_group_lcp_two_mergeable_aggs_no_join(spark):
 def test_ema_crossover_scan_is_agg_side_fold(spark):
     # the prefix scan lives inside a projection over a hash agg —
     # no window operator, no iterative joins
-    plan = _executed(QUERIES["q_ema_crossover"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_ema_crossover"](spark, SF_DIR))
     assert "Window" not in plan, plan
 
 
@@ -82,7 +74,7 @@ def test_er_score_never_materializes_pairs(spark):
     # (scalar aggregates + 1-row broadcasts + bounded offset joins).
     # The only non-broadcast joins allowed are the size-offset
     # histogram equi-joins; no self-join of parts on the block key.
-    plan = _executed(QUERIES["q_er_score"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_er_score"](spark, SF_DIR))
     assert "CartesianProduct" not in plan, plan
     # the old shape's signature: a sort-merge self-join on noun with
     # the p_partkey range residual
@@ -90,21 +82,21 @@ def test_er_score_never_materializes_pairs(spark):
 
 
 def test_flow_stitch_single_agg_no_join(spark):
-    plan = _executed(QUERIES["q_flow_stitch"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_flow_stitch"](spark, SF_DIR))
     assert "Join" not in plan, plan
 
 
 def test_table_checksum_no_join_mergeable_aggs(spark):
-    plan = _executed(QUERIES["q_table_checksum"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_table_checksum"](spark, SF_DIR))
     assert "Join" not in plan, plan
     assert plan.count("HashAggregate") >= 2, plan  # partial/final
 
 
 def test_reconciliation_joins_are_equi_keyed(spark):
-    plan = _executed(QUERIES["q_reconciliation"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_reconciliation"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_merkle_levels_no_join(spark):
-    plan = _executed(QUERIES["q_merkle_levels"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_merkle_levels"](spark, SF_DIR))
     assert "Join" not in plan, plan

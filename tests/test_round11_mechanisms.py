@@ -9,12 +9,11 @@ import hashlib
 import math
 import re
 
-import duckdb
 import pytest
 
 from aws_vpcflowlogs_parquet_spark.plans.catalog import QUERIES
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, executed_plan
 
 R11_BATCH = [
     "q_quantile_sketch_merge",
@@ -28,13 +27,6 @@ R11_BATCH = [
     "q_prefix_free_check",
     "q_knn_classify",
 ]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    yield con
-    con.close()
 
 
 def _events(duck):
@@ -350,45 +342,41 @@ def test_knn_classify_witness(spark, duck):
 # ------------------------------------------------------ plan pins
 
 
-def _executed(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 @pytest.mark.parametrize(
     "name", [n for n in R11_BATCH if n != "q_stream_absence"]
 )
 def test_r11_no_cartesian_no_rowwise_python(spark, name):
-    plan = _executed(QUERIES[name](spark, SF_DIR))
+    plan = executed_plan(QUERIES[name](spark, SF_DIR))
     assert "CartesianProduct" not in plan, (name, plan)
     assert "BatchEvalPython" not in plan, (name, plan)
     assert "ArrowEvalPython" not in plan, (name, plan)
 
 
 def test_js_divergence_no_window(spark):
-    plan = _executed(QUERIES["q_js_divergence"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_js_divergence"](spark, SF_DIR))
     assert "Window" not in plan, plan
 
 
 def test_log_templates_single_agg_no_join(spark):
-    plan = _executed(QUERIES["q_log_templates"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_log_templates"](spark, SF_DIR))
     assert "Join" not in plan, plan
     assert plan.count("HashAggregate") >= 2, plan  # partial/final
 
 
 def test_sliding_rate_limit_no_join(spark):
-    plan = _executed(QUERIES["q_sliding_rate_limit"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_sliding_rate_limit"](spark, SF_DIR))
     assert "Join" not in plan, plan
     assert "Window" in plan, plan
 
 
 def test_salt_plan_broadcast_total_only(spark):
-    plan = _executed(QUERIES["q_salt_plan"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_salt_plan"](spark, SF_DIR))
     assert "SortMergeJoin" not in plan, plan
     assert "Window" not in plan, plan
 
 
 def test_knn_classify_equi_bucket_join(spark):
-    plan = _executed(QUERIES["q_knn_classify"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_knn_classify"](spark, SF_DIR))
     assert "CartesianProduct" not in plan, plan
     assert "HashJoin" in plan or "SortMergeJoin" in plan, plan
 
@@ -612,7 +600,7 @@ def test_dedup_threshold_sweep_witness(spark, duck):
     ],
 )
 def test_r11_batch_c_no_cartesian_no_python(spark, name):
-    plan = _executed(QUERIES[name](spark, SF_DIR))
+    plan = executed_plan(QUERIES[name](spark, SF_DIR))
     assert "CartesianProduct" not in plan, (name, plan)
     assert "BatchEvalPython" not in plan, (name, plan)
     assert "ArrowEvalPython" not in plan, (name, plan)

@@ -9,7 +9,6 @@ from __future__ import annotations
 import collections
 import math
 
-import duckdb
 import pytest
 
 from aws_vpcflowlogs_parquet_spark.plans.catalog import QUERIES as _CAT
@@ -28,14 +27,7 @@ _R11_PROMOTED = sorted(
 )
 STAGED_QUERIES = {n: _CAT[n] for n in _R11_PROMOTED}
 
-from .conftest import SF_DIR
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    yield con
-    con.close()
+from .conftest import SF_DIR, executed_plan
 
 
 def _events(duck):
@@ -316,13 +308,9 @@ def test_harmonic_centrality_witness(spark, duck):
 # ------------------------------------------------------ plan pins
 
 
-def _executed(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 @pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
 def test_staged_r11_no_cartesian_no_python(spark, name):
-    plan = _executed(STAGED_QUERIES[name](spark, SF_DIR))
+    plan = executed_plan(STAGED_QUERIES[name](spark, SF_DIR))
     assert "CartesianProduct" not in plan, (name, plan)
     assert "BatchEvalPython" not in plan, (name, plan)
     assert "ArrowEvalPython" not in plan, (name, plan)
@@ -330,12 +318,12 @@ def test_staged_r11_no_cartesian_no_python(spark, name):
 
 def test_pinball_single_window_partitioning(spark):
     # both lags must share one exchange on user_id
-    plan = _executed(STAGED_QUERIES["q_pinball_eval"](spark, SF_DIR))
+    plan = executed_plan(STAGED_QUERIES["q_pinball_eval"](spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning(user_id") <= 1, plan
 
 
 def test_harmonic_no_cartesian_frontier(spark):
-    plan = _executed(STAGED_QUERIES["q_harmonic_centrality"](spark, SF_DIR))
+    plan = executed_plan(STAGED_QUERIES["q_harmonic_centrality"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 

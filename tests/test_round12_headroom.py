@@ -23,8 +23,6 @@ from __future__ import annotations
 
 import collections
 
-import duckdb
-import pytest
 
 I64_MAX = 2**63 - 1
 
@@ -33,13 +31,6 @@ SFS = [
     ("/root/testdata/sf0.01", 0.01),
     ("/root/testdata/sf0.1", 0.1),
 ]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    yield con
-    con.close()
 
 
 def _l_moments_hi_accumulators(duck, sf_dir: str) -> int:

@@ -9,19 +9,11 @@ import hashlib
 import math
 from fractions import Fraction
 
-import duckdb
 import pytest
 
 from aws_vpcflowlogs_parquet_spark.plans.catalog import QUERIES
 
-from .conftest import SF_DIR
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    yield con
-    con.close()
+from .conftest import SF_DIR, executed_plan
 
 
 def _events(duck):
@@ -440,11 +432,6 @@ def test_map_eval_witness(spark, duck):
 # ------------------------------------------------------------ plan pins
 
 
-def _executed(df) -> str:
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_no_python_row_udfs_in_round12_batch(spark):
     for name in (
         "q_ktruss",
@@ -458,13 +445,17 @@ def test_no_python_row_udfs_in_round12_batch(spark):
         "q_ndcg_eval",
         "q_map_eval",
     ):
-        plan = _executed(QUERIES[name](spark, SF_DIR))
+        df = QUERIES[name](spark, SF_DIR)
+        df.collect()
+        plan = executed_plan(df)
         assert "BatchEvalPython" not in plan, name
         assert "CartesianProduct" not in plan, name
 
 
 def test_bloom_audit_broadcasts_the_filter(spark):
-    plan = _executed(QUERIES["q_bloom_fpr_audit"](spark, SF_DIR))
+    df = QUERIES["q_bloom_fpr_audit"](spark, SF_DIR)
+    df.collect()
+    plan = executed_plan(df)
     assert "BroadcastHashJoin" in plan
 
 
@@ -473,7 +464,9 @@ def test_map_eval_single_window_partitioning(spark):
     # exactly one hash-partitioning exchange on source feeds both
     # (count within the AQE final plan only; the toString repeats the
     # tree in the initial-plan section).
-    plan = _executed(QUERIES["q_map_eval"](spark, SF_DIR))
+    df = QUERIES["q_map_eval"](spark, SF_DIR)
+    df.collect()
+    plan = executed_plan(df)
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("hashpartitioning(source") == 1, final
 
@@ -713,7 +706,9 @@ def test_no_python_row_udfs_in_round12_batch3(spark):
         "q_page_hinkley",
         "q_wasserstein_bucketed",
     ):
-        plan = _executed(QUERIES[name](spark, SF_DIR))
+        df = QUERIES[name](spark, SF_DIR)
+        df.collect()
+        plan = executed_plan(df)
         assert "BatchEvalPython" not in plan, name
         assert "CartesianProduct" not in plan, name
 
@@ -936,6 +931,8 @@ def test_no_python_row_udfs_in_round12_batch4(spark):
         "q_pca_closed_form",
         "q_luby_mis",
     ):
-        plan = _executed(QUERIES[name](spark, SF_DIR))
+        df = QUERIES[name](spark, SF_DIR)
+        df.collect()
+        plan = executed_plan(df)
         assert "BatchEvalPython" not in plan, name
         assert "CartesianProduct" not in plan, name

@@ -10,11 +10,7 @@ import duckdb
 
 from aws_vpcflowlogs_parquet_spark.plans.catalog import QUERIES
 
-from .conftest import SF_DIR
-
-
-def _executed(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from .conftest import SF_DIR, executed_plan
 
 
 def _events():
@@ -176,16 +172,16 @@ def test_misra_gries_kernel_superset_guarantee():
 def test_batch2_plan_shapes(spark):
     # AUC: the only sort feeds the bounded-bin window; no Python, and
     # the pair space never materializes (no join at all)
-    auc = _executed(QUERIES["q_auc"](spark, SF_DIR))
+    auc = executed_plan(QUERIES["q_auc"](spark, SF_DIR))
     assert "ArrowEvalPython" not in auc and "BatchEvalPython" not in auc
     assert "Join" not in auc
     # critical path: pure JVM joins/aggs, no Python anywhere
-    cp = _executed(QUERIES["q_critical_path"](spark, SF_DIR))
+    cp = executed_plan(QUERIES["q_critical_path"](spark, SF_DIR))
     assert "ArrowEvalPython" not in cp and "BatchEvalPython" not in cp
     assert "TakeOrderedAndProject" in cp  # top-20 never global-sorts
     # Misra-Gries: pass 1 is the ONLY Python stage (one MapInArrow),
     # pass 2 joins against a broadcast candidate set
-    mg = _executed(QUERIES["q_misra_gries"](spark, SF_DIR))
+    mg = executed_plan(QUERIES["q_misra_gries"](spark, SF_DIR))
     assert mg.count("MapInArrow") == 1
     assert "BroadcastHashJoin" in mg
     assert "SortMergeJoin" not in mg

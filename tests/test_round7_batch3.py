@@ -10,11 +10,7 @@ from pyspark.sql import functions as F
 
 from aws_vpcflowlogs_parquet_spark.plans.catalog import QUERIES
 
-from .conftest import SF_DIR
-
-
-def _executed(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from .conftest import SF_DIR, executed_plan
 
 
 def _events():
@@ -81,7 +77,7 @@ def test_isotonic_is_monotone_and_mass_preserving(spark):
 
 
 def test_isotonic_plan_is_bounded_pandas_over_aggregate(spark):
-    plan = _executed(QUERIES["q_isotonic_pav"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_isotonic_pav"](spark, SF_DIR))
     # exactly one Python stage, and it consumes the bin AGGREGATE (the
     # hash-agg must appear below the FlatMapGroupsInPandas node)
     assert plan.count("FlatMapGroupsInPandas") == 1
@@ -151,7 +147,7 @@ def test_apriori_prune_reaches_the_pair_join(spark):
     # is broadcast into BOTH pair-join inputs, so the basket self-join
     # fans out only over pruned items; and the full item domain (~2k)
     # is far larger than the surviving frequent set
-    plan = _executed(QUERIES["q_apriori_pairs"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_apriori_pairs"](spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") >= 2
     df = QUERIES["q_apriori_pairs"](spark, SF_DIR)
     items = {r["item_a"] for r in df.collect()} | {
@@ -310,7 +306,7 @@ def test_stump_recovers_structural_breakpoint(spark):
 
 
 def test_stump_plan_is_one_scan_plus_bin_sweep(spark):
-    plan = _executed(QUERIES["q_decision_stump"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_decision_stump"](spark, SF_DIR))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "Join" not in plan  # the split sweep never re-touches rows
     assert "TakeOrderedAndProject" in plan  # argmin, not a global sort
@@ -438,7 +434,7 @@ def test_viterbi_state_survives_arrow_batch_boundaries(spark):
 
 
 def test_viterbi_plan_is_one_shuffle_one_arrow_stage(spark):
-    plan = _executed(QUERIES["q_viterbi"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_viterbi"](spark, SF_DIR))
     assert plan.count("MapInArrow") == 1
     assert "FlatMapGroupsInPandas" not in plan  # per-key pandas rejected
 
@@ -479,7 +475,7 @@ def test_ivm_maintenance_plan_reads_view_not_base_rows(spark):
     # enter only the one-time view build, not the maintenance plan.
     # The events relation must appear exactly once in the final plan.
     df = QUERIES["q_ivm_delta"](spark, SF_DIR)
-    plan = _executed(df)
+    plan = executed_plan(df)
     assert plan.count("events.parquet") == 1
     assert "q_ivm_view_" in plan  # the materialized aggregate
 
@@ -530,7 +526,7 @@ def test_semijoin_reduction_equals_direct_join(spark):
 def test_semijoin_program_shape(spark):
     # the reducer must actually run as semijoins ahead of the final
     # joins, all broadcast (dimension-scale reducers)
-    plan = _executed(QUERIES["q_semijoin_reduction"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_semijoin_reduction"](spark, SF_DIR))
     assert plan.count("LeftSemi") >= 2
     assert "SortMergeJoin" not in plan
 

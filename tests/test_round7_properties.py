@@ -10,15 +10,7 @@ import duckdb
 
 from aws_vpcflowlogs_parquet_spark.plans.catalog import QUERIES
 
-from .conftest import SF_DIR
-
-
-def _executed(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _no_python(plan: str) -> bool:
-    return "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+from .conftest import SF_DIR, executed_plan, no_python
 
 
 def _n_customers() -> int:
@@ -96,13 +88,13 @@ def test_bucketed_twins_window_over_bins_only(spark):
         "q_lorenz_bucketed",
         "q_abc_pareto_bucketed",
     ):
-        plan = _executed(QUERIES[name](spark, SF_DIR))
+        plan = executed_plan(QUERIES[name](spark, SF_DIR))
         assert "Window" in plan, (name, plan)
         assert plan.index("Window") < plan.rindex("HashAggregate"), (
             name,
             plan,
         )
-        assert _no_python(plan), (name, plan)
+        assert no_python(plan), (name, plan)
         assert "CartesianProduct" not in plan, (name, plan)
 
 
@@ -114,10 +106,10 @@ def test_bucketed_twins_window_over_bins_only(spark):
 
 
 def _sym_graph(spark, mod=41):
-    from aws_vpcflowlogs_parquet_spark.operators.graph import sym_edges
+    from aws_vpcflowlogs_parquet_spark.operators.graph import sym_edges, undirected_edges
     from aws_vpcflowlogs_parquet_spark.sources.tables import load_table
 
-    return sym_edges(load_table(spark, SF_DIR, "events"), mod)
+    return sym_edges(undirected_edges(load_table(spark, SF_DIR, "events"), mod))
 
 
 def test_wedges_salted_path_identical_to_plain(spark):
@@ -254,7 +246,7 @@ def test_scc_ring_is_one_component_and_partition_is_total(spark):
 
 
 def test_embedding_covariance_plan_is_arrow_partition_local(spark):
-    plan = _executed(QUERIES["q_embedding_covariance"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_embedding_covariance"](spark, SF_DIR))
     # the corpus-side kernel is Arrow-batched (mapInArrow), and the only
     # shuffle after it carries cell partials, merged by a hash agg
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan or "PythonMapInArrow" in plan, plan
@@ -317,16 +309,16 @@ def test_new_mechanism_plan_shapes(spark):
     # q_bootstrap_ci: the 32x fan-out is a broadcast nested-loop of a
     # 32-row grid (no shuffle of the fact until the rep agg), and the
     # CI rank runs over a 32-row frame
-    plan = _executed(QUERIES["q_bootstrap_ci"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_bootstrap_ci"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan, plan
-    assert _no_python(plan), plan
+    assert no_python(plan), plan
     # q_weighted_sample: global bottom-20 compiles to TakeOrdered, not
     # a full sort
-    plan = _executed(QUERIES["q_weighted_sample"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_weighted_sample"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, plan
-    assert _no_python(plan), plan
+    assert no_python(plan), plan
     # q_pruning_stats: both the global range and the band grid broadcast
-    plan = _executed(QUERIES["q_pruning_stats"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_pruning_stats"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
-    assert _no_python(plan), plan
+    assert no_python(plan), plan
     assert "SortMergeJoin" not in plan, plan

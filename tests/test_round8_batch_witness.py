@@ -9,19 +9,11 @@ import datetime
 import json
 import math
 
-import duckdb
 import pytest
 
 from aws_vpcflowlogs_parquet_spark.plans.catalog import QUERIES
 
-from .conftest import SF_DIR
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    yield con
-    con.close()
+from .conftest import SF_DIR, executed_plan
 
 
 def test_recursive_cte_depth_is_digit_count(spark, duck):
@@ -226,32 +218,28 @@ def test_analyze_stats_are_exact(spark, duck):
 
 # ------------------------------------------------------ plan shapes
 
-def _executed(df):
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_hits_broadcasts_scores_and_takes_ordered(spark):
-    plan = _executed(QUERIES["q_hits"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_hits"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
 
 def test_variant_extract_stays_jvm(spark):
-    plan = _executed(QUERIES["q_variant_extract"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_variant_extract"](spark, SF_DIR))
     for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
         assert marker not in plan, plan
     assert "variant_get" in plan, plan
 
 
 def test_dbscan_grid_labels_join_broadcasts(spark):
-    plan = _executed(QUERIES["q_dbscan_grid"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_dbscan_grid"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
 
 def test_pipe_syntax_compiles_to_pushdown_agg(spark):
-    plan = _executed(QUERIES["q_pipe_syntax"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_pipe_syntax"](spark, SF_DIR))
     assert "HashAggregate" in plan, plan
     # the status filter reaches the scan as a pushed data filter
     assert "o_orderstatus" in plan.split("FileScan", 1)[1], plan
@@ -310,7 +298,7 @@ def test_spatial_grid_join_matches_bruteforce(spark, duck):
 
 
 def test_spatial_grid_join_has_no_nested_loop(spark):
-    plan = _executed(QUERIES["q_spatial_grid_join"](spark, SF_DIR))
+    plan = executed_plan(QUERIES["q_spatial_grid_join"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" not in plan.split("rect_id", 1)[0], plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan

@@ -6,19 +6,10 @@ from __future__ import annotations
 
 import collections
 
-import duckdb
-import pytest
 
 from aws_vpcflowlogs_parquet_spark.plans.catalog import QUERIES
 
 from .conftest import SF_DIR
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    yield con
-    con.close()
 
 
 def _mst_edges(duck):

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from aws_vpcflowlogs_parquet_spark.plans.catalog import QUERIES as STAGED_QUERIES
 from aws_vpcflowlogs_parquet_spark.sources.tables import load_table
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, executed_plan
 
 
 def test_kcore_equals_python_peeling(spark):
@@ -138,20 +138,16 @@ def test_percentile_disc_values_exist_and_rank_correctly(spark):
 # --------------------------------------------------- staged plan shapes
 
 
-def _executed(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_staged_tpch_q2_decorrelates_min_subquery(spark):
     # the correlated MIN must plan as an aggregate + join, not a
     # per-row subquery execution
-    plan = _executed(STAGED_QUERIES["q_tpch_q2"](spark, SF_DIR))
+    plan = executed_plan(STAGED_QUERIES["q_tpch_q2"](spark, SF_DIR))
     assert "HashAggregate" in plan
     assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
 
 
 def test_staged_tpch_q21_plans_semi_and_anti(spark):
-    plan = _executed(STAGED_QUERIES["q_tpch_q21"](spark, SF_DIR))
+    plan = executed_plan(STAGED_QUERIES["q_tpch_q21"](spark, SF_DIR))
     assert "LeftSemi" in plan, plan
     assert "Anti" in plan, plan
 
@@ -163,7 +159,7 @@ def test_staged_prefix_filter_has_no_quadratic_join(spark):
         prefix_filtered_pairs,
     )
 
-    plan = _executed(prefix_filtered_pairs(docs, 1, 5))
+    plan = executed_plan(prefix_filtered_pairs(docs, 1, 5))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     # round-5 verify rewrite: overlap comes from a codegen'd
@@ -174,14 +170,14 @@ def test_staged_prefix_filter_has_no_quadratic_join(spark):
 
 
 def test_staged_rolling_active_broadcasts_offsets(spark):
-    plan = _executed(STAGED_QUERIES["q_rolling_active"](spark, SF_DIR))
+    plan = executed_plan(STAGED_QUERIES["q_rolling_active"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     # the fan-out factor is constant: exactly one scan of events
     assert plan.count("FileScan parquet") == 1, plan
 
 
 def test_staged_rolling_hll_single_scan(spark):
-    plan = _executed(STAGED_QUERIES["q_rolling_hll"](spark, SF_DIR))
+    plan = executed_plan(STAGED_QUERIES["q_rolling_hll"](spark, SF_DIR))
     assert plan.count("FileScan parquet") == 1, plan
     assert "Window" in plan
 
